@@ -46,6 +46,11 @@ P_NOUN = np.array(["ring", "bolt", "gear", "nut", "pipe", "valve"])
 EPOCH_1995 = np.datetime64("1995-01-01T00:00:00", "us")
 EPOCH_2024 = np.datetime64("2024-01-01T00:00:00", "us")
 DAY_US = 86_400_000_000
+LINES_PER_ORDER = 4        # mean; 1..7 lines per order
+EVENTS = 200
+DIM = 64
+NEAR_DUP_FRAC = 0.05
+EXACT_DUP_FRAC = 0.002
 
 
 @dataclasses.dataclass(frozen=True)
@@ -53,17 +58,12 @@ class Sizes:
     """Row counts of one generated input set."""
 
     orders: int = 1500
-    lines_per_order: int = 4          # mean; 1..7 lines per order
     customers: int = 150
     parts: int = 200
     suppliers: int = 10
-    events: int = 1000
     base_docs: int = 500
     replicas: int = 1
     embeddings: int = 500
-    dim: int = 64
-    near_dup_frac: float = 0.05
-    exact_dup_frac: float = 0.002
 
 
 @dataclasses.dataclass
@@ -132,7 +132,7 @@ def _star(out_dir: str, rng: np.random.Generator, s: Sizes) -> None:
         "o_orderdate": odate,
         "o_orderpriority": PRIORITIES[rng.integers(0, 5, n_o)]}))
 
-    lines = rng.integers(1, 2 * s.lines_per_order, n_o)
+    lines = rng.integers(1, 2 * LINES_PER_ORDER, n_o)
     okey = np.repeat(np.arange(n_o, dtype=np.int64), lines)
     n_l = len(okey)
     starts = np.repeat(np.cumsum(lines) - lines, lines)
@@ -153,7 +153,7 @@ def _star(out_dir: str, rng: np.random.Generator, s: Sizes) -> None:
         "l_shipdate": np.repeat(odate, lines)
         + rng.integers(1, 122, n_l) * DAY_US}))
 
-    n_e = s.events
+    n_e = EVENTS
     _write(out_dir, "events", pa.table({
         "event_id": np.arange(n_e, dtype=np.int64),
         "ts": EPOCH_2024 + np.sort(rng.integers(0, 30 * DAY_US, n_e)),
@@ -170,8 +170,8 @@ def _documents(out_dir: str, rng: np.random.Generator, s: Sizes) -> Truth:
     # plant duplicates inside the base corpus: the copy keeps its own
     # slot, its original is any other document
     slots = rng.permutation(n_base)
-    n_near = int(n_base * s.near_dup_frac)
-    n_exact = max(1, int(n_base * s.exact_dup_frac))
+    n_near = int(n_base * NEAR_DUP_FRAC)
+    n_exact = max(1, int(n_base * EXACT_DUP_FRAC))
     near = [(int(slots[2 * i]), int(slots[2 * i + 1])) for i in range(n_near)]
     used = 2 * n_near
     exact = [(int(slots[used + 2 * i]), int(slots[used + 2 * i + 1]))
@@ -210,7 +210,7 @@ def random_unit(rng: np.random.Generator, n: int, dim: int) -> np.ndarray:
 
 
 def _embeddings(out_dir: str, rng: np.random.Generator, s: Sizes) -> None:
-    vecs = random_unit(rng, s.embeddings, s.dim)
+    vecs = random_unit(rng, s.embeddings, DIM)
     _write(out_dir, "embeddings", pa.table({
         "vec_id": np.arange(s.embeddings, dtype=np.int64),
         "embedding": pa.array(list(vecs), pa.list_(pa.float32())),

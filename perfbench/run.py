@@ -7,7 +7,8 @@ Run it from the root of a checkout.  It generates the seed's inputs under
 ``.perfbench_work/`` (removed again at exit), starts Spark on
 ``local[<cpus>]``, runs one verified pass, then repeats the workload's
 operation sequence as a closed loop with one client until ``--seconds``
-have passed and the workload's minimum number of passes is done.  The last line of standard output is one JSON object:
+have passed and at least one pass is done.  The last line of standard
+output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``, the end-to-end metrics
 with ``--trace 0`` and the per-layer metrics with ``--trace 1``.  The exit
 code is 0 only when every operation ran and every check passed.
@@ -25,10 +26,11 @@ import sys
 import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 
+STARTED = time.perf_counter()     # setup_s counts from here
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 3            # setup_s is the median of this many set-ups
 
 
 def log(msg: str) -> None:
@@ -89,13 +91,33 @@ def _descendants(pid: int) -> list[int]:
     return out
 
 
-def cpu_seconds(pid: int) -> float:
-    """CPU time used so far by this process, process ``pid`` and all of
-    its descendants, reaped or running.  Unlike wall time it does not
-    grow while a shared host lends the CPUs to someone else."""
+def _jit_seconds(jvm: int) -> float:
+    """CPU time of the JVM's JIT compiler threads.  They live as long as
+    the JVM, since the launch turns off their dynamic retirement."""
+    total = 0
+    for tid in os.listdir(f"/proc/{jvm}/task"):
+        try:
+            with open(f"/proc/{jvm}/task/{tid}/comm") as fh:
+                if not fh.read().startswith(("C1 Compiler", "C2 Compiler")):
+                    continue
+            with open(f"/proc/{jvm}/task/{tid}/stat") as fh:
+                f = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += int(f[11]) + int(f[12])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
+def cpu_seconds(jvm: int) -> float:
+    """CPU time used so far by this process, the JVM ``jvm`` and all of
+    its descendants, reaped or running, less the JVM's JIT compiler
+    threads.  Unlike wall time it does not grow while a shared host lends
+    the CPUs to someone else.  The compilers still work through the few
+    passes a run can afford, and how much they do varies from run to
+    run; their work is warm-up, not the cost of a pass."""
     tick = os.sysconf("SC_CLK_TCK")
-    total = sum(os.times()[:2])
-    for p in [pid] + _descendants(pid):
+    total = sum(os.times()[:2]) - _jit_seconds(jvm)
+    for p in [jvm] + _descendants(jvm):
         try:
             with open(f"/proc/{p}/stat") as fh:
                 f = fh.read().rsplit(")", 1)[1].split()
@@ -154,29 +176,22 @@ class Bench:
         return spark
 
     def setup(self) -> None:
-        """Generate the seed's inputs, start a session and open every
-        input.  Done ``SETUPS`` times; the first also launches the JVM.
-        ``setup_s`` is the median."""
+        """Generate the seed's inputs, launch the JVM and the session and
+        open every input.  ``setup_s`` runs from process start to the
+        end of this, so it also counts the imports."""
         from inputs import generate
-        self.setup_times, self.session_times, self.warm_times = [], [], []
-        for _ in range(SETUPS):
-            t0 = time.perf_counter()
-            if self.spark is not None:
-                self.spark.stop()
-            shutil.rmtree(self.data, ignore_errors=True)
-            self.truth = generate(self.data, self.seed, self.wl.sizes)
-            if self.wl.prepare:
-                self.wl.prepare(self.data, self.truth, self.seed)
-            t1 = time.perf_counter()
-            self.spark = self._start_session()
-            t2 = time.perf_counter()
-            for name in sorted(os.listdir(self.data)):
-                if name.endswith(".parquet"):       # reads the footer
-                    self.spark.read.parquet(os.path.join(self.data, name))
-            t3 = time.perf_counter()
-            self.setup_times.append(t3 - t0)
-            self.session_times.append(t2 - t1)
-            self.warm_times.append(t3 - t2)
+        self.truth = generate(self.data, self.seed, self.wl.sizes)
+        if self.wl.prepare:
+            self.wl.prepare(self.data, self.truth, self.seed)
+        t1 = time.perf_counter()
+        self.spark = self._start_session()
+        t2 = time.perf_counter()
+        for name in sorted(os.listdir(self.data)):
+            if name.endswith(".parquet"):           # reads the footer
+                self.spark.read.parquet(os.path.join(self.data, name))
+        t3 = time.perf_counter()
+        self.setup_s, self.session_s, self.warm_s = (t3 - STARTED, t2 - t1,
+                                                     t3 - t2)
 
     # -- passes ------------------------------------------------------------
     def _run_op(self, ctx, op, weight: float):
@@ -204,8 +219,12 @@ class Bench:
         from frames_map_reduce_spark.sources import STAR_TABLES
         from workloads import CheckFailed, check_oracle
 
-        oracles = (entry.oracle_sql() if any(op.oracle for op in self.ops)
-                   else {})
+        # the twins take seconds to render (some scan the inputs); render
+        # them beside the first operations
+        pool = ThreadPoolExecutor(1)
+        oracles = pool.submit(entry.oracle_sql if any(
+            op.oracle for op in self.ops) else dict)
+        pool.shutdown(wait=False)
         duck = duckdb.connect()
         for t in STAR_TABLES:
             duck.sql(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -223,7 +242,8 @@ class Bench:
             result, dig = out
             try:
                 if op.oracle:
-                    check_oracle(duck, oracles[op.oracle], result)
+                    check_oracle(duck, oracles.result()[op.oracle],
+                                 result)
                 if op.check:
                     op.check(ctx, result)
             except CheckFailed as e:
@@ -232,6 +252,9 @@ class Bench:
                 continue
             self.expected[op.name] = dig
             self.cold[op.name] = secs
+        log("cold: " + ", ".join(f"{k}={v:.2f}"
+                                 for k, v in self.cold.items()))
+        oracles.result()            # raises if rendering the twins failed
         duck.close()
         del ctx.state["duck"]
 
@@ -243,11 +266,11 @@ class Bench:
         jvm = self.spark.sparkContext._gateway.proc.pid
         self.stream_progress = []
         deadline = time.perf_counter() + self.seconds
-        # the same number of passes in every run keeps the medians
-        # comparable (the first timed pass still pays some JIT work); a
-        # traced run alternates untraced and traced passes, and three give
-        # the traced pass an untraced neighbour on both sides
-        min_passes = 3 if self.trace else self.wl.passes
+        # the same number of passes in every run keeps runs comparable
+        # (the JIT still speeds up every pass); a traced run alternates
+        # untraced and traced passes, and three give the traced pass an
+        # untraced neighbour on both sides
+        min_passes = 3 if self.trace else 1
         n = 0
         while n < min_passes or time.perf_counter() < deadline:
             traced = self.trace and n % 2 == 1
@@ -282,7 +305,6 @@ class Bench:
     # -- the run -----------------------------------------------------------
     def run(self) -> dict:
         from workloads import Ctx
-        t0 = time.perf_counter()
         self.setup()
         self.ops = self.wl.ops()
         ctx = Ctx(self.spark, self.data, os.path.join(self.work, "out"),
@@ -293,17 +315,17 @@ class Bench:
         self.weights: dict[int, float] = {}
         if self.trace:
             install(self.tracer)
-        log(f"set-up done at {time.perf_counter() - t0:.1f}s: "
-            + ", ".join(f"{x:.2f}" for x in self.setup_times))
+        log(f"set-up done at {self.setup_s:.1f}s (session "
+            f"{self.session_s:.2f}s, inputs opened in {self.warm_s:.2f}s)")
         self.verified_pass(ctx)
-        log(f"verified pass done at {time.perf_counter() - t0:.1f}s")
+        log(f"verified pass done at {time.perf_counter() - STARTED:.1f}s")
         self.verify_stats = dict(ctx.stats)
         jvm = self.spark.sparkContext._gateway.proc.pid
         if not self.errors:
             with RssSampler(jvm) as rss:
                 self.timed_passes(ctx)
             self.peak_rss_mb = rss.peak_kb / 1024.0
-            log(f"timed passes done at {time.perf_counter() - t0:.1f}s")
+            log(f"timed passes done at {time.perf_counter() - STARTED:.1f}s")
         self.written = [_tree_size(os.path.join(self.work, d))
                         for d in ("warehouse", "out")]
         return self.result()
@@ -327,7 +349,7 @@ class Bench:
     def e2e(self) -> dict:
         self._op_medians()                  # logged for the reader
         return _with_units({
-            "setup_s": statistics.median(self.setup_times),
+            "setup_s": self.setup_s,
             "cpu_s": statistics.median(self.pass_cpu),
         })
 
@@ -340,7 +362,8 @@ class Bench:
         probes = [t for op in self.ops if op.phase == "probe"
                   for t in self.times[op.name]]
         out = {f"phase.{p}_s": by_phase.get(p, 0.0) for p in
-               ("native_fold", "grouped_map", "curate", "build", "extend")}
+               ("native_fold", "grouped_map", "curate", "dedup", "ann",
+                "build", "extend")}
         out["phase.probe_p50_s"] = statistics.median(probes) if probes else 0
         batches = [p for prog in self.stream_progress for p in prog]
         trig = [p.durationMs.get("triggerExecution", 0) / 1000.0
@@ -384,13 +407,14 @@ class Bench:
         m = layer_metrics(self.tracer.spans, jobs, self.weights)
         m.update(self.phase_metrics())
         stats = self.verify_stats
-        m["session.start_s"] = self.session_times[0]
-        m["session.warm_s"] = statistics.median(self.warm_times)
+        m["session.start_s"] = self.session_s
+        m["session.warm_s"] = self.warm_s
         m["session.peak_rss_mb"] = self.peak_rss_mb
         m["sources.files_written"] = sum(f for f, _ in self.written)
         m["sources.bytes_written"] = sum(b for _, b in self.written)
         m["operators.bloom.fp_rate"] = _ratio(stats.get("fp", []))
         m["operators.dedup.pair_recall"] = _ratio(stats.get("pairs", []))
+        m["operators.similarity.recall_at_k"] = stats.get("recall_at_k", 0.0)
         m["trace.overhead_s"] = (statistics.median(traced)
                                  - statistics.median(untraced))
         return _with_units(m)
@@ -432,7 +456,7 @@ def _unit(name: str) -> str:
     for suffix, unit in (("_ms", "ms"), ("_mb", "MB"), ("_s", "s")):
         if name.endswith(suffix):
             return unit
-    if name.endswith(("ratio", "rate", "recall")):
+    if name.endswith(("ratio", "rate", "recall", "recall_at_k")):
         return "ratio"
     if "bytes" in name:
         return "bytes"
@@ -492,10 +516,12 @@ def main(argv=None) -> int:
         "SPARK_DRIVER_MEM": "2g",
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "TMPDIR": os.path.join(work, "tmp"),
-        # every JVM (the launcher too): temp files in the checkout and no
-        # hsperfdata file under /tmp
-        "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData -Djava.io.tmpdir="
-                             + os.path.join(work, "tmp"),
+        # every JVM (the launcher too): temp files in the checkout, no
+        # hsperfdata file under /tmp, and JIT compiler threads that
+        # cpu_seconds can find
+        "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData "
+                             "-XX:-UseDynamicNumberOfCompilerThreads "
+                             "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
         "SPARK_GRAFT_ORACLE_SF_DIR": os.path.join(work, "data"),
         "PYTHONPATH": os.pathsep.join(
             [ROOT] + [p for p in [os.environ.get("PYTHONPATH")] if p]),

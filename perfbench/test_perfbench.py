@@ -23,6 +23,9 @@ sys.path[:0] = [HERE]
 
 from inputs import Sizes, generate  # noqa: E402
 from tracing import Job, Span, layer_metrics  # noqa: E402
+from workloads import (CheckFailed, Ctx, _check_clusters,  # noqa: E402
+                       _check_probe, _texts, jaccard, prepare_ingest,
+                       shingles)
 
 RUN = [sys.executable, "perfbench/run.py", "--workload", "fold_analytics",
        "--seed", "3", "--seconds", "1", "--trace", "0"]
@@ -52,6 +55,53 @@ def test_planted_pairs_are_near_duplicates(tmp_path):
         assert head == text[orig] and len(word) == 3
     for orig, copy in truth.exact_dup_pairs:
         assert text[copy] == text[orig]
+
+
+def _ingest_inputs(tmp_path) -> Ctx:
+    data = str(tmp_path / "data")
+    truth = generate(data, 4, Sizes(base_docs=160, replicas=2))
+    prepare_ingest(data, truth, 4)
+    return Ctx(None, data, str(tmp_path / "out"), truth)
+
+
+def test_probe_check_needs_every_planted_copy_at_its_exact_score(tmp_path):
+    ctx = _ingest_inputs(tmp_path)
+    batch = _texts(f"{ctx.data}/incoming/000.parquet")
+    ref = {**_texts(f"{ctx.data}/ref_gen1.parquet"),
+           **_texts(f"{ctx.data}/ref_gen2.parquet")}
+    copies = [p for kind in ("exact", "near")
+              for p in ctx.truth.incoming[kind] if p[0] in batch]
+    assert copies
+    rows = [("bloom", i, any(i == c for c, _ in copies), None)
+            for i in batch]
+    rows += [("minhash", i, s, round(jaccard(shingles(batch[i]),
+                                             shingles(ref[s])), 6))
+             for i, s in copies]
+    rows += [("contamination", i, 1, None) for i, _ in copies]
+    cols = ["screen", "id", "hit", "score"]
+    _check_probe(0)(ctx, (cols, rows))
+    missing = [r for r in rows if r[:3] != ("minhash",) + copies[0]]
+    with pytest.raises(CheckFailed, match="missed"):
+        _check_probe(0)(ctx, (cols, missing))
+    wrong = [r[:3] + (r[3] - 0.01,) if r[0] == "minhash" else r
+             for r in rows]
+    with pytest.raises(CheckFailed, match="exact Jaccard"):
+        _check_probe(0)(ctx, (cols, wrong))
+
+
+def test_cluster_check_matches_the_planted_pairs(tmp_path):
+    ctx = _ingest_inputs(tmp_path)
+    docs = sorted(_texts(f"{ctx.data}/documents.parquet"))
+    cluster = {i: (i, 1) for i in docs}
+    for a, c in ctx.truth.near_dup_pairs + ctx.truth.exact_dup_pairs:
+        cluster[a] = cluster[c] = (min(a, c), 2)
+    cols = ["doc_id", "cluster_id", "cluster_size"]
+    rows = [(i,) + cluster[i] for i in docs]
+    _check_clusters(ctx, (cols, rows))
+    single = next(i for i in docs[1:] if cluster[i][1] == 1)
+    merged = [(i, docs[0] if i == single else c, n) for i, c, n in rows]
+    with pytest.raises(CheckFailed, match="planted"):
+        _check_clusters(ctx, (cols, merged))
 
 
 def test_layer_attribution():

@@ -54,7 +54,6 @@ class Op:
 class Workload:
     sizes: Sizes
     ops: Callable[[], list[Op]]
-    passes: int                # timed passes per run, at least
     prepare: Callable[[str, Truth, int], None] | None = None
 
 
@@ -120,7 +119,7 @@ NATIVE_FOLDS = ["tpch_q1", "aggregate_fold_year", "rollup_revenue",
                 "salted_agg"]
 GROUPED_MAPS = ["group_median", "pandas_fold"]
 
-RECS_GROUPS = 256       # grouped-map calls cost milliseconds per group
+RECS_GROUPS = 512       # grouped-map calls cost milliseconds per group
 RECS_ABOVE_MEAN_SQL = f"""
 SELECT l_orderkey, l_linenumber, l_quantity, n_lines
 FROM (SELECT l_orderkey, l_linenumber, l_quantity,
@@ -172,6 +171,10 @@ def fold_ops() -> list[Op]:
 # ---------------------------------------------------------------------------
 
 CURATE = ["perplexity", "pack_sequences"]
+# the IVF-PQ rig builds, extends and probes a persisted index and reports
+# recall@5 against exact search
+ANN = "ann_ivf_pq"
+CLUSTER_THRESHOLD = 0.6        # the dedup_clusters rig's
 BATCHES = 2            # K incoming batches: K probes and K micro-batches
 BATCH_DOCS = 20
 QCLF_BUCKETS = 1024
@@ -293,26 +296,49 @@ def _probe(b: int) -> Callable[[Ctx], OpResult]:
     return run
 
 
+def shingles(text: str, k: int = 5) -> set[str]:
+    """The character k-shingles MinHash signs: distinct k-grams of the
+    lowercased text with whitespace runs collapsed."""
+    t = " ".join(text.lower().split())
+    return {t[i:i + k] for i in range(max(len(t) - k + 1, 1))}
+
+
+def jaccard(a: set, b: set) -> float:
+    return len(a & b) / len(a | b)
+
+
+def _texts(path: str) -> dict[int, str]:
+    t = pq.read_table(path, columns=["doc_id", "text"])
+    return dict(zip(t["doc_id"].to_pylist(), t["text"].to_pylist()))
+
+
 def _check_probe(b: int) -> Callable[[Ctx, OpResult], None]:
     def check(ctx: Ctx, result: OpResult) -> None:
         rows = result[1]
-        ids = set(pq.read_table(f"{ctx.data}/incoming/{b:03d}.parquet")
-                  ["doc_id"].to_pylist())
+        batch = _texts(f"{ctx.data}/incoming/{b:03d}.parquet")
+        ref = {}
+        for f in REFERENCE_FILES:
+            ref.update(_texts(f"{ctx.data}/{f}.parquet"))
         planted = ctx.truth.incoming
         copies = {i: s for kind in ("exact", "near")
-                  for i, s in planted[kind] if i in ids}
-        exact = {i for i, _ in planted["exact"] if i in ids}
+                  for i, s in planted[kind] if i in batch}
+        exact = {i for i, _ in planted["exact"] if i in batch}
         member = {r[1]: r[2] for r in rows if r[0] == "bloom"}
-        pairs = {(r[1], r[2]) for r in rows if r[0] == "minhash"}
+        pairs = {(r[1], r[2]): r[3] for r in rows if r[0] == "minhash"}
         contaminated = {r[1] for r in rows if r[0] == "contamination"}
         require(all(member.get(i) for i in exact),
                 f"batch {b}: Bloom false negative")
-        require(all(r[3] >= THRESHOLD for r in rows if r[0] == "minhash"),
-                f"batch {b}: MinHash pair below threshold")
+        for (i, s), score in pairs.items():
+            j = jaccard(shingles(batch[i]), shingles(ref[s]))
+            require(j >= THRESHOLD and abs(score - round(j, 6)) <= 1e-6,
+                    f"batch {b}: MinHash pair {(i, s)} reports {score}, "
+                    f"exact Jaccard is {j:.6f}")
+        missed = [(i, s) for i, s in copies.items() if (i, s) not in pairs]
+        require(not missed, f"batch {b}: planted copies missed: {missed}")
         require(all(i in contaminated for i in copies),
                 f"batch {b}: planted copy not flagged as contaminated")
         ctx.stats.setdefault("pairs", []).append(
-            (sum((i, s) in pairs for i, s in copies.items()), len(copies)))
+            (len(copies) - len(missed), len(copies)))
         fresh = [i for i in member if i not in copies]
         ctx.stats.setdefault("fp", []).append(
             (sum(bool(member[i]) for i in fresh), len(fresh)))
@@ -369,9 +395,45 @@ def _check_stream(ctx: Ctx, result: OpResult) -> None:
                 f"doc {r[i_id]}: stream and batch near-dup verdicts differ")
 
 
+def _check_clusters(ctx: Ctx, result: OpResult) -> None:
+    """Near-duplicate clusters against planted truth.  The exhaustive
+    recursive-CTE twin takes longer than the whole workload, but the
+    generator makes the truth simple: random documents sit far below the
+    threshold, so the clusters are exactly the planted pairs."""
+    cols, rows = result
+    docs = _texts(f"{ctx.data}/documents.parquet")
+    want = {i: (i, 1) for i in docs}
+    for a, c in ctx.truth.near_dup_pairs + ctx.truth.exact_dup_pairs:
+        require(jaccard(shingles(docs[a]), shingles(docs[c]))
+                >= CLUSTER_THRESHOLD, f"planted pair {(a, c)} below "
+                f"the threshold")
+        want[a] = want[c] = (min(a, c), 2)
+    i_id, i_cl, i_sz = (cols.index(c)
+                        for c in ("doc_id", "cluster_id", "cluster_size"))
+    got = {r[i_id]: (r[i_cl], r[i_sz]) for r in rows}
+    require(len(got) == len(rows) == len(docs),
+            f"{len(rows)} cluster rows for {len(docs)} documents")
+    bad = [(i, got[i], w) for i, w in want.items() if got.get(i) != w]
+    require(not bad, f"clusters differ from the planted pairs: {bad[:3]}")
+
+
+def _record_recall(ctx: Ctx, result: OpResult) -> None:
+    """recall@5 against exact search, one value per query; the oracle
+    twin has already checked it."""
+    cols, rows = result
+    per_query = {r[cols.index("query_id")]: r[cols.index("recall")]
+                 for r in rows}
+    ctx.stats["recall_at_k"] = sum(per_query.values()) / len(per_query)
+
+
 def ingest_ops() -> list[Op]:
     return ([Op(n, "curate", _rig(n), oracle=n) for n in CURATE]
-            + [Op("build", "build", _build, once=True,
+            + [Op("semantic_dedup", "dedup", _rig("semantic_dedup"),
+                  oracle="semantic_dedup"),
+               Op("dedup_clusters", "dedup", _rig("dedup_clusters"),
+                  check=_check_clusters),
+               Op(ANN, "ann", _rig(ANN), oracle=ANN, check=_record_recall),
+               Op("build", "build", _build, once=True,
                   check=lambda ctx, r: require(all(n > 0 for _, n in r[1]),
                                                "empty index table")),
                Op("extend", "extend", _extend, once=True)]
@@ -387,14 +449,14 @@ WORKLOADS = {
     # the Arrow/Python path; no writes, text or streaming, so changes to
     # those layers should leave it flat
     "fold_analytics": Workload(
-        Sizes(orders=4000, customers=1000, parts=1000, suppliers=100,
-              events=200, base_docs=100, embeddings=100),
-        fold_ops, passes=2),
+        Sizes(orders=400_000, customers=1000, parts=1000, suppliers=100,
+              base_docs=100, embeddings=100),
+        fold_ops),
     # LLM-data curation, persisted-index build/extend/probe and the
     # streaming admission gate: text and index layers, bucketed writes and
     # per-batch driver cost
     "corpus_ingest": Workload(
-        Sizes(orders=200, customers=50, parts=50, suppliers=10, events=200,
-              base_docs=400, replicas=2, embeddings=50),
-        ingest_ops, passes=1, prepare=prepare_ingest),
+        Sizes(orders=200, customers=50, parts=50, suppliers=10,
+              base_docs=400, replicas=2, embeddings=1000),
+        ingest_ops, prepare=prepare_ingest),
 }
