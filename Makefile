@@ -1,4 +1,4 @@
-# One-command gates (r6 verdict #8). `make verify` chains pytest →
+# One-command gates. `make verify` chains the oracle-type lint → pytest →
 # sf0.01 parity → bench → sf1.0 scale parity and writes VERIFY.json.
 .PHONY: verify verify-fast test parity bench scale stress-classifier
 

@@ -4,14 +4,8 @@
 map-reduce API) at sf0.001.  ``queries()`` exposes one entry per
 implemented operator family from SURVEY.md §2 (+ the mandated scale
 extensions); ``oracle_sql()`` gives the DuckDB twin for each
-SQL-expressible one.
-
-The per-query rigs, their helpers, and the oracle dict live in
-``query_rigs.py`` (split r13 — this file was 6.5k LoC and growing);
-everything there is re-exported here so existing imports
-(``__spark_entry__.q_*`` etc.) keep working.  THIS file owns only the
-contract surface: ``entry`` / ``queries`` / ``oracle_sql`` and the
-driver proof-window rotation.
+SQL-expressible one.  The rigs, the query table and the twins live in
+``query_rigs.py``; import that module for anything beyond this surface.
 """
 
 from __future__ import annotations
@@ -21,15 +15,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 import query_rigs as _rigs
-from query_rigs import *  # noqa: F401,F403 — rig surface re-export
-
-# tests and tools reach rig-internal helpers through this module
-# (e.g. _sketch_distinct_full, _SKETCH_RSD); re-export private names too
-_g = globals()
-for _n in dir(_rigs):
-    if _n.startswith("_") and not _n.startswith("__") and _n not in _g:
-        _g[_n] = getattr(_rigs, _n)
-del _g, _n
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -37,89 +22,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return _rigs.q_tpch_q1(spark, "/root/testdata/sf0.001")
 
 
-
-#: Round-13 driver window (r12 verdict #2: PROVENANCE.json regenerated
-#: with r12 ingested — proof-age spread was 11 rows at r9, 48 at r10).
-#: Composition, in priority order:
-#: (1) the FOUR r13 debuts: media_contamination_firewall (perceptual
-#:     screening of eval images/audio — the r12 firewall lifecycle ×
-#:     perceptual-hash composition, extend≡rebuild oracle), ann_ivf_pq
-#:     (product-quantized residuals at the frozen coarse quantizer —
-#:     integer codebooks + BIGINT ADC, full oracle incl. recall + the
-#:     extend law), image_near_dup_phash (integer-DCT pHash with
-#:     uniform-border trim — boxed re-encodes at Hamming 0, pre-encode
-#:     truth oracle), tokenizer_oov (BPE vocabulary-drift monitor,
-#:     both verdict polarities);
-#: (1b) quality_dashboard RE-PROOF: its r12 proof predates the r13
-#:     fallback_per_milli/alert_oov columns — schema change voids the
-#:     old proof (the standing r12 rule);
-#: (2) ALL ELEVEN r9-stale rows (the head of the rotation queue);
-#: (3) 34 of the 48 r10-stale rows.  The FOURTEEN displaced to the r14
-#:     queue, each with its in-window coverage: tpch_q1 (driver
-#:     smoke-runs it EVERY round via entry(); sf0.001/0.01 value
-#:     parity on every pytest run), tpch_q3/q5/q18 (sql_revenue —
-#:     in-window — exercises the same star-join + pushed-predicate +
-#:     broadcast-dims shape with a verbatim shared-dialect twin),
-#:     stream_near_dup (minhash_firewall, in-window, has the IDENTICAL
-#:     contract — same %4 split/spec/threshold, same oracle text — via
-#:     the persisted-index path), stream_bloom (bloom_firewall +
-#:     stream_ingest_gate, both in-window, cover the screen and its
-#:     streaming admission form), stream_classifier
-#:     (quality_classifier in-window trains/scores the same model;
-#:     the dashboard re-proof embeds the stateless gate per batch),
-#:     stream_drift (the dashboard re-proof embeds
-#:     psi_against_reference per batch; drift_psi in-window),
-#:     stream_sliding (stream_hourly in-window covers the streaming
-#:     windowed-agg shape), ann_ivf (the ann_ivf_pq debut composes the
-#:     same coarse-quantizer train/assign/probe at frozen centroids;
-#:     ann_int8 in-window), bloom_resize_roundtrip (bloom_firewall +
-#:     bloom_gen_stats in-window cover build/extend/monitor; the
-#:     geometry law is pinned by the 2k-point sweep test),
-#:     drift_psi_quantile (drift_psi in-window shares the monitor
-#:     core; edge derivation pinned by the Spark≡DuckDB test + fuzz),
-#:     sketch_cms (sketch_heavy_hitters in-window covers the
-#:     frequency.py sketch conventions; CMS laws test-pinned),
-#:     dsir_select_bigram (dsir_select proven r12; the bigram feature
-#:     laws are pinned by test_classifier + parameterized fuzz).
-#: Every below-window row is still re-proven at sf0.001 by the local
-#: parity suite on every pytest run.
-_R12_WINDOW = [
-    # (1) r13 debuts + the oov-schema re-proof
-    "media_contamination_firewall", "ann_ivf_pq",
-    "image_near_dup_phash", "tokenizer_oov", "quality_dashboard",
-    # (2) the eleven r9-stale rows
-    "ann_bruteforce_joined", "bloom_gen_stats", "bpe_token_count",
-    "bpe_train", "corpus_report", "fold_all", "running_total",
-    "shuffle_pos", "sql_revenue", "stream_hourly", "stream_ingest_gate",
-    # (3) 34 of the 48 r10-stale rows
-    "ann_int8", "anomaly_zscore", "asof_tolerance", "bigram_perplexity",
-    "bloom_firewall", "c4_rules", "compaction_plan", "corpus_diff",
-    "curate_corpus", "dedup_exact", "dedup_minhash",
-    "dedup_ngram_jaccard", "dedup_simhash", "drift_psi",
-    "entropy_filter", "funnel", "gopher_rules", "minhash_firewall",
-    "mislabel_knn", "mr_sum_by_flag", "normalize_punct", "perplexity",
-    "quality_classifier", "redact_pii", "remove_dup_spans",
-    "repetition_stats", "salted_agg", "scd2", "semantic_dedup",
-    "sketch_heavy_hitters", "temperature_mixture", "top_ngrams",
-    "topk_per_group", "zorder_pruning",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry.
-
-    ORDER MATTERS: the driver's correctness harness checks the FIRST 50
-    entries only, so proof rotates round-over-round.  PROVENANCE.json
-    (regenerated by ``python tools/provenance.py``) is the
-    machine-readable query → last-driver-proven-round ledger; the
-    window is ``_R12_WINDOW`` above (chosen from that ledger, rationale
-    in its comment), applied as a reordering of the stable base dict
-    in query_rigs — below-window entries keep their relative order,
-    which is the next round's rotation queue."""
-    base = _rigs._queries_base()
-    window = {k: base[k] for k in _R12_WINDOW}
-    assert len(window) == 50, f"window must be exactly 50, got {len(window)}"
-    return {**window, **{k: v for k, v in base.items() if k not in window}}
+    """Query registry: the ``registry`` rows of ``query_rigs.QUERY_TABLE``,
+    in table order."""
+    return {s.name: s.rig for s in _rigs.QUERY_TABLE if s.registry}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,15 +1,10 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the bench rows of ``query_rigs.QUERY_TABLE`` at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-stdout contract (the driver's record is a bounded TAIL capture — r5's
-BENCH_r05.json came back ``parsed: null`` because the single summary
-line had grown past the capture window with per-query IQRs and a prose
-noise note): the LAST stdout line is now a COMPACT JSON summary —
-metric/value/unit/per-query medians/sf only — sized well inside the
-tail window.  The full record (IQRs, raw samples, the noise note)
-still exists, written to ``BENCH_FULL.json`` next to this script and
-echoed per-query on stderr, so nothing is lost; it is just no longer
-allowed to crowd the machine-readable line out of the driver's tail.
+The full record (per-query medians, IQRs, raw samples, the calibration
+row) is written to ``BENCH_FULL.json`` next to this script and echoed
+per-query on stderr.  The LAST stdout line is a compact JSON summary:
+metric, total, per-query medians, calibration and sf.
 
 Each query is executed to completion (collect) — results are small
 aggregates, so driver materialization is negligible versus execution.
@@ -23,187 +18,8 @@ import statistics
 import sys
 import time
 
-import __spark_entry__ as E
+import query_rigs as R
 from frames_map_reduce_spark.session import get_spark
-
-HEADLINE = [
-    "tpch_q1",            # scan + multi-output fold fusion
-    "mr_sum_by_flag",     # filter pushdown + groupBy
-    "weighted_mean",      # derived-value folds
-    "fold_all_numeric",   # wide aggregation
-    "aggregate_fold_year",  # key coarsening
-    "topk_per_group",     # grouped-map applyInPandas (Arrow)
-    "group_median",       # whole-group reduce
-    "flatmap_tokens",     # explode + re-aggregate
-    "text_quality",       # heavy string expressions
-    "lang_id",            # marker-scoring expressions
-    "dedup_exact",        # fingerprint groupBy
-    "dedup_minhash",      # minhash signatures + LSH bucket join
-    "dedup_simhash",      # vectorized simhash + capped banded self-join
-    "ann_bruteforce",     # batched matmul scoring + two-stage topk
-    "events_hourly",      # timestamp truncation agg
-    "sessionize",         # window functions
-    "topk_native",        # JVM window top-k (the scale path)
-    "pivot",              # explicit-values conditional-agg pivot
-    "join_revenue",       # star join: 2-shuffle fact join + broadcast dims
-    "running_total",      # cumulative window aggregation
-    "quality_score",      # composite text-quality expression pipeline
-    "asof_join",          # union-marker windowed as-of join
-    "range_join",         # bucketized interval-containment join
-    "clean_corpus",       # composed cleaning pipeline (2-shuffle end-to-end)
-    "cdc_compact",        # changelog compaction via 2-phase max_by
-    "funnel",             # conditional frame-bounded window funnel
-    # round-4 additions
-    "retention",          # cohort matrix: min-agg + skinny join
-    "sql_revenue",        # SQL surface: verbatim shared-dialect star join
-    "chunk_dedup",        # chunk-level boilerplate stats (explode + 2 aggs)
-    "shuffle_pos",        # scalable global permutation index
-    "dup_spans",          # exact repeated-substring spans (posting lists)
-    "merge_upsert",       # incremental MERGE: delta compaction + anti join
-    "tpch_q3",            # classic star join + pushed dates + top-10
-    "tpch_q5",            # 6-way star, broadcast dims, AQE supplier
-    "tpch_q18",           # HAVING self-agg semi-join pruning
-    # round-5 additions (strip_markup excluded: fixture-based micro
-    # query, not a corpus-scale workload)
-    "perplexity",         # unigram LM: explode + vocab join + agg
-    "bigram_perplexity",  # conditional LM: transition + context joins
-    "remove_dup_spans",   # span apply: posting lists + positional cut
-    "remove_dup_lines",   # C4 line dedup: count + join-back + reassembly
-    "curate_corpus",      # composed: line dedup -> LM gate -> yield
-    # round-6: the firewall's one-time index build and the recurring
-    # probe are timed SEPARATELY — r5's single 8.3 s "minhash_firewall"
-    # number conflated the amortized build with the per-batch probe cost
-    # the deployment shape actually pays (r5 verdict #3)
-    "minhash_firewall_build",   # train-once: sign corpus, write 2 bucketed tables
-    "minhash_firewall_probe",   # query-many: pruned bucketed scan + broadcast joins
-    # round-6 additions
-    "zorder_extents",     # z-value expr + clustered write + footer audit
-    "curate_corpus_v2",   # per-language perplexity gate (CCNet-style)
-    "asof_sliced",        # skew-sliced as-of join (hot-key parallel path)
-    "label_outliers",     # fixed-point centroid-distance mislabel audit
-    "mislabel_knn",       # composed: outliers -> exact 5-NN label vote
-    "pack_sequences",     # concat-and-chunk training-sequence manifest
-    "semantic_dedup",     # SemDeDup: cluster + within-cluster drop
-    "corpus_to_sequences",  # composed: dedup -> LM gate -> packed seqs
-    # round-7 additions
-    "zorder_pruning",     # box-query footer-prune audit over the layout
-    "bpe_token_count",    # greedy subword encode (Arrow mapInPandas)
-    "pack_bpe_sequences",  # packing budgeted in tokenizer tokens
-    "ann_int8",           # int8-quantized integer-exact MIPS top-k
-    "quality_classifier",  # hashed log-odds train + broadcast-join score
-    "temperature_mixture",  # alpha-sampling rebalance, in-plan rates
-    "curate_corpus_v3",   # classifier train -> score -> top-half cut
-    "gopher_rules",       # integer rule verdicts, 1 projection + 1 agg
-    "pack_extend",        # incremental manifest fold-in (no repack)
-    "bloom_firewall",     # build+extend+probe Bloom membership lifecycle
-    "c4_rules",           # line-level C4 cleaner profile, 1 proj + 1 agg
-    # r7 verdict #5: the composed admission gate is benched SPLIT, like
-    # the minhash firewall — the one-time double-index build and the
-    # recurring probe+rules cost are different deployment numbers (the
-    # old single "ingest_gate" row mixed them into one 12.6 s sample)
-    "gate_build",         # one-time: Bloom + MinHash index builds
-    "gate_probe",         # recurring: Bloom/MinHash probes + rule screens
-    # round-8 additions
-    "bloom_gen_stats",    # extend-lifecycle generation monitor (1 agg)
-    "stream_ingest_gate",  # composed stateless streaming admission gate
-    "bpe_train",          # BPE vocab induction: distributed dict + merges
-    # round-9 additions; the full streaming gate is benched as its
-    # recurring half (stream_gate_v2_probe, after gate_build) per the
-    # r7 #5 split convention — the composed registry row
-    # stream_ingest_gate_v2 stays the oracled end-to-end entry
-    "stream_gate_v2_probe",  # recurring: stateless screens + per-batch
-                             # MinHash probe + parquet sink, streamed
-    "bloom_compact_roundtrip",  # compaction policy + expected_fpr monitor
-    "bpe_train_encode",   # train -> learned-inventory encode composition
-    "stream_enrich",      # stream-static broadcast enrichment rollup
-    "dsir_select",        # DSIR importance resampling toward a target
-    # round-10 additions; gate_build is decomposed (r9 verdict #5) so
-    # the 12-13 s number attributes to its pieces mechanically
-    "gate_build_bloom",     # component: Bloom word-table build alone
-    "gate_build_minhash",   # component: MinHash sign + 2 bucketed writes
-    "gate_build_autosize",  # component: the approx_count_distinct pass
-                            # m_bits="auto" adds (n_items= saves exactly this)
-    "bloom_resize_roundtrip",  # overfull -> rebuild-at-suggested-geometry
-    "corpus_to_token_ids",  # curate -> encode IDs -> pack token streams
-    "dsir_select_bigram",   # DSIR at the paper's (1,2)-gram feature set
-    "token_ids_extend",     # incremental encode-delta/extend-shards arc
-    "entropy_filter",       # exact-integer micronat entropy bottom-k
-    "anomaly_zscore",       # BIGINT windowed moments trailing z-score
-    "drift_psi",            # PSI drift monitor, two n_bins-row aggs
-    "drift_psi_quantile",   # equal-depth PSI: derive edges + monitor
-    "stream_drift",         # per-micro-batch PSI vs frozen reference
-    "compaction_plan",      # manifest window fill: rewrite-task plan
-    "event_transitions",    # lead-window Markov pair matrix
-    # round-11 additions
-    "psi_lifecycle",        # persist -> reload -> score with planted drift
-    "quality_dashboard",    # per-batch entropy/PSI/classifier quality row
-    "token_ids_roundtrip",  # decode(encode(corpus)) losslessness arc
-    "profile_corpus",       # ANALYZE-style exact per-column stats, 1 pass
-    # round-12 additions; the oracled image_near_dup registry row runs
-    # on a fixed 27-image fixture (correctness, not scale) — the bench
-    # row is the corpus-scaled twin: 1 generated PNG per documents row,
-    # decode -> aHash -> banded Hamming pairing
-    "image_near_dup_scaled",  # perceptual dedup: decode + sign + pair
-    "ann_ivf_extend",       # IVF lifecycle: build slice + extend + probe
-    "ivf_drift",            # retrain trigger: per-cell occupancy/displacement
-    "video_near_dup",       # frame-level aHash: decode + sign + frame census
-    "audio_near_dup",       # energy-plane aHash: cross-codec WAV dedup
-    "contamination_firewall",  # persisted decontamination index lifecycle
-    "decontaminate_corpus",    # removal half: probe + anti-join + yield
-    "stream_decontaminate",    # streaming twin: per-batch index probe
-    "token_budget_sample",     # token-budgeted mixing: bucketed prefix cut
-    "audio_near_dup_scaled",   # corpus-scaled twin: WAV gen + sign + pair
-    "video_near_dup_scaled",   # corpus-scaled twin: AVI gen + sign + census
-    # round-13 additions
-    "media_contamination_firewall",  # eval-media perceptual firewall arc
-    "ann_ivf_pq",           # IVF-PQ: residual codebooks + BIGINT ADC probe
-    "image_near_dup_phash",  # integer-DCT pHash: trim + pool + DCT + pair
-    "tokenizer_oov",        # vocabulary-drift monitor: fallback accounting
-    "media_firewall_scaled",  # corpus-scaled eval-media firewall build+probe
-]
-
-#: entries that model amortized ONE-TIME work (index builds): repeating
-#: them at full median-of-n would let the builds dominate the suite
-#: total, but a single sample is throttle-exposed (r7 verdict #5) — so
-#: they run min(3, n_reps) samples and report a real median + IQR.
-ONCE = {"minhash_firewall_build", "gate_build", "gate_build_bloom",
-        "gate_build_minhash", "gate_build_autosize",
-        "bloom_resize_roundtrip"}
-
-
-def _commit_record(here: str) -> None:
-    """Commit the refreshed BENCH_FULL.json in the same step that wrote
-    it (r7 verdict #7: the record sat modified/uncommitted in the
-    worktree after every bench run, so the committed history lagged the
-    driver artifact).  NOTE: this mutates git history as a side effect
-    of running the benchmark — deliberate for this repo's per-round
-    driver workflow, documented here per r8 ADVICE.  Best-effort:
-    disabled via SPARK_GRAFT_BENCH_NO_COMMIT=1, silently skipped when
-    git is absent, the file is unchanged, the tree is not a repo, or
-    HEAD is detached (committing onto a detached HEAD strands the
-    record on no branch) — a failed commit must never fail the bench."""
-    import subprocess
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_COMMIT"):
-        return
-    try:
-        head = subprocess.run(
-            ["git", "symbolic-ref", "-q", "HEAD"],
-            cwd=here, capture_output=True, timeout=30)
-        if head.returncode != 0:  # detached HEAD
-            return
-        changed = subprocess.run(
-            ["git", "status", "--porcelain", "--", "BENCH_FULL.json"],
-            cwd=here, capture_output=True, text=True, timeout=30)
-        if changed.returncode != 0 or not changed.stdout.strip():
-            return
-        subprocess.run(["git", "add", "BENCH_FULL.json"], cwd=here,
-                       capture_output=True, timeout=30)
-        subprocess.run(
-            ["git", "commit", "-m", "Record bench run (BENCH_FULL refresh)",
-             "--", "BENCH_FULL.json"],
-            cwd=here, capture_output=True, timeout=30)
-    except Exception:
-        pass
 
 
 def main() -> None:
@@ -214,8 +30,7 @@ def main() -> None:
     spark = get_spark("fmr-bench",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    queries = E.queries()
-    queries.update(E.bench_only_queries())
+    specs = [s for s in R.QUERY_TABLE if s.bench]
 
     # warm the JVM / parquet footers AND the Python worker pool with
     # trivial jobs so timings measure the queries, not session startup
@@ -264,9 +79,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     iqr: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = queries[name]
-        reps = min(3, n_reps) if name in ONCE else n_reps
+    for spec in specs:
+        name, fn = spec.name, spec.rig
+        reps = min(3, n_reps) if spec.bench == "once" else n_reps
         samples, rows = [], []
         for _ in range(reps):
             # full work each sample: the dedup pipelines persist interim
@@ -304,12 +119,11 @@ def main() -> None:
         "samples": raw,
         "sf": sf,
         "n": n_reps,
-        # ONCE entries run min(3, n_reps) samples (r7 verdict #5): they
-        # have real medians + IQRs now, but model ONE-TIME amortized
-        # work — flag membership so a reader weighs them as build cost,
-        # not recurring suite time
-        "n_once": {name: min(3, n_reps) for name in ONCE
-                   if name in timings},
+        # bench="once" rows run min(3, n_reps) samples and model
+        # ONE-TIME amortized work — flag membership so a reader weighs
+        # them as build cost, not recurring suite time
+        "n_once": {s.name: min(3, n_reps) for s in specs
+                   if s.bench == "once"},
         # host-speed reference for cross-round normalization (r9
         # verdict #6): constant work, zero I/O — per-query ratios
         # divided by the calibration ratio cancel host drift
@@ -327,81 +141,16 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
         json.dump(full, f, indent=1)
-    _commit_record(here)
-    # LAST stdout line: compact, driver-parseable (see module docstring).
-    # The leading blank line defends against console-progress carriage
-    # returns gluing a partial stage bar onto the front of the JSON when
-    # stdout and stderr share a tty/capture buffer.
+    # LAST stdout line: compact JSON (see module docstring).  The leading
+    # blank line defends against console-progress carriage returns
+    # gluing a partial stage bar onto the front of the JSON when stdout
+    # and stderr share a tty/capture buffer.
     print()
-    print(_final_line(full["metric"], total, timings, cal_median, sf))
-
-
-#: The driver records a bounded stdout TAIL (~2,000 chars); r10's
-#: 85-query line outgrew it and BENCH_r10.json came back
-#: ``parsed: null`` (r10 verdict #4).  Budget with headroom for the
-#: trailing newline and any console-progress residue.
-_FINAL_LINE_BUDGET = 1800
-
-
-def _driver_record_ages() -> dict[str, int]:
-    """query → the LATEST round whose driver bench record
-    (``BENCH_r{NN}.json``, committed by the driver each round) parsed a
-    number for it; absent = never driver-recorded.  Best-effort: a
-    missing/corrupt record file contributes nothing."""
-    import glob
-    import re
-    here = os.path.dirname(os.path.abspath(__file__))
-    ages: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-            qmap = (rec.get("parsed") or {}).get("queries") or {}
-        except Exception:  # noqa: BLE001 — best-effort history read
-            continue
-        for q in qmap:
-            ages[q] = max(ages.get(q, 0), rnd)
-    return ages
-
-
-def _final_line(metric: str, total: float, timings: dict,
-                cal_median: float, sf: float) -> str:
-    """Compact final-line JSON, HARD-BOUNDED under the driver's tail
-    capture: 2-decimal per-query medians, compact separators, and —
-    only if the full map overflows — truncated by RECORD AGE
-    (r12 verdict #3; supersedes r11's newest-first order, which
-    protected debuts but starved a FIXED omitted tail forever):
-    queries never driver-recorded (this round's debuts) come first,
-    then ascending latest-recorded round — so the omitted set rotates
-    round-over-round and no query goes more than ~2 rounds without a
-    driver-recorded number.  Ties (and the no-history fallback)
-    preserve suite order REVERSED, keeping the r11 debut guarantee.
-    ``queries_omitted`` counts the cut; full detail always lives in
-    BENCH_FULL.json."""
-    def render(qmap: dict, omitted: int) -> str:
-        rec = {"metric": metric, "value": total, "unit": "sec",
-               "queries": qmap, "calibration": cal_median, "sf": sf}
-        if omitted:
-            rec["queries_omitted"] = omitted
-        return json.dumps(rec, separators=(",", ":"))
-
-    compact = {name: round(t, 2) for name, t in timings.items()}
-    line = render(compact, 0)
-    ages = _driver_record_ages()
-    suite_pos = {name: i for i, name in enumerate(compact)}
-    # keep-priority: never-recorded first (age 0), then stalest record,
-    # then newest suite position — drop from the END of this order
-    names = sorted(compact,
-                   key=lambda n: (ages.get(n, 0), -suite_pos[n]))
-    while len(line) > _FINAL_LINE_BUDGET and names:
-        names.pop()    # best-covered query drops first
-        line = render({n: compact[n] for n in names},
-                      len(compact) - len(names))
-    return line
+    print(json.dumps({"metric": full["metric"], "value": total,
+                      "unit": "sec",
+                      "queries": {n: round(t, 2) for n, t in timings.items()},
+                      "calibration": cal_median, "sf": sf},
+                     separators=(",", ":")))
 
 
 if __name__ == "__main__":

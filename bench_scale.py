@@ -116,7 +116,7 @@ SUPER_LINEAR_ORACLES = {
     # r13: the eight Jaccard-twin queries moved OFF this list — their
     # oracles are now the prefix-filtered bitstring-verify form
     # (dedup.jaccard_pairs_prefix_sql), run at the gate via the staged
-    # temp-table rendering (entry.scale_staged_oracles) — full-value
+    # temp-table rendering (query_rigs.scale_staged_oracles) — full-value
     # exact at sf1.0 in ~2-5 min each instead of intractable.
     "dedup_simhash": "exhaustive all-pairs Hamming/spec replay twin",
     "embedding_neardup": "all-pairs cosine twin",
@@ -351,6 +351,7 @@ def verify(sf_dir: str = DST) -> int:
     # to rows-only via oracle_sql()'s guard
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     import __spark_entry__ as entry
+    import query_rigs
     from frames_map_reduce_spark.session import get_spark
     from frames_map_reduce_spark.sources import STAR_TABLES
 
@@ -370,8 +371,8 @@ def verify(sf_dir: str = DST) -> int:
     con = make_con(sf_dir)
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    # staged temp-table rendering of the Jaccard twins (r12 verdict #7)
-    staged = getattr(entry, "scale_staged_oracles", dict)()
+    # staged temp-table rendering of the Jaccard twins
+    staged = query_rigs.scale_staged_oracles()
     results: dict[str, dict] = {}
     for name, fn in queries.items():
         setup, oracle = staged.get(name, (None, oracles.get(name)))

@@ -1,12 +1,11 @@
 """Query rigs + DuckDB oracle twins for the driver contract.
 
-Split out of ``__spark_entry__.py`` (r12 verdict: the entry file was
-6.5k LoC and growing ~500/round).  The DRIVER CONTRACT SURFACE —
-``entry`` / ``queries`` / ``oracle_sql`` and the proof-window list —
-stays in ``__spark_entry__.py``, which re-exports everything here; this
-module owns the per-query rig functions (``q_*``), their shared
-helpers/constants, ``_queries_base()`` (the stable registry order), and
-``oracle_sql()`` (the twin dict the entry delegates to).
+This module owns the per-query rig functions (``q_*``, plus the
+bench-only ``bench_*`` rigs), their shared helpers/constants,
+``QUERY_TABLE`` (the one list of which queries exist and which are
+benched) and ``oracle_sql()`` (the twin dict, keyed by query name).
+``__spark_entry__.py`` keeps only the contract surface: ``entry`` /
+``queries`` / ``oracle_sql``.
 
 Conventions shared by both sides (so value-hashes match):
 - every computed column is aliased identically in Spark and SQL;
@@ -21,6 +20,7 @@ Conventions shared by both sides (so value-hashes match):
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1351,27 +1351,6 @@ def bench_stream_gate_v2_probe(spark: SparkSession,
     return (spark.read.parquet(f"{base}/out")
                  .select("doc_id", "maybe_dup", "quality_ok",
                          "is_near_dup", "accept"))
-
-
-def bench_only_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Callables bench.py times that are NOT registry queries: the
-    build/probe splits model the amortized-build deployment shape; the
-    end-to-end compositions (q_minhash_firewall, q_ingest_gate,
-    q_stream_ingest_gate_v2) stay the oracled registry entries."""
-    return {
-        "minhash_firewall_build": bench_minhash_firewall_build,
-        "minhash_firewall_probe": bench_minhash_firewall_probe,
-        "gate_build": bench_gate_build,
-        "gate_build_bloom": bench_gate_build_bloom,
-        "gate_build_minhash": bench_gate_build_minhash,
-        "gate_build_autosize": bench_gate_build_autosize,
-        "gate_probe": bench_gate_probe,
-        "stream_gate_v2_probe": bench_stream_gate_v2_probe,
-        "image_near_dup_scaled": bench_image_near_dup_scaled,
-        "audio_near_dup_scaled": bench_audio_near_dup_scaled,
-        "video_near_dup_scaled": bench_video_near_dup_scaled,
-        "media_firewall_scaled": bench_media_firewall_scaled,
-    }
 
 
 def q_bloom_firewall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4950,187 +4929,324 @@ def q_percentile_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Contract functions
 # ---------------------------------------------------------------------------
 
-def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # -- (1) never driver-proven ------------------------------------
-        "length_histogram": q_length_histogram,
-        "asof_sliced": q_asof_sliced,
-        "zorder_extents": q_zorder_extents,
-        "curate_corpus_v2": q_curate_corpus_v2,
-        # -- (2) last proof is r3 ---------------------------------------
-        "fingerprint": q_fingerprint,
-        "events_json": q_events_json,
-        "pivot": q_pivot,
-        "running_total": q_running_total,
-        "join_revenue": q_join_revenue,
-        "anti_join": q_anti_join,
-        # -- (3) last proof is r4 (40 of 43) ----------------------------
-        "weighted_mean": q_weighted_mean,
-        "fold_all_numeric": q_fold_all_numeric,
-        "good_rows": q_good_rows,
-        "null_propagating": q_null_propagating,
-        "aggregate_fold_year": q_aggregate_fold_year,
-        "combine_key_maps": q_combine_key_maps,
-        "group_median": q_group_median,
-        "flatmap_tokens": q_flatmap_tokens,
-        "collect_sorted": q_collect_sorted,
-        "events_hourly": q_events_hourly,
-        "rollup_revenue": q_rollup_revenue,
-        "cube_revenue": q_cube_revenue,
-        "split_on_data": q_split_on_data,
-        "assign_keys": q_assign_keys,
-        "assign_keys_and_data": q_assign_keys_and_data,
-        "fold_all": q_fold_all,
-        "fold_all_monoid": q_fold_all_monoid,
-        "pandas_fold": q_pandas_fold,
-        "frame_concat": q_frame_concat,
-        "to_frame": q_to_frame,
-        "read_csv_permissive": q_read_csv_permissive,
-        "stream_join": q_stream_join,
-        "stream_enrich": q_stream_enrich,
-        "stream_dedup": q_stream_dedup,
-        "asof_join": q_asof_join,
-        "clean_corpus": q_clean_corpus,
-        "media_features": q_media_features,
-        "stream_sliding": q_stream_sliding,
-        "ann_srp": q_ann_srp,
-        "sketch_distinct": q_sketch_distinct,
-        "ann_bruteforce_joined": q_ann_bruteforce_joined,
-        "ann_int8": q_ann_int8,
-        "shuffle_pos": q_shuffle_pos,
-        "sql_revenue": q_sql_revenue,
-        "chunk_dedup": q_chunk_dedup,
-        "retention": q_retention,
-        "stream_near_dup": q_stream_near_dup,
-        "corpus_report": q_corpus_report,
-        "dup_spans": q_dup_spans,
-        "sketch_quantiles": q_sketch_quantiles,
-        "weighted_sample": q_weighted_sample,
-        "leakage_safe_split": q_leakage_safe_split,
-        # ---------------- 50-row window ends here ----------------------
-        # r4-proven rows that didn't fit: FIRST in line for the r7 window
-        "repetition_stats": q_repetition_stats,
-        "redact_pii": q_redact_pii,
-        "top_ngrams": q_top_ngrams,
-        # changed this round (output-invariant guard), r5-hash-green
-        "sketch_heavy_hitters": q_sketch_heavy_hitters,
-        # new r6 (integer-exact by design), never driver-proven: in line
-        # for the r7 window with the stale three + funnel/scd2
-        "label_outliers": q_label_outliers,
-        "mislabel_knn": q_mislabel_knn,
-        # everything below is r5-green (CORRECTNESS_r05) and re-proven by
-        # the local oracle-parity suite each pytest run
-        "tpch_q1": q_tpch_q1,
-        "dedup_minhash": q_dedup_minhash,
-        "token_stats": q_token_stats,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_indexed": q_ann_ivf_indexed,
-        "dedup_simhash": q_dedup_simhash,
-        "merge_upsert": q_merge_upsert,
-        "asof_forward": q_asof_forward,
-        "media_meta": q_media_meta,
-        "range_join": q_range_join,
-        "cdc_compact": q_cdc_compact,
-        "scd2": q_scd2,
-        "bm25": q_bm25,
-        "contamination": q_contamination,
-        "contamination_firewall": q_contamination_firewall,
-        "decontaminate_corpus": q_decontaminate_corpus,
-        "token_budget_sample": q_token_budget_sample,
-        "chunk_docs": q_chunk_docs,
-        "embedding_neardup": q_embedding_neardup,
-        "dedup_clusters": q_dedup_clusters,
-        "pack_shards": q_pack_shards,
-        "train_test_split": q_train_test_split,
-        "salted_agg": q_salted_agg,
-        "mr_sum_by_flag": q_mr_sum_by_flag,
-        "topk_per_group": q_topk_per_group,
-        "topk_native": q_topk_native,
-        "quality_score": q_quality_score,
-        "sessionize": q_sessionize,
-        "funnel": q_funnel,
-        "percentile_native": q_percentile_native,
-        "unpivot": q_unpivot,
-        "asof_tolerance": q_asof_tolerance,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "ann_bruteforce": q_ann_bruteforce,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q5": q_tpch_q5,
-        "tpch_q18": q_tpch_q18,
-        "sample_stratified": q_sample_stratified,
-        "mixture_weights": q_mixture_weights,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "stream_hourly": q_stream_hourly,
-        "stream_sessions": q_stream_sessions,
-        "stream_stateful": q_stream_stateful,
-        "perplexity": q_perplexity,
-        "bigram_perplexity": q_bigram_perplexity,
-        "minhash_firewall": q_minhash_firewall,
-        "bloom_firewall": q_bloom_firewall,
-        "remove_dup_spans": q_remove_dup_spans,
-        "remove_dup_lines": q_remove_dup_lines,
-        "strip_markup": q_strip_markup,
-        "normalize_punct": q_normalize_punct,
-        "curate_corpus": q_curate_corpus,
-        "pack_sequences": q_pack_sequences,
-        "semantic_dedup": q_semantic_dedup,
-        "corpus_to_sequences": q_corpus_to_sequences,
-        "corpus_to_token_ids": q_corpus_to_token_ids,
-        "zorder_pruning": q_zorder_pruning,
-        "bpe_token_count": q_bpe_token_count,
-        "bpe_train": q_bpe_train,
-        "bpe_train_encode": q_bpe_train_encode,
-        "pack_bpe_sequences": q_pack_bpe_sequences,
-        "quality_classifier": q_quality_classifier,
-        "temperature_mixture": q_temperature_mixture,
-        "dsir_select": q_dsir_select,
-        "dsir_select_bigram": q_dsir_select_bigram,
-        "stream_classifier": q_stream_classifier,
-        "curate_corpus_v3": q_curate_corpus_v3,
-        "gopher_rules": q_gopher_rules,
-        "c4_rules": q_c4_rules,
-        "ingest_gate": q_ingest_gate,
-        "stream_bloom": q_stream_bloom,
-        "sketch_cms": q_sketch_cms,
-        "kmv_overlap": q_kmv_overlap,
-        "corpus_diff": q_corpus_diff,
-        "pack_extend": q_pack_extend,
-        "token_ids_extend": q_token_ids_extend,
-        "bloom_gen_stats": q_bloom_gen_stats,
-        "bloom_compact_roundtrip": q_bloom_compact_roundtrip,
-        "bloom_resize_roundtrip": q_bloom_resize_roundtrip,
-        "stream_ingest_gate": q_stream_ingest_gate,
-        "stream_ingest_gate_v2": q_stream_ingest_gate_v2,
-        "stream_decontaminate": q_stream_decontaminate,
-        "entropy_filter": q_entropy_filter,
-        "anomaly_zscore": q_anomaly_zscore,
-        "drift_psi": q_drift_psi,
-        "drift_psi_quantile": q_drift_psi_quantile,
-        "stream_drift": q_stream_drift,
-        "compaction_plan": q_compaction_plan,
-        # below-window debut: heads the r13 rotation queue (proven
-        # locally at sf0.001/0.01 by the parity suite and at sf1.0 by
-        # the scale gate this round; driver row lands in r11)
-        "event_transitions": q_event_transitions,
-        # r11 debuts (window-proven in r11)
-        "psi_lifecycle": q_psi_lifecycle,
-        "quality_dashboard": q_quality_dashboard,
-        "token_ids_roundtrip": q_token_ids_roundtrip,
-        "profile_corpus": q_profile_corpus,
-        # r12 debuts (all inside _R12_WINDOW)
-        "image_near_dup": q_image_near_dup,
-        "ann_ivf_extend": q_ann_ivf_extend,
-        "ivf_drift": q_ivf_drift,
-        "video_near_dup": q_video_near_dup,
-        "audio_near_dup": q_audio_near_dup,
-        # r13 debuts
-        "media_contamination_firewall": q_media_contamination_firewall,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "image_near_dup_phash": q_image_near_dup_phash,
-        "tokenizer_oov": q_tokenizer_oov,
-    }
+@dataclass(frozen=True)
+class QuerySpec:
+    """One row of ``QUERY_TABLE``.
+
+    ``bench`` says how bench.py times the rig: ``None`` (not timed),
+    ``"headline"`` (median of n samples) or ``"once"`` (one-time
+    amortized work such as an index build: min(3, n) samples).
+    ``registry=False`` marks bench-only rigs: the build/probe halves of a
+    composed registry query (the composition stays the oracled row) and
+    corpus-scaled twins of fixture-based rows.  They have no oracle and
+    are not in ``queries()``."""
+
+    name: str
+    rig: Callable[[SparkSession, str], DataFrame | None]
+    bench: str | None = None
+    registry: bool = True
+
+
+#: Every query and bench row, in bench order: each build row runs before
+#: the probe rows that read its index.  A benched row's comment says what
+#: it exercises.  The registry is the ``registry`` view of this table and
+#: the bench suite is the ``bench`` view.
+QUERY_TABLE = (
+    # scan + multi-output fold fusion
+    QuerySpec("tpch_q1", q_tpch_q1, "headline"),
+    # filter pushdown + groupBy
+    QuerySpec("mr_sum_by_flag", q_mr_sum_by_flag, "headline"),
+    # derived-value folds
+    QuerySpec("weighted_mean", q_weighted_mean, "headline"),
+    # wide aggregation
+    QuerySpec("fold_all_numeric", q_fold_all_numeric, "headline"),
+    # key coarsening
+    QuerySpec("aggregate_fold_year", q_aggregate_fold_year, "headline"),
+    # grouped-map applyInPandas (Arrow)
+    QuerySpec("topk_per_group", q_topk_per_group, "headline"),
+    # whole-group reduce
+    QuerySpec("group_median", q_group_median, "headline"),
+    # explode + re-aggregate
+    QuerySpec("flatmap_tokens", q_flatmap_tokens, "headline"),
+    # heavy string expressions
+    QuerySpec("text_quality", q_text_quality, "headline"),
+    # marker-scoring expressions
+    QuerySpec("lang_id", q_lang_id, "headline"),
+    # fingerprint groupBy
+    QuerySpec("dedup_exact", q_dedup_exact, "headline"),
+    # minhash signatures + LSH bucket join
+    QuerySpec("dedup_minhash", q_dedup_minhash, "headline"),
+    # vectorized simhash + capped banded self-join
+    QuerySpec("dedup_simhash", q_dedup_simhash, "headline"),
+    # batched matmul scoring + two-stage topk
+    QuerySpec("ann_bruteforce", q_ann_bruteforce, "headline"),
+    # timestamp truncation agg
+    QuerySpec("events_hourly", q_events_hourly, "headline"),
+    # window functions
+    QuerySpec("sessionize", q_sessionize, "headline"),
+    # JVM window top-k (the scale path)
+    QuerySpec("topk_native", q_topk_native, "headline"),
+    # explicit-values conditional-agg pivot
+    QuerySpec("pivot", q_pivot, "headline"),
+    # star join: 2-shuffle fact join + broadcast dims
+    QuerySpec("join_revenue", q_join_revenue, "headline"),
+    # cumulative window aggregation
+    QuerySpec("running_total", q_running_total, "headline"),
+    # composite text-quality expression pipeline
+    QuerySpec("quality_score", q_quality_score, "headline"),
+    # union-marker windowed as-of join
+    QuerySpec("asof_join", q_asof_join, "headline"),
+    # bucketized interval-containment join
+    QuerySpec("range_join", q_range_join, "headline"),
+    # composed cleaning pipeline (2-shuffle end-to-end)
+    QuerySpec("clean_corpus", q_clean_corpus, "headline"),
+    # changelog compaction via 2-phase max_by
+    QuerySpec("cdc_compact", q_cdc_compact, "headline"),
+    # conditional frame-bounded window funnel
+    QuerySpec("funnel", q_funnel, "headline"),
+    # cohort matrix: min-agg + skinny join
+    QuerySpec("retention", q_retention, "headline"),
+    # SQL surface: verbatim shared-dialect star join
+    QuerySpec("sql_revenue", q_sql_revenue, "headline"),
+    # chunk-level boilerplate stats (explode + 2 aggs)
+    QuerySpec("chunk_dedup", q_chunk_dedup, "headline"),
+    # scalable global permutation index
+    QuerySpec("shuffle_pos", q_shuffle_pos, "headline"),
+    # exact repeated-substring spans (posting lists)
+    QuerySpec("dup_spans", q_dup_spans, "headline"),
+    # incremental MERGE: delta compaction + anti join
+    QuerySpec("merge_upsert", q_merge_upsert, "headline"),
+    # classic star join + pushed dates + top-10
+    QuerySpec("tpch_q3", q_tpch_q3, "headline"),
+    # 6-way star, broadcast dims, AQE supplier
+    QuerySpec("tpch_q5", q_tpch_q5, "headline"),
+    # HAVING self-agg semi-join pruning
+    QuerySpec("tpch_q18", q_tpch_q18, "headline"),
+    # unigram LM: explode + vocab join + agg
+    QuerySpec("perplexity", q_perplexity, "headline"),
+    # conditional LM: transition + context joins
+    QuerySpec("bigram_perplexity", q_bigram_perplexity, "headline"),
+    # span apply: posting lists + positional cut
+    QuerySpec("remove_dup_spans", q_remove_dup_spans, "headline"),
+    # C4 line dedup: count + join-back + reassembly
+    QuerySpec("remove_dup_lines", q_remove_dup_lines, "headline"),
+    # composed: line dedup -> LM gate -> yield
+    QuerySpec("curate_corpus", q_curate_corpus, "headline"),
+    # train-once: sign corpus, write 2 bucketed tables
+    QuerySpec("minhash_firewall_build", bench_minhash_firewall_build, "once",
+              registry=False),
+    # query-many: pruned bucketed scan + broadcast joins
+    QuerySpec("minhash_firewall_probe", bench_minhash_firewall_probe,
+              "headline", registry=False),
+    # z-value expr + clustered write + footer audit
+    QuerySpec("zorder_extents", q_zorder_extents, "headline"),
+    # per-language perplexity gate (CCNet-style)
+    QuerySpec("curate_corpus_v2", q_curate_corpus_v2, "headline"),
+    # skew-sliced as-of join (hot-key parallel path)
+    QuerySpec("asof_sliced", q_asof_sliced, "headline"),
+    # fixed-point centroid-distance mislabel audit
+    QuerySpec("label_outliers", q_label_outliers, "headline"),
+    # composed: outliers -> exact 5-NN label vote
+    QuerySpec("mislabel_knn", q_mislabel_knn, "headline"),
+    # concat-and-chunk training-sequence manifest
+    QuerySpec("pack_sequences", q_pack_sequences, "headline"),
+    # SemDeDup: cluster + within-cluster drop
+    QuerySpec("semantic_dedup", q_semantic_dedup, "headline"),
+    # composed: dedup -> LM gate -> packed seqs
+    QuerySpec("corpus_to_sequences", q_corpus_to_sequences, "headline"),
+    # box-query footer-prune audit over the layout
+    QuerySpec("zorder_pruning", q_zorder_pruning, "headline"),
+    # greedy subword encode (Arrow mapInPandas)
+    QuerySpec("bpe_token_count", q_bpe_token_count, "headline"),
+    # packing budgeted in tokenizer tokens
+    QuerySpec("pack_bpe_sequences", q_pack_bpe_sequences, "headline"),
+    # int8-quantized integer-exact MIPS top-k
+    QuerySpec("ann_int8", q_ann_int8, "headline"),
+    # hashed log-odds train + broadcast-join score
+    QuerySpec("quality_classifier", q_quality_classifier, "headline"),
+    # alpha-sampling rebalance, in-plan rates
+    QuerySpec("temperature_mixture", q_temperature_mixture, "headline"),
+    # classifier train -> score -> top-half cut
+    QuerySpec("curate_corpus_v3", q_curate_corpus_v3, "headline"),
+    # integer rule verdicts, 1 projection + 1 agg
+    QuerySpec("gopher_rules", q_gopher_rules, "headline"),
+    # incremental manifest fold-in (no repack)
+    QuerySpec("pack_extend", q_pack_extend, "headline"),
+    # build+extend+probe Bloom membership lifecycle
+    QuerySpec("bloom_firewall", q_bloom_firewall, "headline"),
+    # line-level C4 cleaner profile, 1 proj + 1 agg
+    QuerySpec("c4_rules", q_c4_rules, "headline"),
+    # one-time: Bloom + MinHash index builds
+    QuerySpec("gate_build", bench_gate_build, "once", registry=False),
+    # recurring: Bloom/MinHash probes + rule screens
+    QuerySpec("gate_probe", bench_gate_probe, "headline", registry=False),
+    # extend-lifecycle generation monitor (1 agg)
+    QuerySpec("bloom_gen_stats", q_bloom_gen_stats, "headline"),
+    # composed stateless streaming admission gate
+    QuerySpec("stream_ingest_gate", q_stream_ingest_gate, "headline"),
+    # BPE vocab induction: distributed dict + merges
+    QuerySpec("bpe_train", q_bpe_train, "headline"),
+    # recurring: screens + per-batch MinHash probe + parquet sink
+    QuerySpec("stream_gate_v2_probe", bench_stream_gate_v2_probe, "headline",
+              registry=False),
+    # compaction policy + expected_fpr monitor
+    QuerySpec("bloom_compact_roundtrip", q_bloom_compact_roundtrip,
+              "headline"),
+    # train -> learned-inventory encode composition
+    QuerySpec("bpe_train_encode", q_bpe_train_encode, "headline"),
+    # stream-static broadcast enrichment rollup
+    QuerySpec("stream_enrich", q_stream_enrich, "headline"),
+    # DSIR importance resampling toward a target
+    QuerySpec("dsir_select", q_dsir_select, "headline"),
+    # component: Bloom word-table build alone
+    QuerySpec("gate_build_bloom", bench_gate_build_bloom, "once",
+              registry=False),
+    # component: MinHash sign + 2 bucketed writes
+    QuerySpec("gate_build_minhash", bench_gate_build_minhash, "once",
+              registry=False),
+    # component: the approx_count_distinct pass of m_bits="auto"
+    QuerySpec("gate_build_autosize", bench_gate_build_autosize, "once",
+              registry=False),
+    # overfull -> rebuild-at-suggested-geometry
+    QuerySpec("bloom_resize_roundtrip", q_bloom_resize_roundtrip, "once"),
+    # curate -> encode IDs -> pack token streams
+    QuerySpec("corpus_to_token_ids", q_corpus_to_token_ids, "headline"),
+    # DSIR at the paper's (1,2)-gram feature set
+    QuerySpec("dsir_select_bigram", q_dsir_select_bigram, "headline"),
+    # incremental encode-delta/extend-shards arc
+    QuerySpec("token_ids_extend", q_token_ids_extend, "headline"),
+    # exact-integer micronat entropy bottom-k
+    QuerySpec("entropy_filter", q_entropy_filter, "headline"),
+    # BIGINT windowed moments trailing z-score
+    QuerySpec("anomaly_zscore", q_anomaly_zscore, "headline"),
+    # PSI drift monitor, two n_bins-row aggs
+    QuerySpec("drift_psi", q_drift_psi, "headline"),
+    # equal-depth PSI: derive edges + monitor
+    QuerySpec("drift_psi_quantile", q_drift_psi_quantile, "headline"),
+    # per-micro-batch PSI vs frozen reference
+    QuerySpec("stream_drift", q_stream_drift, "headline"),
+    # manifest window fill: rewrite-task plan
+    QuerySpec("compaction_plan", q_compaction_plan, "headline"),
+    # lead-window Markov pair matrix
+    QuerySpec("event_transitions", q_event_transitions, "headline"),
+    # persist -> reload -> score with planted drift
+    QuerySpec("psi_lifecycle", q_psi_lifecycle, "headline"),
+    # per-batch entropy/PSI/classifier quality row
+    QuerySpec("quality_dashboard", q_quality_dashboard, "headline"),
+    # decode(encode(corpus)) losslessness arc
+    QuerySpec("token_ids_roundtrip", q_token_ids_roundtrip, "headline"),
+    # ANALYZE-style exact per-column stats, 1 pass
+    QuerySpec("profile_corpus", q_profile_corpus, "headline"),
+    # perceptual dedup: decode + sign + pair
+    QuerySpec("image_near_dup_scaled", bench_image_near_dup_scaled, "headline",
+              registry=False),
+    # IVF lifecycle: build slice + extend + probe
+    QuerySpec("ann_ivf_extend", q_ann_ivf_extend, "headline"),
+    # retrain trigger: per-cell occupancy/displacement
+    QuerySpec("ivf_drift", q_ivf_drift, "headline"),
+    # frame-level aHash: decode + sign + frame census
+    QuerySpec("video_near_dup", q_video_near_dup, "headline"),
+    # energy-plane aHash: cross-codec WAV dedup
+    QuerySpec("audio_near_dup", q_audio_near_dup, "headline"),
+    # persisted decontamination index lifecycle
+    QuerySpec("contamination_firewall", q_contamination_firewall, "headline"),
+    # removal half: probe + anti-join + yield
+    QuerySpec("decontaminate_corpus", q_decontaminate_corpus, "headline"),
+    # streaming twin: per-batch index probe
+    QuerySpec("stream_decontaminate", q_stream_decontaminate, "headline"),
+    # token-budgeted mixing: bucketed prefix cut
+    QuerySpec("token_budget_sample", q_token_budget_sample, "headline"),
+    # corpus-scaled twin: WAV gen + sign + pair
+    QuerySpec("audio_near_dup_scaled", bench_audio_near_dup_scaled, "headline",
+              registry=False),
+    # corpus-scaled twin: AVI gen + sign + census
+    QuerySpec("video_near_dup_scaled", bench_video_near_dup_scaled, "headline",
+              registry=False),
+    # eval-media perceptual firewall arc
+    QuerySpec("media_contamination_firewall", q_media_contamination_firewall,
+              "headline"),
+    # IVF-PQ: residual codebooks + BIGINT ADC probe
+    QuerySpec("ann_ivf_pq", q_ann_ivf_pq, "headline"),
+    # integer-DCT pHash: trim + pool + DCT + pair
+    QuerySpec("image_near_dup_phash", q_image_near_dup_phash, "headline"),
+    # vocabulary-drift monitor: fallback accounting
+    QuerySpec("tokenizer_oov", q_tokenizer_oov, "headline"),
+    # corpus-scaled eval-media firewall build+probe
+    QuerySpec("media_firewall_scaled", bench_media_firewall_scaled, "headline",
+              registry=False),
+    # registry rows the bench does not time
+    QuerySpec("length_histogram", q_length_histogram),
+    QuerySpec("fingerprint", q_fingerprint),
+    QuerySpec("events_json", q_events_json),
+    QuerySpec("anti_join", q_anti_join),
+    QuerySpec("good_rows", q_good_rows),
+    QuerySpec("null_propagating", q_null_propagating),
+    QuerySpec("combine_key_maps", q_combine_key_maps),
+    QuerySpec("collect_sorted", q_collect_sorted),
+    QuerySpec("rollup_revenue", q_rollup_revenue),
+    QuerySpec("cube_revenue", q_cube_revenue),
+    QuerySpec("split_on_data", q_split_on_data),
+    QuerySpec("assign_keys", q_assign_keys),
+    QuerySpec("assign_keys_and_data", q_assign_keys_and_data),
+    QuerySpec("fold_all", q_fold_all),
+    QuerySpec("fold_all_monoid", q_fold_all_monoid),
+    QuerySpec("pandas_fold", q_pandas_fold),
+    QuerySpec("frame_concat", q_frame_concat),
+    QuerySpec("to_frame", q_to_frame),
+    QuerySpec("read_csv_permissive", q_read_csv_permissive),
+    QuerySpec("stream_join", q_stream_join),
+    QuerySpec("stream_dedup", q_stream_dedup),
+    QuerySpec("media_features", q_media_features),
+    QuerySpec("stream_sliding", q_stream_sliding),
+    QuerySpec("ann_srp", q_ann_srp),
+    QuerySpec("sketch_distinct", q_sketch_distinct),
+    QuerySpec("ann_bruteforce_joined", q_ann_bruteforce_joined),
+    QuerySpec("stream_near_dup", q_stream_near_dup),
+    QuerySpec("corpus_report", q_corpus_report),
+    QuerySpec("sketch_quantiles", q_sketch_quantiles),
+    QuerySpec("weighted_sample", q_weighted_sample),
+    QuerySpec("leakage_safe_split", q_leakage_safe_split),
+    QuerySpec("repetition_stats", q_repetition_stats),
+    QuerySpec("redact_pii", q_redact_pii),
+    QuerySpec("top_ngrams", q_top_ngrams),
+    QuerySpec("sketch_heavy_hitters", q_sketch_heavy_hitters),
+    QuerySpec("token_stats", q_token_stats),
+    QuerySpec("ann_ivf", q_ann_ivf),
+    QuerySpec("ann_ivf_indexed", q_ann_ivf_indexed),
+    QuerySpec("asof_forward", q_asof_forward),
+    QuerySpec("media_meta", q_media_meta),
+    QuerySpec("scd2", q_scd2),
+    QuerySpec("bm25", q_bm25),
+    QuerySpec("contamination", q_contamination),
+    QuerySpec("chunk_docs", q_chunk_docs),
+    QuerySpec("embedding_neardup", q_embedding_neardup),
+    QuerySpec("dedup_clusters", q_dedup_clusters),
+    QuerySpec("pack_shards", q_pack_shards),
+    QuerySpec("train_test_split", q_train_test_split),
+    QuerySpec("salted_agg", q_salted_agg),
+    QuerySpec("percentile_native", q_percentile_native),
+    QuerySpec("unpivot", q_unpivot),
+    QuerySpec("asof_tolerance", q_asof_tolerance),
+    QuerySpec("dedup_ngram_jaccard", q_dedup_ngram_jaccard),
+    QuerySpec("sample_stratified", q_sample_stratified),
+    QuerySpec("mixture_weights", q_mixture_weights),
+    QuerySpec("stream_hourly", q_stream_hourly),
+    QuerySpec("stream_sessions", q_stream_sessions),
+    QuerySpec("stream_stateful", q_stream_stateful),
+    QuerySpec("minhash_firewall", q_minhash_firewall),
+    QuerySpec("strip_markup", q_strip_markup),
+    QuerySpec("normalize_punct", q_normalize_punct),
+    QuerySpec("stream_classifier", q_stream_classifier),
+    QuerySpec("ingest_gate", q_ingest_gate),
+    QuerySpec("stream_bloom", q_stream_bloom),
+    QuerySpec("sketch_cms", q_sketch_cms),
+    QuerySpec("kmv_overlap", q_kmv_overlap),
+    QuerySpec("corpus_diff", q_corpus_diff),
+    QuerySpec("stream_ingest_gate_v2", q_stream_ingest_gate_v2),
+    QuerySpec("image_near_dup", q_image_near_dup),
+)
+if len({s.name for s in QUERY_TABLE}) != len(QUERY_TABLE):
+    raise ValueError("QUERY_TABLE has a duplicate name")
 
 
 def _sql_tokens(col: str) -> str:

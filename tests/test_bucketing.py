@@ -88,9 +88,9 @@ def test_native_topk_matches_grouped_map(spark, lineitem):
         lineitem, ["l_returnflag"],
         [F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber")],
         k=3, payload=["l_orderkey", "l_linenumber", "l_extendedprice"])
-    import __spark_entry__ as E
+    import query_rigs as R
     import os
-    gm = E.q_topk_per_group(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
+    gm = R.q_topk_per_group(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
                                                   "/root/testdata/sf0.001"))
     a = sorted(tuple(r) for r in native.collect())
     b = sorted(tuple(r) for r in gm.collect())

@@ -26,67 +26,3 @@ def test_porting_example_runs(spark, idx):
     exec(compile(_BLOCKS[idx], f"PORTING.md block {idx}", "exec"), ns)
     assert ns.get("result"), f"block {idx} did not produce a truthy `result`"
 
-
-def test_bench_headline_queries_exist():
-    """bench.py's HEADLINE list must stay in sync with the registry —
-    a renamed query would otherwise only fail at driver bench time."""
-    import __spark_entry__ as entry_mod
-    import bench
-    known = set(entry_mod.queries()) | set(entry_mod.bench_only_queries())
-    missing = [n for n in bench.HEADLINE if n not in known]
-    assert not missing, missing
-
-
-def test_bench_final_line_bounded():
-    """The driver parses bench output from a ~2,000-char stdout tail;
-    r10's 85-query final line overflowed it (BENCH_r10 parsed: null).
-    The final line must stay under budget and parseable at ANY suite
-    size, truncating the per-query map (never the headline numbers)."""
-    import json
-
-    import bench
-
-    for n_queries in (10, 85, 200, 500):
-        timings = {f"query_name_number_{i:03d}": 1.234 + i * 0.017
-                   for i in range(n_queries)}
-        line = bench._final_line("headline-suite wall time at sf0.1",
-                                 123.456, timings, 0.179, 0.1)
-        assert len(line) <= bench._FINAL_LINE_BUDGET
-        rec = json.loads(line)
-        assert rec["value"] == 123.456
-        assert rec["sf"] == 0.1
-        assert rec["calibration"] == 0.179
-        kept = len(rec["queries"])
-        assert kept + rec.get("queries_omitted", 0) == n_queries
-        assert kept > 0
-        # truncation is by RECORD AGE (r12 verdict #3): never-recorded
-        # names (these synthetic ones match no BENCH_r* history) rank
-        # by reversed suite position — when the map is cut, the
-        # surviving SET is the suite tail (debuts still always reach
-        # the driver's record, the r11 guarantee)
-        if kept < n_queries:
-            assert set(rec["queries"]) == set(list(timings)[-kept:])
-
-
-def test_bench_final_line_rotates_omitted_tail(monkeypatch):
-    """r12 verdict #3: the omitted set must ROTATE — queries with the
-    stalest driver-recorded number outrank freshly-recorded ones, and
-    never-recorded debuts outrank everything."""
-    import json
-
-    import bench
-
-    timings = {f"q{i:03d}": 1.0 for i in range(200)}
-    ages = {f"q{i:03d}": 12 for i in range(0, 100)}       # fresh records
-    ages.update({f"q{i:03d}": 10 for i in range(100, 150)})  # stale
-    # q150..q199: never recorded (debut-like)
-    monkeypatch.setattr(bench, "_driver_record_ages", lambda: ages)
-    line = bench._final_line("m", 1.0, timings, 0.2, 0.1)
-    rec = json.loads(line)
-    kept = set(rec["queries"])
-    assert len(line) <= bench._FINAL_LINE_BUDGET
-    # every never-recorded and every stale name survives before ANY
-    # freshly-recorded name does
-    assert all(f"q{i:03d}" in kept for i in range(100, 200))
-    dropped = set(timings) - kept
-    assert dropped and dropped <= {f"q{i:03d}" for i in range(0, 100)}

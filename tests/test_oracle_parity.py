@@ -27,8 +27,14 @@ _os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
 
 ORACLES = entry_mod.oracle_sql()
 QUERIES = entry_mod.queries()
-WITH_ORACLE = sorted(set(QUERIES) & set(ORACLES))
+WITH_ORACLE = sorted(ORACLES)
 ROWS_ONLY = sorted(set(QUERIES) - set(ORACLES))
+
+
+def test_every_oracle_has_a_query():
+    """A twin left behind by a renamed or removed query would otherwise
+    silently drop out of the parity run."""
+    assert set(ORACLES) <= set(QUERIES), sorted(set(ORACLES) - set(QUERIES))
 
 
 @pytest.fixture(scope="module")

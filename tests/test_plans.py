@@ -115,12 +115,12 @@ def test_tpch_q3_plan_shape(spark):
     """Q3's scale contract: date filters reach the parquet scans, the
     pruned customer dim broadcasts, and the global top-10 lowers to
     TakeOrderedAndProject (partial per-partition top-k, no full sort)."""
-    import __spark_entry__ as E
+    import query_rigs as R
     from frames_map_reduce_spark.plans import (
         executed_plan, has_broadcast_join, pushed_filters)
     from tests.conftest import SF_DIR
 
-    df = E.q_tpch_q3(spark, SF_DIR)
+    df = R.q_tpch_q3(spark, SF_DIR)
     pushed = " ".join(pushed_filters(df))
     assert "o_orderdate" in pushed and "l_shipdate" in pushed
     assert has_broadcast_join(df)
@@ -132,11 +132,11 @@ def test_perplexity_plan_shape(spark):
     """The LM-score query's scale contract: the top-20 lowers to
     TakeOrderedAndProject (no global sort) and the scan prunes to the
     two columns the query touches."""
-    import __spark_entry__ as E
+    import query_rigs as R
     from frames_map_reduce_spark.plans import explain_formatted, read_schemas
     from tests.conftest import SF_DIR
 
-    df = E.q_perplexity(spark, SF_DIR)
+    df = R.q_perplexity(spark, SF_DIR)
     assert "TakeOrderedAndProject" in explain_formatted(df)
     schemas = read_schemas(df)
     assert schemas and all(set(s) <= {"doc_id", "text"} for s in schemas), \
@@ -149,11 +149,11 @@ def test_curate_v2_threshold_join_broadcasts(spark):
     handful of languages over a web corpus is the textbook hot-key
     join), and the scan side prunes to the columns the pipeline
     touches."""
-    import __spark_entry__ as E
+    import query_rigs as R
     from frames_map_reduce_spark.plans import explain_formatted, read_schemas
     from tests.conftest import SF_DIR
 
-    df = E.q_curate_corpus_v2(spark, SF_DIR)
+    df = R.q_curate_corpus_v2(spark, SF_DIR)
     plan = explain_formatted(df)
     # the threshold join keys on pred_lang alone and must be broadcast
     import re

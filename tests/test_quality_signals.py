@@ -377,12 +377,12 @@ def test_psi_lifecycle_planted_drift_crosses_alert(spark):
     own persisted constants is exactly zero drift (no alert); the
     planted +300 n_chars shift must cross the conventional 0.25 alert
     line; and drift is monotone across the three staged batches."""
-    import __spark_entry__ as entry_mod
+    import query_rigs
 
     from tests.conftest import SF_DIR
 
     rows = {r.batch_id: r
-            for r in entry_mod.q_psi_lifecycle(spark, SF_DIR).collect()}
+            for r in query_rigs.q_psi_lifecycle(spark, SF_DIR).collect()}
     assert set(rows) == {0, 1, 2}
     assert rows[0].psi_micro == 0 and rows[0].alert is False
     assert rows[2].psi_micro > 250_000 and rows[2].alert is True

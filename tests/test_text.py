@@ -206,12 +206,14 @@ def test_sketch_distinct_rel_err(spark):
     query reduces them to the deterministic within_tol bit that the
     DuckDB oracle asserts as constant 1."""
     import __spark_entry__ as entry_mod
+    import query_rigs
     from tests.conftest import SF_DIR
-    rows = entry_mod._sketch_distinct_full(spark, SF_DIR).collect()
+    rows = query_rigs._sketch_distinct_full(spark, SF_DIR).collect()
     assert rows
     for r in rows:
         # contract bound is 3*rsd = 0.06; observed is comfortably tighter
-        assert r["rel_err"] is not None and r["rel_err"] <= 3 * entry_mod._SKETCH_RSD, \
+        assert (r["rel_err"] is not None
+                and r["rel_err"] <= 3 * query_rigs._SKETCH_RSD), \
             dict(r.asDict())
     pub = entry_mod.queries()["sketch_distinct"](spark, SF_DIR).collect()
     assert {r["within_tol"] for r in pub} == {1}

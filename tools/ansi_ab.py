@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E  # noqa: E402
+import query_rigs as R  # noqa: E402
 from frames_map_reduce_spark.session import get_spark  # noqa: E402
 
 DRIFTED = [
@@ -46,8 +46,7 @@ def main() -> None:
     spark = get_spark("fmr-ansi-ab",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    queries = E.queries()
-    queries.update(E.bench_only_queries())
+    queries = {s.name: s.rig for s in R.QUERY_TABLE}
 
     # warm JVM + Arrow worker pool exactly like bench.py
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")

@@ -21,7 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E  # noqa: E402
+import query_rigs as R  # noqa: E402
 from frames_map_reduce_spark.session import get_spark  # noqa: E402
 
 MARKERS = [
@@ -36,11 +36,7 @@ def main() -> None:
     spark = get_spark("fmr-dup-sweep",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(E.queries())
-    try:
-        qs.update(E.bench_only_queries())
-    except AttributeError:
-        pass
+    qs = {s.name: s.rig for s in R.QUERY_TABLE}
     flagged = []
     for name, fn in sorted(qs.items()):
         try:

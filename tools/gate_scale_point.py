@@ -33,7 +33,7 @@ from frames_map_reduce_spark.operators import classifier as CLF
 from frames_map_reduce_spark.operators import dedup as DD
 from frames_map_reduce_spark.session import get_spark
 
-QCLF_BUCKETS = 1024  # the registry classifier capacity (__spark_entry__)
+QCLF_BUCKETS = 1024  # the registry classifier capacity (query_rigs)
 
 
 def point(spark, sf_dir: str, tag: str) -> dict:

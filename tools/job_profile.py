@@ -1,5 +1,5 @@
-"""Job-census profiler (optimization guide §1.1/§1.5): run HEADLINE
-queries with the Spark event log enabled and report, per query, the
+"""Job-census profiler (optimization guide §1.1/§1.5): run QUERY_TABLE
+rows with the Spark event log enabled and report, per query, the
 job-level structure — how many driver actions ran, how long each job
 took, and how much wall time fell in DRIVER GAPS between jobs (plan
 compile, py4j round-trips, catalog ops, pure-Python work).  At sf0.1
@@ -26,7 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E  # noqa: E402
+import query_rigs as R  # noqa: E402
 from frames_map_reduce_spark.session import get_spark  # noqa: E402
 
 
@@ -62,8 +62,7 @@ def main() -> None:
         "spark.eventLog.dir": log_dir,
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = E.queries()
-    queries.update(E.bench_only_queries())
+    queries = {s.name: s.rig for s in R.QUERY_TABLE}
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li.count()

@@ -5,7 +5,7 @@ exact Spark counterpart (HUGEINT, UHUGEINT, DECIMAL, unsigned ints).
 Why: the driver's correctness hash covers column TYPES, and DuckDB
 silently widens e.g. ``sum(BIGINT)`` to HUGEINT — values identical,
 hash red (the round-7 `label_outliers` failure class).  The repo
-convention (__spark_entry__.py header) is that integer-ish outputs are
+convention (query_rigs.py header) is that integer-ish outputs are
 cast to BIGINT on BOTH sides; this lint makes the class impossible to
 reintroduce.
 

@@ -1,6 +1,6 @@
 """Optimization-round measurement harness (guide §1).
 
-Times individual HEADLINE queries with the bench's protocol (clearCache
+Times individual QUERY_TABLE rows with the bench's protocol (clearCache
 per sample, perf_counter around fn+collect) WITHOUT the full-suite cost,
 and captures ``.explain("formatted")`` for the returned plan of each
 query into ``plans/<tag>/<query>_<suffix>.txt``.
@@ -28,7 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E  # noqa: E402
+import query_rigs as R  # noqa: E402
 from frames_map_reduce_spark.session import get_spark  # noqa: E402
 
 
@@ -45,8 +45,7 @@ def main() -> None:
     spark = get_spark("fmr-opt-measure",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    queries = E.queries()
-    queries.update(E.bench_only_queries())
+    queries = {s.name: s.rig for s in R.QUERY_TABLE}
 
     # same warmup as bench.py so the first sample isn't session startup
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")

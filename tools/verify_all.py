@@ -1,8 +1,8 @@
-"""One-command release check (r6 verdict #8): chain every gate the
-rounds rely on and write a single VERIFY.json, so future rounds (and
-the driver) get the whole green wall from one entry point.
+"""One-command release check: chain every correctness and bench gate
+and write a single VERIFY.json, so the whole green wall comes from one
+entry point.
 
-    python tools/verify_all.py              # full: all four gates
+    python tools/verify_all.py              # full: all five gates
     python tools/verify_all.py --fast       # skip the sf1.0 scale gate
 
 Gates, in order (each recorded with wall time and pass/fail; a failing
@@ -48,37 +48,9 @@ def run_gate(name: str, cmd: list[str], env: dict | None = None) -> dict:
             "seconds": took, "tail": tail}
 
 
-def provenance_freshness_gate() -> dict:
-    """r8 verdict #1: the committed PROVENANCE.json lagged the newest
-    CORRECTNESS file three rounds running (the ledger was regenerated
-    before the driver emitted the round's file).  Fail the wall unless
-    the ledger's ``generated_from`` includes every CORRECTNESS_r*.json
-    currently on disk — the fix is one ``python tools/provenance.py``."""
-    import glob
-    import time as _time
-    t0 = _time.time()
-    have = sorted(os.path.basename(p) for p in
-                  glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    try:
-        with open(os.path.join(REPO, "PROVENANCE.json")) as f:
-            ledger = json.load(f)
-        seen = set(ledger.get("generated_from", []))
-        missing = [p for p in have if p not in seen]
-        ok = not missing
-        tail = ("ledger is fresh" if ok else
-                f"PROVENANCE.json lags {missing} — run tools/provenance.py")
-    except (OSError, ValueError) as exc:
-        ok, tail = False, f"PROVENANCE.json unreadable: {exc}"
-    print(f"\n=== gate: provenance_fresh: {tail}", flush=True)
-    return {"cmd": "(inline) PROVENANCE.generated_from covers "
-                   "CORRECTNESS_r*.json", "ok": ok,
-            "seconds": round(_time.time() - t0, 1), "tail": tail}
-
-
 def main() -> None:
     fast = "--fast" in sys.argv
     gates: dict[str, dict] = {}
-    gates["provenance_fresh"] = provenance_freshness_gate()
     gates["oracle_types"] = run_gate(
         "oracle_types", [sys.executable, "tools/lint_oracle_types.py"])
     gates["pytest"] = run_gate(
