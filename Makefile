@@ -1,6 +1,12 @@
 # One-command gates. `make verify` chains the oracle-type lint → pytest →
-# sf0.01 parity → bench → sf1.0 scale parity and writes VERIFY.json.
-.PHONY: verify verify-fast test parity bench scale stress-classifier
+# sf0.01 parity → perfbench → bench → sf1.0 scale parity and writes
+# VERIFY.json.
+.PHONY: verify verify-fast test parity perfbench bench scale stress-classifier
+
+# the workloads BENCHMARK.json declares
+PERFBENCH_WORKLOADS = $(shell python3 -c "import json; \
+	print(' '.join(w['name'] for w in \
+	json.load(open('BENCHMARK.json'))['workloads']))")
 
 verify:
 	python tools/verify_all.py
@@ -14,6 +20,15 @@ test:
 parity:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \
 	python -m pytest tests/test_oracle_parity.py -q
+
+# one repo-benchmark run per workload (seed 1, end-to-end metrics); fails
+# on the first run that exits non-zero (a failed operation or check)
+perfbench:
+	@for w in $(PERFBENCH_WORKLOADS); do \
+	    echo "perfbench: $$w"; \
+	    python3 perfbench/run.py --workload $$w --seed 1 --seconds 1 \
+	        --trace 0 || exit 1; \
+	done
 
 bench:
 	python bench.py

@@ -279,12 +279,15 @@ def extend_bloom_index(corpus_delta: DataFrame, table: str, text_col: str,
     table) BEFORE extending — a verdict plan re-evaluated after the
     extend screens against the already-extended filter and reports
     every extended document as a member."""
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import (
+        table_num_buckets,
+        write_bucketed,
+    )
 
     require_columns(corpus_delta, [text_col])
     spark = corpus_delta.sparkSession
     _require_bloom_spec(spark, table, m_bits, k)
-    nb = _bloom_num_buckets(spark, table)
+    nb = table_num_buckets(spark, f"{table}_words")
     write_bucketed(_word_rows(corpus_delta, text_col, m_bits, k),
                    f"{table}_words", ["_word"], nb, mode="append")
 
@@ -331,9 +334,12 @@ def compact_bloom_index(spark: SparkSession, table: str) -> None:
     datasets under ``_old`` / ``_compact`` names and recovery is one
     manual rename; a stale ``_old`` location from a previous crash is
     cleared through the Hadoop FileSystem API."""
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import (
+        table_num_buckets,
+        write_bucketed,
+    )
 
-    nb = _bloom_num_buckets(spark, table)
+    nb = table_num_buckets(spark, f"{table}_words")
     spec = _bloom_spec(spark, table)
     merged = (spark.table(f"{table}_words")
                    .groupBy("_word").agg(F.bit_or("_bits").alias("_bits")))
@@ -382,13 +388,16 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     plans created before the rebuild hold the old snapshot and must be
     re-created (same contract as compact)."""
     spark = corpus.sparkSession
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import (
+        table_num_buckets,
+        write_bucketed,
+    )
 
     require_columns(corpus, [text_col])
     # resolve the bucket spec from the LIVE table first — even under an
     # explicit n_buckets override: rebuilding a nonexistent index is a
     # build, and must fail loudly BEFORE any write (not mid-swap)
-    live_nb = _bloom_num_buckets(spark, table)
+    live_nb = table_num_buckets(spark, f"{table}_words")
     nb = live_nb if n_buckets is None else int(n_buckets)
     if m_bits == "auto":
         if k is not None:
@@ -475,10 +484,11 @@ def bloom_index_generation_stats(spark: SparkSession, table: str,
         raise ValueError(f"max_read_amp must be >= 1, got {max_read_amp}")
     spec = _bloom_spec(spark, table)
     if spec is None:
-        # Same strictness as _bloom_num_buckets (r8 ADVICE): a word
-        # table without a recorded geometry cannot report m_bits/fill —
-        # assuming DEFAULT_M_BITS would silently misreport the fill (and
-        # hence the FPR) for any non-default-geometry index.
+        # Same strictness as sources.table_num_buckets (r8 ADVICE): a
+        # word table without a recorded geometry cannot report
+        # m_bits/fill — assuming DEFAULT_M_BITS would silently misreport
+        # the fill (and hence the FPR) for any non-default-geometry
+        # index.
         raise ValueError(
             f"`{table}_words` has no recorded bloom geometry "
             f"(fmr.bloom.m_bits) — it was not created by "
@@ -650,23 +660,6 @@ def suggest_geometry(n_items: int, target_fpr: float) -> dict:
             fpr_at_n = occ_fpr(m_bits, k)
     return {"m_bits": m_bits, "k": k, "word_rows": m_bits // 32,
             "bytes": m_bits // 8, "fpr_at_n": fpr_at_n}
-
-
-def _bloom_num_buckets(spark: SparkSession, table: str) -> int:
-    """The bucket count the catalog recorded for ``{table}_words`` — the
-    catalog, not a caller parameter, owns the bucket spec.  A word
-    table WITHOUT a recorded bucket spec (externally created, or
-    written unbucketed) raises rather than assuming one: appending
-    under a guessed spec would silently break the probe's pruned
-    bucketed-scan contract (r7 ADVICE)."""
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table}_words") \
-                .filter(F.col("col_name") == "Num Buckets").first()
-    if desc is None:
-        raise ValueError(
-            f"`{table}_words` has no 'Num Buckets' in the catalog — it "
-            f"was not created by build_bloom_index (or is unbucketed); "
-            f"refusing to extend under an assumed bucket spec")
-    return int(desc["data_type"])
 
 
 def _set_bloom_spec(spark: SparkSession, table: str,

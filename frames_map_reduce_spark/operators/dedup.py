@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 from frames_map_reduce_spark.functions.text import char_shingles, fingerprint, wordish_tokens
 from frames_map_reduce_spark.partitioning import ensure_parallelism
 from frames_map_reduce_spark.schema import require_columns
-from frames_map_reduce_spark.session import drain_persist_cache
 
 _P31 = (1 << 31) - 1  # Mersenne prime 2^31-1: hash universe for minhash
 
@@ -588,10 +587,16 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     tests/test_dedup.py::test_minhash_index_rebuild_lifecycle."""
     from pyspark import StorageLevel
 
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import (
+        table_num_buckets,
+        write_bucketed,
+    )
 
     require_columns(corpus_delta, [text_col, id_col])
-    spark = corpus_delta.sparkSession
+    # append must reuse the table's recorded bucket count — read it
+    # from the catalog (before any signing) rather than trusting a
+    # caller parameter
+    nb = table_num_buckets(corpus_delta.sparkSession, f"{table}_buckets")
     sig = _shingle_sig_frame(corpus_delta, text_col, id_col, shingle_k,
                              num_perm, seed) \
         .withColumnRenamed(id_col, "ref_id") \
@@ -599,9 +604,6 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     sig.count()
     try:
         banded = _minhash_banded(sig, "ref_id", num_perm, bands)
-        # append must reuse the table's recorded bucket count — read it
-        # from the catalog rather than trusting a caller parameter
-        nb = _index_num_buckets(spark, table)
         # independent appends over the materialized cache: overlap them
         # (guide §2.6), same rationale as build_minhash_index's writes
         from concurrent.futures import ThreadPoolExecutor
@@ -617,14 +619,6 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
             fs.result()
     finally:
         sig.unpersist()
-
-
-def _index_num_buckets(spark, table: str) -> int:
-    """The bucket count Spark recorded for ``{table}_buckets`` at build
-    time — the catalog, not a caller parameter, owns the bucket spec."""
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table}_buckets") \
-                .filter(F.col("col_name") == "Num Buckets").first()
-    return int(desc["data_type"]) if desc else 64
 
 
 def minhash_index_bucket_stats(spark, table: str,
@@ -676,9 +670,12 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
 
     Cost: one agg + one broadcast semi-join + one bucketed rewrite of
     the (ref_id, _bucket) table — no Python stage, no re-signing."""
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import (
+        table_num_buckets,
+        write_bucketed,
+    )
 
-    nb = _index_num_buckets(spark, table)
+    nb = table_num_buckets(spark, f"{table}_buckets")
     src = spark.table(f"{table}_buckets")
     sizes = src.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
     ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
@@ -702,11 +699,6 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
     spark.sql(f"ALTER TABLE `{table}_buckets` RENAME TO `{old}`")
     spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{table}_buckets`")
     spark.sql(f"DROP TABLE `{old}`")
-
-
-#: the live probe-batch signature cache (at most one entry): see the
-#: cache-lifetime note in :func:`minhash_probe_index`.
-_PROBE_SIG_CACHE: list[DataFrame] = []
 
 
 def minhash_probe_index(spark, table: str, queries: DataFrame,
@@ -735,24 +727,17 @@ def minhash_probe_index(spark, table: str, queries: DataFrame,
     shingle sets and the bucketed shingle table.  ``max_probe_buckets``
     stays the loud driver-collect cap either way.
 
-    Cache lifetime: the incoming batch's signature frame is persisted
+    Lifetime: the incoming batch's signature frame is local-checkpointed
     (the returned lazy plan reads it twice — banding and the verify
-    side — and recomputing would re-pay the Python signing pass), and
-    because the RETURNED plan references it, this function cannot
-    unpersist it before returning.  Instead each probe call unpersists
-    the PREVIOUS probe's signature cache, so a long-lived session holds
-    at most ONE probe batch cached (bounded by the firewall's
-    batch-size contract), not an unbounded accumulation (r5 ADVICE).
-    Callers wanting immediate release can ``spark.catalog.clearCache()``
-    after consuming the result."""
-    from pyspark import StorageLevel
-
+    side — and recomputing would re-pay the Python signing pass).  The
+    bucket collect below materializes it; the blocks belong to the
+    returned frame and are freed by Spark's ContextCleaner once that
+    frame is unreachable, so a later probe never evicts an earlier
+    result.  Checkpointed blocks are not recomputed after an executor
+    loss: the job fails instead of re-running a stage."""
     require_columns(queries, [text_col, id_col])
-    drain_persist_cache(_PROBE_SIG_CACHE)
     qsig = _shingle_sig_frame(queries, text_col, id_col, shingle_k,
-                              num_perm, seed) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _PROBE_SIG_CACHE.append(qsig)
+                              num_perm, seed).localCheckpoint(eager=False)
     qb = _minhash_banded(qsig, id_col, num_perm, bands)
     probed = [r["_bucket"]
               for r in qb.select("_bucket").distinct()
@@ -776,11 +761,6 @@ def minhash_probe_index(spark, table: str, queries: DataFrame,
                          jaccard(F.col("_sh64"), F.col("_qsh"))
                           .alias("jaccard_sim"))
                  .filter(F.col("jaccard_sim") >= threshold))
-
-
-#: the live shingle/prefix caches for the prefix-filter join (at most
-#: one entry each): see the persist note in :func:`ngram_jaccard_pairs`.
-_NGRAM_PREFIX_CACHE: list[DataFrame] = []
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -825,26 +805,24 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
       window, candidate join and verify joins are all block-scoped).
 
     The shingle and prefix frames each feed two or more plan branches,
-    so both are persisted; the returned lazy plan references them, so
-    the swap-cache drains the PREVIOUS call's frames (same bounded
-    lifetime contract as minhash_probe_index)."""
-    from pyspark import StorageLevel
-
+    so both are local-checkpointed; the checkpoints belong to the
+    returned plan and are freed once it is unreachable (same lifetime
+    and executor-loss trade as :func:`minhash_probe_index`).  Under AQE
+    the shuffle stages beneath a lazy checkpoint run when this function
+    is called, not when its result is consumed."""
     if not 0 < threshold:
         raise ValueError(
             f"threshold must be > 0 for the prefix-filter join, got "
             f"{threshold}: at 0 every within-block pair (even with "
             "disjoint shingle sets) qualifies, which only an all-pairs "
             "join can produce")
-    drain_persist_cache(_NGRAM_PREFIX_CACHE)
     shingled = ensure_parallelism(df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), block_col.alias("_blk"),
         char_shingles(F.col(text_col), shingle_k).alias("_sh")))
     blk_sizes = shingled.groupBy("_blk").agg(F.count(F.lit(1)).alias("_n"))
     ok = blk_sizes.filter(F.col("_n") <= max_block).select("_blk")
     shingled = shingled.join(F.broadcast(ok), "_blk") \
-                       .persist(StorageLevel.MEMORY_AND_DISK)
-    _NGRAM_PREFIX_CACHE.append(shingled)
+                       .localCheckpoint(eager=False)
     ex = shingled.select(id_col, "_blk", F.size("_sh").alias("_n_sh"),
                          F.explode("_sh").alias("_s"))
     freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
@@ -859,8 +837,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     prefix = (ex.join(freq, "_s")
                 .withColumn("_pos", F.row_number().over(w))
                 .filter(F.col("_pos") <= p)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    _NGRAM_PREFIX_CACHE.append(prefix)
+                .localCheckpoint(eager=False))
     la = prefix.select("_blk", F.col(id_col).alias("id_a"), "_s",
                        F.col("_pos").alias("_pos_a"),
                        F.col("_n_sh").alias("_n_a"))

@@ -39,18 +39,16 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce as _reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.schema import require_columns
-from frames_map_reduce_spark.session import drain_persist_cache
 
 __all__ = ["pack_shards", "pack_sequences", "pack_sequences_extend",
            "pack_sequences_sql",
            "pack_token_ids", "pack_token_ids_sql",
            "pack_token_ids_extend",
-           "write_packed_shards", "drain_pack_cache"]
+           "write_packed_shards"]
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
@@ -97,55 +95,38 @@ def _resolve_n_buckets(sized: DataFrame, n_buckets: int | str) -> int:
         return 1
     return max(8, min(64, est // _AUTO_BUCKET_BYTES))
 
-# swap-cache for the persisted bucketed frame (same lifetime contract as
-# dedup's shingle caches: the returned plan references it, so each call
-# drains the PREVIOUS call's cache instead of unpersisting its own)
-_PACK_OFFSET_CACHE: list[DataFrame] = []
-
-
-def drain_pack_cache() -> int:
-    """Release every bucketized frame the pack family has persisted and
-    return how many were dropped — the DOCUMENTED drain point for
-    extend-only pipelines (r10 ADVICE): ``pack_*_extend`` must not
-    drain internally (a live prior plan may still pin an earlier
-    generation's persist — the sf1.0 token-loss bug), so a loop that
-    only ever calls the extend family accumulates one
-    MEMORY_AND_DISK-persisted frame per call.  Call this AFTER
-    materializing each extend's output (count/collect/write); the
-    returned plans must not be re-executed afterwards — an unpersisted
-    ``spark_partition_id`` bucketing is not stable across
-    re-computation.  Top-level ``pack_sequences`` / ``pack_token_ids``
-    / ``pack_shards`` calls drain the previous generation automatically;
-    mixed pipelines only need this at the very end."""
-    n = len(_PACK_OFFSET_CACHE)
-    drain_persist_cache(_PACK_OFFSET_CACHE)
-    return n
-
 
 def _bucketize(sized: DataFrame, order_by: Sequence[str],
                by: Sequence[str], n_buckets: int) -> DataFrame:
     """Range-bucket ``sized`` on ``(by…, order_by…)`` and pin each row's
-    bucket id as ``_pid`` (persisted, swap-cache lifetime).
+    bucket id as ``_pid`` (local-checkpointed).
 
-    The persist is the linchpin: both downstream consumers (the
+    The checkpoint is the linchpin: both downstream consumers (the
     within-bucket cumsum and the per-bucket totals) must see the SAME
     bucketing, and ``spark_partition_id`` is only stable against the
-    materialized frame.  Correctness does not otherwise depend on the
-    boundaries — range partitioning guarantees every key in bucket i
-    sorts before every key in bucket i+1, which is all the offset
-    arithmetic needs."""
+    materialized frame.  The checkpoint belongs to the returned plan —
+    it lives exactly as long as any plan that reads it, so a composed
+    extend over a live prior plan cannot lose its bucketing, and is
+    freed by Spark's ContextCleaner afterwards.  Checkpointed blocks
+    are never recomputed: an executor loss fails the job rather than
+    re-running the bucketing, whose ``spark_partition_id`` need not
+    match the first run — a recomputed bucketing that the two branches
+    see differently is the nondeterministic token loss once observed at
+    sf1.0 in ``pack_token_ids_extend``.  Under AQE the range-partition
+    shuffle beneath the checkpoint runs when the pack operator is
+    called, not when its result is consumed.  Correctness does not
+    otherwise depend on the boundaries — range partitioning guarantees
+    every key in bucket i sorts before every key in bucket i+1, which
+    is all the offset arithmetic needs."""
     cols = [*by, *order_by]
-    bucketed = (sized.repartitionByRange(n_buckets, *[F.col(c) for c in cols])
-                     .withColumn("_pid", F.spark_partition_id())
-                     .persist(StorageLevel.MEMORY_AND_DISK))
-    _PACK_OFFSET_CACHE.append(bucketed)
-    return bucketed
+    return (sized.repartitionByRange(n_buckets, *[F.col(c) for c in cols])
+                 .withColumn("_pid", F.spark_partition_id())
+                 .localCheckpoint(eager=False))
 
 
 def _running_offsets(df: DataFrame, size: Column, order_by: Sequence[str],
                      by: Sequence[str], n_buckets: int | str,
-                     drop_nonpositive: bool,
-                     drain: bool = True) -> DataFrame:
+                     drop_nonpositive: bool) -> DataFrame:
     """``df`` + ``_sz`` (the evaluated size), ``_end`` (running BIGINT
     cumulative size through this row in ``order_by`` order within each
     ``by`` group) and ``_start`` (``_end − _sz``).
@@ -153,18 +134,7 @@ def _running_offsets(df: DataFrame, size: Column, order_by: Sequence[str],
     Integral sizes with ``n_buckets > 1`` take the two-phase bucketed
     path (module docstring); fractional sizes and ``n_buckets == 1``
     take the serial per-group window, whose output is defined to be
-    identical for integral sizes (fuzz-pinned).
-
-    ``drain=False`` is for COMPOSED callers (the extend family) whose
-    OTHER input may still hang on a live bucketized persist from an
-    earlier pack in the same plan: the swap-cache drain here would
-    unpin that frame before the composed action consumes it, and an
-    unpersisted ``spark_partition_id`` bucketing is not stable across
-    the two branches that must agree (the module-docstring linchpin) —
-    observed at sf1.0 as NONDETERMINISTIC token loss in
-    ``pack_token_ids_extend`` before this parameter existed.  The
-    skipped drain happens at the next top-level pack call instead
-    (same swap-cache lifetime, one generation later)."""
+    identical for integral sizes (fuzz-pinned)."""
     sized = df.withColumn("_sz", size)
     if drop_nonpositive:
         sized = sized.filter(F.col("_sz") > 0)
@@ -178,8 +148,6 @@ def _running_offsets(df: DataFrame, size: Column, order_by: Sequence[str],
                    .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         return (sized.withColumn("_end", F.sum("_sz").over(w))
                      .withColumn("_start", F.col("_end") - F.col("_sz")))
-    if drain:
-        drain_persist_cache(_PACK_OFFSET_CACHE)
     bucketed = _bucketize(sized, order_by, by, n_buckets)
     w_local = (Window.partitionBy(*[F.col(c) for c in by], F.col("_pid"))
                      .orderBy(*[F.col(c) for c in order_by])
@@ -481,26 +449,17 @@ def pack_token_ids_extend(prior_packed: DataFrame, new_df: DataFrame,
     (tiny, broadcast), the same offsets/posexplode/agg as
     :func:`pack_token_ids` over the NEW batch only, then one
     key-partitioned merge whose per-group concat is bounded at
-    ``block`` IDs.
-
-    Cache lifecycle: this call does NOT drain the pack swap-cache (the
-    prior may be a live plan pinning an earlier persist); an
-    extend-ONLY ingestion loop must call :func:`drain_pack_cache` after
-    materializing each round's output, or the persisted bucketized
-    frames accumulate unboundedly."""
+    ``block`` IDs."""
     if block <= 0:
         raise ValueError(f"block must be positive, got {block}")
     if not order_by:
         raise ValueError("order_by must name at least one column")
     require_columns(new_df, [*by, *order_by, ids_col])
     require_columns(prior_packed, [*by, seq_col, "token_ids", "n_tokens"])
-    # drain=False: prior_packed may be a live pack_token_ids plan whose
-    # bucketized persist the swap-cache drain would unpin before the
-    # merge below consumes its ROWS (see _running_offsets docstring)
     sized = _running_offsets(new_df,
                              F.size(F.col(ids_col)).cast("bigint"),
                              order_by, by, n_buckets,
-                             drop_nonpositive=True, drain=False)
+                             drop_nonpositive=True)
     prior_tot = (prior_packed.groupBy(*[F.col(c) for c in by])
                              .agg(F.sum("n_tokens").cast("bigint")
                                    .alias("_prior")))
@@ -605,11 +564,7 @@ def pack_sequences_extend(prior_manifest: DataFrame, new_df: DataFrame,
     Scale shape: one aggregation over the manifest (tiny), the same
     two-phase offsets/explode/agg as ``pack_sequences`` over the NEW
     batch only, then one key-partitioned merge aggregation over
-    manifest ∪ delta.
-
-    Cache lifecycle: no internal drain (see
-    :func:`pack_token_ids_extend`) — extend-only loops call
-    :func:`drain_pack_cache` after materializing each round."""
+    manifest ∪ delta."""
     if block <= 0:
         raise ValueError(f"block must be positive, got {block}")
     if not order_by:
@@ -618,10 +573,8 @@ def pack_sequences_extend(prior_manifest: DataFrame, new_df: DataFrame,
     require_columns(prior_manifest,
                     [*by, seq_col, "n_docs", "n_tokens", "n_starts"])
     size = F.col(size_col) if isinstance(size_col, str) else size_col
-    # drain=False: prior_manifest may be a live pack_sequences plan
-    # still pinned by its bucketized persist (see _running_offsets)
     sized = _running_offsets(new_df, size.cast("bigint"), order_by, by,
-                             n_buckets, drop_nonpositive=True, drain=False)
+                             n_buckets, drop_nonpositive=True)
     prior = (prior_manifest.groupBy(*[F.col(c) for c in by])
                            .agg(F.sum("n_tokens").cast("bigint")
                                  .alias("_prior")))

@@ -430,12 +430,6 @@ def token_budget_sample_sql(table: str, cost_expr: str, key_col: str,
         WHERE {pred}"""
 
 
-#: swap-cache for top_fraction's persisted input (session.drain_persist_cache
-#: pattern: each call drains the previous call's frame, bounding a
-#: long-lived session to one cached input).
-_TF_CACHE: list = []
-
-
 def top_fraction(df: DataFrame, by: Sequence[str], score_col: str,
                  id_col: str, num: int, den: int,
                  n_buckets: int = 256,
@@ -497,26 +491,18 @@ def top_fraction(df: DataFrame, by: Sequence[str], score_col: str,
     # - "local_checkpoint": truncate the lineage and compute df ONCE
     #   into executor-local blocks — the measured winner for expensive
     #   multi-join/explode lineages (sf0.1 composed pipeline medians:
-    #   3.2 s vs 5.3 s persisted vs 6.9 s recomputed).  Non-reliable
-    #   storage: an executor loss fails the JOB instead of a stage —
-    #   acceptable for a batch curation query whose alternative is a
-    #   ~6x lineage recompute; at cluster scale, jobs needing stage
-    #   retry should write df to a table and rerank from that.
-    # - "persist": storage-level cache (the returned plan references
-    #   the cached frame — swap-cache lifetime).  Dominated by
-    #   local_checkpoint in every measurement (the InMemoryTableScan
-    #   breaks whole-stage pipelining) but survives executor loss.
+    #   3.2 s vs 5.3 s for a persisted df vs 6.9 s recomputed).  The
+    #   checkpoint belongs to the returned plan and is freed once that
+    #   plan is unreachable.  Non-reliable storage: an executor loss
+    #   fails the JOB instead of a stage — acceptable for a batch
+    #   curation query whose alternative is a ~6x lineage recompute; at
+    #   cluster scale, jobs needing stage retry should write df to a
+    #   table and rerank from that.
     if materialize == "local_checkpoint":
         df = df.localCheckpoint(eager=False)
-    elif materialize == "persist":
-        from pyspark import StorageLevel
-        from frames_map_reduce_spark.session import drain_persist_cache
-        drain_persist_cache(_TF_CACHE)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _TF_CACHE.append(df)
     elif materialize is not None:
         raise ValueError(
-            f"materialize must be None, 'local_checkpoint' or 'persist', "
+            "materialize must be None or 'local_checkpoint', "
             f"got {materialize!r}")
     score = F.col(score_col).cast("bigint")
     bounds = (df.groupBy(*[F.col(c) for c in by])

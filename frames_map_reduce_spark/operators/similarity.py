@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from frames_map_reduce_spark.functions.vectors import (cosine, dot, norm,
                                                        srp_signature)
 from frames_map_reduce_spark.schema import require_columns
-from frames_map_reduce_spark.session import drain_persist_cache
 
 
 def _random_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -1188,11 +1187,6 @@ def _lo_quantize(vec):
         vec, lambda x: F.round(x.cast("double") * scale, 0).cast("bigint"))
 
 
-#: the live query-side cache for the kNN vote (at most one entry): see
-#: the persist note in :func:`knn_label_vote`.
-_KNN_QUERY_CACHE: list[DataFrame] = []
-
-
 def knn_label_vote(corpus: DataFrame, queries: DataFrame, vec_col: str,
                    id_col: str, label_col: str, k: int = 5,
                    max_queries: int = 10_000) -> DataFrame:
@@ -1218,23 +1212,18 @@ def knn_label_vote(corpus: DataFrame, queries: DataFrame, vec_col: str,
     # the query frame's plan executes three times otherwise (bound
     # pre-flight, the broadcast into the scored cross-join, the label
     # re-attach) — and in the composed mislabel audit that plan embeds
-    # the whole label_outliers corpus pass.  Persist it (bounded ≤
-    # max_queries rows by the very contract the pre-flight enforces);
-    # the returned lazy plan references it, so the swap-cache drains
-    # the previous call's frame (same contract as minhash_probe_index).
-    from pyspark import StorageLevel
-    drain_persist_cache(_KNN_QUERY_CACHE)
+    # the whole label_outliers corpus pass.  Local-checkpoint it
+    # (bounded ≤ max_queries rows by the very contract the pre-flight
+    # enforces); the pre-flight count materializes it, and the
+    # checkpoint belongs to the returned plan, freed once that plan is
+    # unreachable (same lifetime and executor-loss trade as
+    # minhash_probe_index).
     qz = (queries.select(F.col(id_col).alias("_qid"),
                          F.col(label_col).alias("_qlabel"),
                          _lo_quantize(F.col(vec_col)).alias("_qq"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-    _KNN_QUERY_CACHE.append(qz)
+                 .localCheckpoint(eager=False))
     n_q = qz.limit(max_queries + 1).count()
     if n_q > max_queries:
-        # don't leave the contract-violating frame cached: the bound is
-        # what makes the persisted footprint small, and an error return
-        # means no later plan references it — release immediately
-        drain_persist_cache(_KNN_QUERY_CACHE)
         raise ValueError(
             f"knn_label_vote is bounded to {max_queries} queries by "
             "contract (the query side is broadcast and each query scans "
@@ -1339,10 +1328,6 @@ def knn_label_vote_sql(table: str, queries_sql: str, vec_col: str,
 # Semantic deduplication (SemDeDup — cluster, then dedup within clusters)
 # ---------------------------------------------------------------------------
 
-#: the live assigned-corpus cache (at most one entry): see the persist
-#: note in :func:`semantic_dedup`.
-_SEMDEDUP_ASSIGN_CACHE: list[DataFrame] = []
-
 def semantic_dedup(df: DataFrame, threshold: float = 0.92,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    n_centroids: int | str = 32, seed: int = 42,
@@ -1393,18 +1378,14 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.92,
                                         seed=seed,
                                         target_cluster=target_cluster)
     # the assigned frame feeds BOTH sides of the pair self-join AND the
-    # final verdict join: persist it so the mapInPandas assignment (and
-    # the corpus scan under it) runs once, not three times.  The
-    # returned lazy plan references it, so this call cannot unpersist —
-    # the swap-cache drains the PREVIOUS call's frame instead, bounding
-    # a long-lived session to one cached corpus (same lifetime contract
-    # as minhash_probe_index, and persist keeps lineage replayable on
-    # executor loss, unlike a localCheckpoint)
-    from pyspark import StorageLevel
-    drain_persist_cache(_SEMDEDUP_ASSIGN_CACHE)
-    assigned = (ivf_assign(df.select(id_col, vec_col), vec_col, centroids)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    _SEMDEDUP_ASSIGN_CACHE.append(assigned)
+    # final verdict join: local-checkpoint it so the mapInPandas
+    # assignment (and the corpus scan under it) runs once, not three
+    # times.  The checkpoint belongs to the returned plan and is freed
+    # once that plan is unreachable, so a later call never evicts an
+    # earlier result.  Trade: checkpointed blocks are not replayable —
+    # an executor loss fails the job instead of re-running the stage.
+    assigned = ivf_assign(df.select(id_col, vec_col), vec_col,
+                          centroids).localCheckpoint(eager=False)
     if max_cluster is not None:
         big = (assigned.groupBy("_centroid")
                        .agg(F.count(F.lit(1)).alias("_n"))

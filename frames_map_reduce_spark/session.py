@@ -26,7 +26,8 @@ def get_spark(
     - Arrow enabled: every applyInPandas / pandas_udf path in this engine
       moves batches over Arrow, never row-at-a-time pickling.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -53,19 +54,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def drain_persist_cache(cache: list) -> None:
-    """Release every frame parked in a swap-cache (the pattern operators
-    use when a RETURNED lazy plan references a persisted frame and so
-    cannot unpersist it before returning: each call drains the PREVIOUS
-    call's cache, bounding a long-lived session to one cached frame per
-    operator).  Tolerates frames whose SparkSession has since been
-    stopped — a module-level cache outlives sessions, and calling
-    ``unpersist()`` against a dead JVM context raises; there is nothing
-    to release in that case, so the stale handle is simply dropped."""
-    while cache:
-        df = cache.pop()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — stale session: blocks are gone
-            pass

@@ -175,3 +175,20 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
        .sortBy(*bucket_cols)
        .format("parquet")
        .saveAsTable(table))
+
+
+def table_num_buckets(spark: SparkSession, table: str) -> int:
+    """The bucket count the catalog recorded for ``table`` — the catalog,
+    not a caller parameter, owns the bucket spec of a persisted index.
+    A table WITHOUT a recorded bucket spec (externally created, or
+    written unbucketed) raises rather than assuming one: appending under
+    a guessed spec would silently break the probe's pruned bucketed-scan
+    contract."""
+    desc = spark.sql(f"DESCRIBE TABLE EXTENDED `{table}`") \
+                .filter(F.col("col_name") == "Num Buckets").first()
+    if desc is None:
+        raise ValueError(
+            f"`{table}` has no 'Num Buckets' in the catalog — it was not "
+            "written by write_bucketed; refusing to write under an "
+            "assumed bucket spec")
+    return int(desc["data_type"])

@@ -57,3 +57,9 @@ def rows_sorted(df, *cols):
         key=lambda t: (tuple((t[i] is None, t[i]) for i in idx),
                        tuple((v is None, str(v)) for v in t)),
     )
+
+
+def cache_is_empty(spark) -> bool:
+    """True when the session's SQL cache manager holds no persisted frame
+    (``localCheckpoint`` blocks never register there)."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.plans import count_exchanges
-from frames_map_reduce_spark.sources import write_bucketed
+from frames_map_reduce_spark.sources import table_num_buckets, write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -63,23 +63,69 @@ def test_auto_bucket_counts(spark, sf_dir, documents):
     count from the data/spec instead of a constant 64 — 8 at test
     scale (the clamp floor), growing with the geometry/corpus."""
     from frames_map_reduce_spark.operators.bloom import (
-        _bloom_auto_buckets, build_bloom_index, _bloom_num_buckets)
-    from frames_map_reduce_spark.operators.dedup import (
-        build_minhash_index, _index_num_buckets)
+        _bloom_auto_buckets, build_bloom_index)
+    from frames_map_reduce_spark.operators.dedup import build_minhash_index
     from frames_map_reduce_spark.sources import clamp_buckets
 
     assert _bloom_auto_buckets(1 << 22) == 8          # default geometry
     assert _bloom_auto_buckets(1 << 34) == 256        # big filter splits
     assert clamp_buckets(10**18) == 32768             # file-count cap
     build_bloom_index(documents.limit(50), "autob_bloom_t", "text")
-    assert _bloom_num_buckets(spark, "autob_bloom_t") == 8
+    assert table_num_buckets(spark, "autob_bloom_t_words") == 8
     build_minhash_index(documents.limit(50), "autob_mh_t", "text",
                         "doc_id")
-    assert _index_num_buckets(spark, "autob_mh_t") == 8
+    assert table_num_buckets(spark, "autob_mh_t_buckets") == 8
     import pytest as _pytest
     with _pytest.raises(ValueError, match="n_buckets"):
         build_bloom_index(documents.limit(5), "autob_bad_t", "text",
                           n_buckets=True)
+
+
+def _extend_bloom(delta, table):
+    from frames_map_reduce_spark.operators.bloom import extend_bloom_index
+    extend_bloom_index(delta, table, "text")
+
+
+def _extend_minhash(delta, table):
+    from frames_map_reduce_spark.operators.dedup import extend_minhash_index
+    extend_minhash_index(delta, table, "text", "doc_id")
+
+
+def _extend_contamination(delta, table):
+    from frames_map_reduce_spark.operators.retrieval import (
+        extend_contamination_index,
+    )
+    extend_contamination_index(delta, table, "text")
+
+
+def _extend_media(delta, table):
+    from frames_map_reduce_spark.operators.multimodal import (
+        extend_media_contamination_index,
+    )
+    extend_media_contamination_index(delta, table, "doc_id", "payload")
+
+
+@pytest.mark.parametrize("suffix,extend", [
+    ("_words", _extend_bloom),
+    ("_buckets", _extend_minhash),
+    ("_grams", _extend_contamination),
+    ("_bands", _extend_media),
+], ids=["bloom", "minhash", "contamination", "media_contamination"])
+def test_extend_refuses_unbucketed_index(spark, suffix, extend):
+    """Every persisted-index family reads the bucket spec it appends
+    under from the catalog, and an index table with none recorded
+    raises instead of appending under a guessed bucket count."""
+    table = "unbucketed_idx_t"
+    spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+    spark.range(4).write.saveAsTable(f"{table}{suffix}")
+    delta = spark.createDataFrame(
+        [(1, "some text", b"\x00")],
+        "doc_id long, text string, payload binary")
+    try:
+        with pytest.raises(ValueError, match="Num Buckets"):
+            extend(delta, table)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
 
 
 def test_native_topk_matches_grouped_map(spark, lineitem):

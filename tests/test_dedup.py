@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.operators import dedup as DD
+from frames_map_reduce_spark.sources import table_num_buckets
 
 BASE = ("the quick brown fox jumps over the lazy dog and then runs far away "
         "into the deep green forest to find some food for the long winter")
@@ -455,7 +456,7 @@ def test_minhash_index_rebuild_lifecycle(spark):
         base = spark.createDataFrame(
             [(0, healthy), (1, boiler)], "doc_id long, text string")
         DD.build_minhash_index(base, table, "text", "doc_id")
-        nb_before = DD._index_num_buckets(spark, table)
+        nb_before = table_num_buckets(spark, f"{table}_buckets")
         # three append waves of the SAME degenerate text (distinct ids):
         # every wave lands in the identical band buckets
         for wave in range(3):
@@ -473,7 +474,7 @@ def test_minhash_index_rebuild_lifecycle(spark):
         after = DD.minhash_index_bucket_stats(spark, table, cap).first()
         assert after["n_oversized"] == 0
         assert after["max_size"] <= cap
-        assert DD._index_num_buckets(spark, table) == nb_before
+        assert table_num_buckets(spark, f"{table}_buckets") == nb_before
         assert spark.table(f"{table}_shingles").count() == sh_count
 
         probe = spark.createDataFrame(
@@ -490,29 +491,6 @@ def test_minhash_index_rebuild_lifecycle(spark):
         for suffix in ("_buckets", "_shingles", "_buckets_rebuild",
                        "_buckets_old"):
             spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
-
-
-def test_drain_persist_cache_tolerates_stale_handles():
-    """The probe/assign/query swap-caches are module-level and outlive
-    SparkSessions: draining must drop handles whose context has been
-    stopped (unpersist raises) instead of crashing the NEXT session's
-    first call."""
-    from frames_map_reduce_spark.session import drain_persist_cache
-
-    class Dead:
-        def unpersist(self):
-            raise RuntimeError("Cannot call methods on a stopped SparkContext")
-
-    class Live:
-        unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    live = Live()
-    cache = [Dead(), live, Dead()]
-    drain_persist_cache(cache)
-    assert cache == [] and live.unpersisted
 
 
 def test_ngram_jaccard_block_scoped_ids(spark):

@@ -4,6 +4,8 @@ asserted against the actual physical plans."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -196,23 +198,60 @@ def test_pack_sequences_plan_shape(documents):
     assert "_pid" in plan
 
 
-def test_semantic_dedup_reuses_persisted_assignment(spark, embeddings):
+def _checkpointed_plans(monkeypatch, df) -> list[str]:
+    """Record the formatted plan of every frame of ``df``'s class
+    local-checkpointed while the patch is active (a checkpoint hides its
+    lineage from the plans that read it)."""
+    from frames_map_reduce_spark.plans import explain_formatted
+
+    seen: list[str] = []
+    cls = type(df)
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(explain_formatted(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return seen
+
+
+def _python_nodes(plan: str) -> int:
+    """MapInPandas nodes in a formatted plan (tree form only: the detail
+    section names each node again, and its arguments may too)."""
+    return len(re.findall(r"MapInPandas \(\d+\)", plan))
+
+
+def _checkpoint_scans(plan: str) -> list[str]:
+    """The RDD each checkpoint scan in a formatted plan reads."""
+    return re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", plan)
+
+
+def test_semantic_dedup_reuses_persisted_assignment(spark, embeddings,
+                                                    monkeypatch):
     """The assigned corpus feeds three plan branches (both pair-join
-    sides + the verdict join): all three must read the PERSISTED frame
-    (InMemoryTableScan / InMemoryRelation), so the mapInPandas
-    assignment executes once per run, and the pair stage must be a
-    key-equality join — never a cartesian."""
+    sides + the verdict join): the mapInPandas assignment is
+    local-checkpointed ONCE and all three branches scan that one
+    checkpoint, so the assignment executes once per run, and the pair
+    stage must be a key-equality join — never a cartesian."""
     from frames_map_reduce_spark.operators.similarity import semantic_dedup
     from frames_map_reduce_spark.plans import explain_formatted
 
+    checkpointed = _checkpointed_plans(monkeypatch, embeddings)
     out = semantic_dedup(embeddings, threshold=0.35, n_centroids=8)
     plan = explain_formatted(out)
-    assert plan.count("InMemoryTableScan") >= 3, plan[:1500]
+    # the one Python stage sits beneath the one checkpoint and never
+    # above it
+    assert len(checkpointed) == 1
+    assert _python_nodes(checkpointed[0]) == 1, checkpointed[0]
+    assert "MapInPandas" not in plan, plan[:1500]
+    scans = _checkpoint_scans(plan)
+    assert len(scans) >= 3 and len(set(scans)) == 1, plan[:1500]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pack_token_ids_plan_shape(spark, documents):
+def test_pack_token_ids_plan_shape(spark, documents, monkeypatch):
     """pack_token_ids' scale contract (r10): ONE Python stage (the
     Arrow encode — mapInPandas is the one loop expressions cannot
     express), ONE Generate (the per-token posexplode), the bounded
@@ -226,14 +265,20 @@ def test_pack_token_ids_plan_shape(spark, documents):
     src = documents.select("doc_id", "source", "text")
     ids = encode_ids(src, "text", "doc_id") \
         .join(src.select("doc_id", "source"), "doc_id")
+    checkpointed = _checkpointed_plans(monkeypatch, ids)
     out = pack_token_ids(ids, "token_ids", 256,
                          order_by=["doc_id"], by=["source"], n_buckets=64)
     plan = explain_formatted(out)
-    # exactly one Arrow python stage: the greedy encode ("NodeName ("
-    # matches tree + detail-header, twice per physical node — the bare
-    # name also matches the detail section's function-argument line)
-    assert plan.count("MapInPandas (") == 2
-    assert "BatchEvalPython" not in plan        # no row-at-a-time UDF
+    # exactly one Arrow python stage: the greedy encode.  It sits
+    # beneath the bucketing's one checkpoint, which both offset branches
+    # read, so it runs once; nothing Python runs above it.
+    assert len(checkpointed) == 1
+    assert _python_nodes(checkpointed[0]) == 1, checkpointed[0]
+    assert "MapInPandas" not in plan
+    scans = _checkpoint_scans(plan)
+    assert len(scans) == 2 and len(set(scans)) == 1, plan[:1500]
+    for p in (plan, checkpointed[0]):
+        assert "BatchEvalPython" not in p       # no row-at-a-time UDF
     # exactly one Generate: the per-token posexplode
     assert plan.count("Generate") == 2
     assert "BroadcastHashJoin" in plan          # offsets join back

@@ -13,7 +13,7 @@ from frames_map_reduce_spark.operators.sampling import (
     weighted_mixture,
     weighted_sample,
 )
-from tests.conftest import rows_sorted
+from tests.conftest import cache_is_empty, rows_sorted
 
 WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
@@ -221,9 +221,8 @@ def test_pack_two_phase_parallelism_and_fallback(spark):
     # fractional sizes: no _pid column ever appears (serial path)
     off = _running_offsets(df, F.col("sz").cast("double"), ["id"], (),
                            n_buckets=8, drop_nonpositive=False)
-    assert "_pid" not in off.columns
     from frames_map_reduce_spark.plans import executed_plan
-    assert "rangepartitioning" not in executed_plan(off).lower()
+    assert "_pid" not in executed_plan(off)
 
 
 def test_pack_auto_n_buckets_resolution(spark, documents):
@@ -232,7 +231,7 @@ def test_pack_auto_n_buckets_resolution(spark, documents):
     estimates to the two-phase path with buckets scaling in [8, 64],
     stat-less sources (parallelized local collections report the
     Long.MaxValue sentinel) to the scale-safe 64, and the resolved plan
-    shapes match (no rangepartitioning below threshold, _pid above)."""
+    shapes match (serial window below threshold, _pid buckets above)."""
     from frames_map_reduce_spark.operators.packing import (
         _AUTO_BUCKET_BYTES, _AUTO_SERIAL_BYTES, _resolve_n_buckets,
         _running_offsets, pack_sequences)
@@ -258,11 +257,13 @@ def test_pack_auto_n_buckets_resolution(spark, documents):
     with pytest.raises(ValueError, match="auto"):
         _resolve_n_buckets(small, "sixty-four")
     # plan shape follows the resolution
-    assert "rangepartitioning" not in executed_plan(
-        pack_sequences(small, "sz", 17, order_by=["doc_id"])).lower()
+    assert "_pid" not in executed_plan(
+        pack_sequences(small, "sz", 17, order_by=["doc_id"]))
     off_big = _running_offsets(big, F.col("sz"), ["id"], (),
                                n_buckets="auto", drop_nonpositive=False)
-    assert "rangepartitioning" in executed_plan(off_big).lower()
+    # the range repartition sits beneath the bucketing's checkpoint; the
+    # bucket id it pins partitions the cumsum window above it
+    assert "windowspecdefinition(_pid" in executed_plan(off_big)
 
 
 def test_pack_auto_two_phase_engages_at_sf1(spark):
@@ -461,14 +462,14 @@ def test_top_fraction_materialize_modes(spark, documents):
                               (F.col("n_chars") % 97).alias("r"))
     base = sorted(r["doc_id"] for r in top_fraction(
         ranked, ["source"], "r", "doc_id", 3, 5).collect())
-    for mode in ("persist", "local_checkpoint"):
-        got = sorted(r["doc_id"] for r in top_fraction(
-            ranked, ["source"], "r", "doc_id", 3, 5,
-            materialize=mode).collect())
-        assert got == base, mode
-    with pytest.raises(ValueError, match="materialize"):
-        top_fraction(ranked, ["source"], "r", "doc_id", 3, 5,
-                     materialize="cache")
+    got = sorted(r["doc_id"] for r in top_fraction(
+        ranked, ["source"], "r", "doc_id", 3, 5,
+        materialize="local_checkpoint").collect())
+    assert got == base
+    for mode in ("cache", "persist"):
+        with pytest.raises(ValueError, match="materialize"):
+            top_fraction(ranked, ["source"], "r", "doc_id", 3, 5,
+                         materialize=mode)
     ckpt = top_fraction(ranked, ["source"], "r", "doc_id", 3, 5,
                         materialize="local_checkpoint")
     plan = executed_plan(ckpt)
@@ -680,34 +681,30 @@ def test_token_ids_extend_live_prior_plan_multibucket(spark):
         assert got == full
 
 
-def test_drain_pack_cache_bounds_extend_only_loop(spark):
+def test_extend_only_loop_caches_nothing(spark):
     """r10 ADVICE: an extend-ONLY ingestion loop never reaches a
-    top-level pack call, so the swap-cache persists accumulate one
-    bucketized frame per round.  drain_pack_cache() is the documented
-    drain point: after materializing each round's output it empties the
-    cache (returning how many frames it released), and the NEXT round's
-    extend still produces repack-identical values."""
+    top-level pack call, so nothing may accumulate per round: after
+    each round's output materializes the session cache manager holds no
+    bucketized frame, and the NEXT round's extend still produces
+    repack-identical values."""
     from frames_map_reduce_spark.operators import packing as PK
 
+    spark.catalog.clearCache()
     rows = [("g", i, list(range(i % 5 + 1))) for i in range(400)]
     df = spark.createDataFrame(
         rows, "g string, doc_id long, token_ids array<int>")
     prior = PK.pack_token_ids(df.filter("doc_id < 100"), "token_ids", 16,
                               order_by=["doc_id"], by=["g"], n_buckets=4)
     prior = spark.createDataFrame(prior.collect(), prior.schema)
-    PK.drain_pack_cache()
-    assert not PK._PACK_OFFSET_CACHE
+    assert cache_is_empty(spark)
     for lo, hi in ((100, 200), (200, 300), (300, 400)):
         batch = df.filter(f"doc_id >= {lo} and doc_id < {hi}")
         ext = PK.pack_token_ids_extend(prior, batch, "token_ids", 16,
                                        order_by=["doc_id"], by=["g"],
                                        n_buckets=4)
-        # materialize THIS round's output, then drain: the cache must
-        # never hold more than the one generation the round created
+        # materialize THIS round's output: the cache manager stays empty
         prior = spark.createDataFrame(ext.collect(), ext.schema)
-        assert len(PK._PACK_OFFSET_CACHE) >= 1
-        drained = PK.drain_pack_cache()
-        assert drained >= 1 and not PK._PACK_OFFSET_CACHE
+        assert cache_is_empty(spark)
     full = sorted(
         (r["g"], r["seq_id"], tuple(r["token_ids"]), r["n_tokens"])
         for r in PK.pack_token_ids(df, "token_ids", 16,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.functions.vectors import cosine, dot, norm
 from frames_map_reduce_spark.operators import similarity as SIM
+from tests.conftest import cache_is_empty
 
 
 def test_vector_expressions(spark):
@@ -396,18 +397,16 @@ def test_semantic_dedup_max_cluster_guard_raises(spark):
 
 def test_knn_label_vote_oversized_queries_released(spark):
     """The bound-violation error path must not leave the oversized query
-    frame parked in the persist swap-cache."""
-    from frames_map_reduce_spark.operators.similarity import (
-        _KNN_QUERY_CACHE,
-        knn_label_vote,
-    )
+    frame parked in the session cache manager."""
+    from frames_map_reduce_spark.operators.similarity import knn_label_vote
+    spark.catalog.clearCache()
     rows = [(i, i % 2, [float(i), 0.0]) for i in range(30)]
     df = spark.createDataFrame(rows,
                                "vec_id long, label int, embedding array<double>")
     with pytest.raises(ValueError, match="bounded"):
         knn_label_vote(df, df, "embedding", "vec_id", "label",
                        k=3, max_queries=10)
-    assert _KNN_QUERY_CACHE == []
+    assert cache_is_empty(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from frames_map_reduce_spark import folds
 from frames_map_reduce_spark.mapreduce import unpack_filter_on_field, unpack_no_op
 from frames_map_reduce_spark.streaming import stream_map_reduce, stream_to_memory
+from tests.conftest import cache_is_empty
 
 
 @pytest.fixture()
@@ -762,25 +763,22 @@ def test_stream_quality_dashboard_matches_batch_and_replays(
     assert tok.alert_oov == want.needs_retrain
 
 
-def test_stream_token_ids_extend_with_drain_stays_bounded(
+def test_stream_token_ids_extend_caches_nothing(
         spark, documents, tmp_path):
-    """Deployment form of the extend-drain contract (r11 verdict #8): a
+    """Deployment form of the extend contract (r11 verdict #8): a
     foreachBatch ingestion loop composing encode_ids →
-    pack_token_ids_extend → drain_pack_cache across 5 micro-batches.
-    Asserts (a) the pack swap-cache NEVER accumulates — drained to zero
-    after each batch materializes, at most the current generation's one
-    bucketized persist before the drain — and (b) the final packed
-    frame is BIT-identical to pack_token_ids over the whole corpus in
-    one shot (extend ≡ repack under the monotone contract).
+    pack_token_ids_extend across 5 micro-batches.  Asserts (a) nothing
+    accumulates — the session cache manager is empty after each batch
+    materializes — and (b) the final packed frame is BIT-identical to
+    pack_token_ids over the whole corpus in one shot (extend ≡ repack
+    under the monotone contract).
 
     Batches are staged as doc_id RANGES (mtime-ordered files +
     maxFilesPerTrigger=1), not residues: the extend contract requires
     every new document's order_by key to sort after all previously
     packed ones."""
     from frames_map_reduce_spark.functions.tokenizer import encode_ids
-    from frames_map_reduce_spark.operators import packing as PK
     from frames_map_reduce_spark.operators.packing import (
-        drain_pack_cache,
         pack_token_ids,
         pack_token_ids_extend,
     )
@@ -807,8 +805,7 @@ def test_stream_token_ids_extend_with_drain_stays_bounded(
 
     packed_root = str(tmp_path / "packed")
     state = {"gen": -1}
-    cache_sizes_before_drain: list[int] = []
-    cache_sizes_after_drain: list[int] = []
+    cache_empty_after_batch: list[bool] = []
     n_batches = {"n": 0}
 
     def apply(batch_df, batch_id: int) -> None:
@@ -824,10 +821,9 @@ def test_stream_token_ids_extend_with_drain_stays_bounded(
         packed.write.parquet(f"{packed_root}/g{gen}")   # materialize
         state["gen"] = gen
         n_batches["n"] += 1
-        cache_sizes_before_drain.append(len(PK._PACK_OFFSET_CACHE))
-        drain_pack_cache()
-        cache_sizes_after_drain.append(len(PK._PACK_OFFSET_CACHE))
+        cache_empty_after_batch.append(cache_is_empty(spark))
 
+    spark.catalog.clearCache()
     q = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", "1").parquet(stage)
               .writeStream.foreachBatch(apply)
@@ -837,10 +833,8 @@ def test_stream_token_ids_extend_with_drain_stays_bounded(
     q.awaitTermination()
 
     assert n_batches["n"] == 5
-    # bounded: at most the current generation's own persist before each
-    # drain, ZERO after — the loop holds one cached frame, never five
-    assert max(cache_sizes_before_drain) <= 1
-    assert all(s == 0 for s in cache_sizes_after_drain)
+    # bounded: no batch leaves a cached frame behind
+    assert all(cache_empty_after_batch)
 
     got = sorted(
         (r["seq_id"], tuple(r["token_ids"]), r["n_tokens"])
@@ -850,7 +844,6 @@ def test_stream_token_ids_extend_with_drain_stays_bounded(
         for r in pack_token_ids(encode_ids(docs, "text", "doc_id"),
                                 "token_ids", block=64,
                                 order_by=["doc_id"]).collect())
-    drain_pack_cache()
     assert got == want and len(got) > 5
 
 

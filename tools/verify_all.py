@@ -2,7 +2,7 @@
 and write a single VERIFY.json, so the whole green wall comes from one
 entry point.
 
-    python tools/verify_all.py              # full: all five gates
+    python tools/verify_all.py              # full: all six gates
     python tools/verify_all.py --fast       # skip the sf1.0 scale gate
 
 Gates, in order (each recorded with wall time and pass/fail; a failing
@@ -16,10 +16,13 @@ wall, not the first brick):
    parity run of every registry query (tests/test_oracle_parity.py).
 2. parity@sf0.01 — the same differential suite at the driver's
    correctness scale (SPARK_GRAFT_TEST_SF_DIR).
-3. bench — bench.py at $SPARK_GRAFT_SF_DIR (default sf0.1); records the
+3. perfbench — one repo-benchmark run (perfbench/run.py, seed 1,
+   --trace 0) per workload BENCHMARK.json declares; a run fails on any
+   failed operation or check.  Records each run's JSON line.
+4. bench — bench.py at $SPARK_GRAFT_SF_DIR (default sf0.1); records the
    parsed one-line JSON.  NOTE: overwrites BENCH_FULL.json (by design —
    it IS the bench artifact); run from a clean tree or restore after.
-4. scale — `bench_scale.py verify` (full value parity at sf1.0,
+5. scale — `bench_scale.py verify` (full value parity at sf1.0,
    generating the /tmp replica if absent) → SCALE_PARITY.json.
 """
 
@@ -48,6 +51,15 @@ def run_gate(name: str, cmd: list[str], env: dict | None = None) -> dict:
             "seconds": took, "tail": tail}
 
 
+def last_json(tail: str) -> dict | None:
+    """The last JSON line a gate printed, or None."""
+    try:
+        return json.loads([ln for ln in tail.splitlines()
+                           if ln.startswith("{")][-1])
+    except (IndexError, ValueError):
+        return None
+
+
 def main() -> None:
     fast = "--fast" in sys.argv
     gates: dict[str, dict] = {}
@@ -59,13 +71,18 @@ def main() -> None:
         "parity_sf0.01",
         [sys.executable, "-m", "pytest", "tests/test_oracle_parity.py", "-q"],
         env={"SPARK_GRAFT_TEST_SF_DIR": "/root/testdata/sf0.01"})
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        workloads = [w["name"] for w in json.load(f)["workloads"]]
+    for w in workloads:
+        gate = run_gate(
+            f"perfbench_{w}",
+            [sys.executable, "perfbench/run.py", "--workload", w,
+             "--seed", "1", "--seconds", "1", "--trace", "0"])
+        gate["record"] = last_json(gate["tail"])
+        gates[f"perfbench_{w}"] = gate
     gates["bench"] = run_gate("bench", [sys.executable, "bench.py"])
-    try:
-        last = [ln for ln in gates["bench"]["tail"].splitlines()
-                if ln.startswith("{")][-1]
-        gates["bench"]["record"] = json.loads(last)
-    except (IndexError, ValueError):
-        gates["bench"]["record"] = None
+    gates["bench"]["record"] = last_json(gates["bench"]["tail"])
+    if gates["bench"]["record"] is None:
         gates["bench"]["ok"] = False
     if not fast:
         gates["scale_sf1.0"] = run_gate(
