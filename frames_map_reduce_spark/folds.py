@@ -32,6 +32,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -298,5 +299,9 @@ def pandas_fold(fn: Callable[..., Any], return_type: str | T.DataType,
     with no Column-expression form.  Still vastly faster than row-at-a-time
     UDFs (vectorized over Arrow batches).
     """
-    udf = F.pandas_udf(fn, returnType=return_type, functionType=F.PandasUDFType.GROUPED_AGG)
+    def agg(*s: pd.Series) -> Any:
+        # Series in, scalar out: the type hints make this a GROUPED_AGG UDF
+        return fn(*s)
+
+    udf = F.pandas_udf(agg, returnType=return_type)
     return Fold([(out, udf(*[_c(c) for c in cols]))], pandas_names=[out])

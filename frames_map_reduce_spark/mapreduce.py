@@ -158,10 +158,12 @@ def unpack_flat_map(exploded: Column, out: str, keep: Sequence[str] = ()) -> Fla
 class Assign:
     """Key/data split.  ``data=None`` ⇒ resolve at plan time.
 
-    Spark's groupBy carries the whole row and Catalyst prunes unused
-    columns, so the projection here is *validation semantics* (the
-    reference's type-level guarantees) plus the explicit data-column list
-    handed to Reduce."""
+    ``resolve`` validates the split (the reference's type-level
+    guarantees) and hands Reduce the key and data column lists; each
+    Reduce projects from them.  A fold's ``agg`` names its inputs, so
+    Catalyst prunes the rest.  Catalyst cannot see inside a Python
+    function, so :class:`GroupMapReduce` projects to keys ∪ the data
+    columns its function reads before grouping."""
 
     keys: Sequence[str]
     data: Sequence[str] | None = None          # None ⇒ complement of keys
@@ -260,25 +262,122 @@ class FoldReduce(Reduce):
         return joined.select(*keys, *self.fold.output_names)
 
 
+# Special methods Python looks up on the type, bypassing ``__getattribute__``:
+# a traced function that calls any of them on the stand-in spoils the trace.
+_SPOILERS = (
+    "__setitem__", "__delitem__", "__iter__", "__reversed__", "__contains__",
+    "__bool__", "__hash__", "__eq__", "__ne__", "__lt__", "__le__", "__gt__",
+    "__ge__", "__neg__", "__pos__", "__abs__", "__invert__", "__repr__",
+    "__str__", "__format__",
+    *(f"__{side}{op}__" for side in ("", "r", "i")
+      for op in ("add", "sub", "mul", "matmul", "truediv", "floordiv", "mod",
+                 "pow", "and", "or", "xor", "lshift", "rshift")),
+)
+
+
+def _trace_reads(fn: Callable[[pd.DataFrame], pd.DataFrame],
+                 schema: T.StructType) -> list[str] | None:
+    """The columns ``fn`` looks up, found by calling it once on a zero-row
+    stand-in for a pandas frame of ``schema``; ``None`` when the stand-in
+    cannot tell (see :class:`GroupMapReduce`)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    reads: list[str] = []
+    spoiled = False
+
+    def spoil(*_args, **_kwargs):
+        nonlocal spoiled
+        spoiled = True
+        raise TypeError("the column trace follows only column lookups and len()")
+
+    class Stand:
+        __slots__ = ()
+        __getattribute__ = spoil
+
+        def __getitem__(self, key):
+            names = [key] if isinstance(key, str) else key
+            if not (isinstance(names, list)
+                    and all(isinstance(n, str) for n in names)):
+                spoil()
+            reads.extend(names)
+            return empty[key]
+
+        def __len__(self):
+            return 0
+
+    for name in _SPOILERS:
+        setattr(Stand, name, spoil)
+    try:
+        empty = to_arrow_schema(schema).empty_table().to_pandas()
+        stand = Stand()
+        out = fn(stand)
+    except Exception:   # a type without an Arrow form, or fn failing on 0 rows
+        return None
+    return None if spoiled or out is stand else reads
+
+
+def _names_column(err: KeyError, col: str) -> bool:
+    """Whether a pandas lookup ``KeyError`` is about column ``col``
+    (``pdf["c"]`` raises ``KeyError('c')``, ``pdf[["c"]]`` a message
+    quoting ``'c'``)."""
+    arg = err.args[0] if err.args else None
+    return (isinstance(arg, str) and arg == col) or repr(col) in str(arg)
+
+
 @dataclass(frozen=True)
 class GroupMapReduce(Reduce):
     """``reduceAndAddKey`` / ``makeRecsWithKey`` (reference
     src/Frames/MapReduce.hs:151-159,169-191): an arbitrary whole-group
-    function → 1 row (``many=False``) or n rows (``many=True``), with the
-    group key re-attached automatically.
+    function → exactly 1 row (``many=False``) or n rows (``many=True``),
+    with the group key re-attached automatically.
 
-    Spark: grouped-map ``applyInPandas``.  The user function sees ONLY the
-    data columns (a pandas DataFrame, Arrow-transferred) and returns a
-    pandas DataFrame of the output columns WITHOUT keys; key re-attachment
-    (the reference's ``V.rappend``) happens here.  Memory caveat shared
-    with the reference is inverted: their per-group fold streams, ours
+    Spark: grouped-map ``applyInPandas``.  The user function sees ONLY data
+    columns (a pandas DataFrame, Arrow-transferred) and returns a pandas
+    DataFrame of the output columns WITHOUT keys; key re-attachment (the
+    reference's ``V.rappend``) happens here.  Memory caveat shared with
+    the reference is inverted: their per-group fold streams, ours
     materializes the group — so prefer FoldReduce whenever the fold is
     expressible (SURVEY §4 physical-execution note).
+
+    Only the data columns ``fn`` reads are scanned, shuffled and shipped
+    to Python (the reference's Reduce likewise gets only the data
+    columns).  The input is projected to keys ∪ those columns before the
+    ``groupBy``, and ``fn`` receives exactly those columns:
+
+    * ``reads=[...]`` declares them; every name must be a data column.
+    * ``reads=None`` infers them.  At plan time ``fn`` runs ONCE on the
+      driver, on a zero-row stand-in of the data columns that records
+      ``pdf["c"]`` and ``pdf[["a", "b"]]`` lookups and answers
+      ``len(pdf)``.  Every data column is shipped when ``fn`` does
+      anything else with the stand-in (any attribute such as ``.loc`` or
+      ``.columns``, item assignment, iteration, arithmetic, ...), when it
+      raises, when it returns the stand-in, or when the zero-row frame
+      cannot be built for the data types.
+
+    A function whose lookups depend on the group's contents (``if
+    len(pdf) > 3: pdf["y"]``) can read on real data a column its zero-row
+    trace never read.  Such a lookup fails loudly with a ``SchemaError``
+    naming the column; declare ``reads=`` for such a function.  Non-lookup
+    access that only happens on non-empty groups (``pdf.columns`` after a
+    ``len`` check) sees just the shipped columns, so declare ``reads=``
+    there too.
     """
 
     fn: Callable[[pd.DataFrame], pd.DataFrame]
     output_schema: str | T.StructType  # schema of fn's output, WITHOUT keys
     many: bool = True
+    reads: Sequence[str] | None = None   # None ⇒ trace fn at plan time
+
+    def shipped(self, df: DataFrame, data: list[str]) -> list[str]:
+        """The data columns handed to ``fn``: ``reads`` when declared,
+        else those the zero-row trace saw, else all of ``data``."""
+        if self.reads is not None:
+            extra = [c for c in self.reads if c not in data]
+            if extra:
+                raise SchemaError(f"reads {extra} are not data columns {data}")
+            return list(dict.fromkeys(self.reads))
+        traced = _trace_reads(self.fn, T.StructType([df.schema[c] for c in data]))
+        return list(data) if traced is None else [c for c in data if c in traced]
 
     def apply(self, df: DataFrame, keys: list[str], data: list[str]) -> DataFrame:
         out_schema = (
@@ -291,19 +390,32 @@ class GroupMapReduce(Reduce):
             raise SchemaError(f"reduce outputs {sorted(clash)} collide with group keys")
         full_schema = T.StructType(key_fields + list(out_schema.fields))
         fn, many = self.fn, self.many
-        data_cols = list(data)
+        shipped = self.shipped(df, data)
+        unshipped = [c for c in data if c not in shipped]
 
         def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            out = fn(pdf[data_cols])
-            if not many and len(out) > 1:
-                raise ValueError("reduce_and_add_key fn returned >1 row")
+            try:
+                out = fn(pdf[shipped])
+            except KeyError as e:
+                missed = [c for c in unshipped if _names_column(e, c)]
+                if missed:
+                    raise SchemaError(
+                        f"grouped-map fn read data column(s) {missed}, which "
+                        f"were not shipped to it (shipped: {shipped}); pass "
+                        f"reads= naming every column fn reads") from e
+                raise
+            if not many and len(out) != 1:
+                raise ValueError(
+                    f"reduce_and_add_key fn returned {len(out)} rows, not 1")
             for name, val in zip(keys, key):
                 if name not in out.columns:
                     out[name] = val
             # reorder: keys first, then declared outputs (ks ++ cs)
             return out[[f.name for f in full_schema.fields]]
 
-        return df.groupBy(*keys).applyInPandas(run, schema=full_schema)
+        # pyspark cannot hand Python a group with zero columns: keep one
+        cols = list(dict.fromkeys([*keys, *shipped])) or data[:1]
+        return df.select(*cols).groupBy(*keys).applyInPandas(run, schema=full_schema)
 
 
 def fold_and_add_key(fold: Fold) -> FoldReduce:
@@ -311,17 +423,24 @@ def fold_and_add_key(fold: Fold) -> FoldReduce:
 
 
 def reduce_and_add_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                       output_schema: str | T.StructType) -> GroupMapReduce:
-    """Whole-group function → single output row (reference
-    src/Frames/MapReduce.hs:151-159)."""
-    return GroupMapReduce(fn, output_schema, many=False)
+                       output_schema: str | T.StructType,
+                       reads: Sequence[str] | None = None) -> GroupMapReduce:
+    """Whole-group function → exactly one output row (reference
+    src/Frames/MapReduce.hs:151-159).  ``reads`` names the data columns
+    ``fn`` reads; ``None`` infers them (see :class:`GroupMapReduce`)."""
+    return GroupMapReduce(fn, output_schema, many=False,
+                          reads=None if reads is None else tuple(reads))
 
 
 def make_recs_with_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                       output_schema: str | T.StructType) -> GroupMapReduce:
+                       output_schema: str | T.StructType,
+                       reads: Sequence[str] | None = None) -> GroupMapReduce:
     """Whole-group function → many output rows, key on each (reference
-    src/Frames/MapReduce.hs:169-179; cf. flatMapGroupsInPandas)."""
-    return GroupMapReduce(fn, output_schema, many=True)
+    src/Frames/MapReduce.hs:169-179; cf. flatMapGroupsInPandas).
+    ``reads`` as for :func:`reduce_and_add_key`."""
+    return GroupMapReduce(fn, output_schema, many=True,
+                          reads=None if reads is None else tuple(reads))
+
 
 
 # ---------------------------------------------------------------------------
@@ -343,17 +462,19 @@ def fold_and_label(fold: Fold) -> FoldReduce:
 
 
 def process_and_label(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                      output_schema: str | T.StructType) -> GroupMapReduce:
+                      output_schema: str | T.StructType,
+                      reads: Sequence[str] | None = None) -> GroupMapReduce:
     """``MR.processAndLabel process rappend`` (src/Frames/MapReduce.hs:158):
     identical to :func:`reduce_and_add_key`."""
-    return reduce_and_add_key(fn, output_schema)
+    return reduce_and_add_key(fn, output_schema, reads)
 
 
 def reduce_map_with_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                        output_schema: str | T.StructType) -> GroupMapReduce:
+                        output_schema: str | T.StructType,
+                        reads: Sequence[str] | None = None) -> GroupMapReduce:
     """``MR.reduceMapWithKey addKey reduceToY`` (src/Frames/MapReduce.hs:177):
     identical to :func:`make_recs_with_key`."""
-    return make_recs_with_key(fn, output_schema)
+    return make_recs_with_key(fn, output_schema, reads)
 
 
 # ---------------------------------------------------------------------------

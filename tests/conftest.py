@@ -19,6 +19,15 @@ _hsettings.register_profile("fmr", print_blob=True)
 _hsettings.load_profile("fmr")
 
 
+def pytest_configure(config):
+    # pandas_fold declares its UDF kind with type hints; the deprecated
+    # PandasUDFType form warns (SPARK-28264) and must not come back
+    config.addinivalue_line(
+        "filterwarnings",
+        r"error:In Python 3\.6\+ and Spark 3\.0\+, it is preferred to specify "
+        r"type hints for pandas UDF:UserWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("fmr-tests", master="local[4]", shuffle_partitions=8)

@@ -17,9 +17,12 @@ from pyspark.sql import functions as F
 from frames_map_reduce_spark import folds
 from frames_map_reduce_spark.mapreduce import (
     fold_and_add_key,
+    make_recs_with_key,
     map_reduce,
+    reduce_and_add_key,
     split_on_keys,
     unpack_filter_row,
+    unpack_no_op,
 )
 
 FOLD_KINDS = {
@@ -78,6 +81,59 @@ def test_random_pipeline_matches_duckdb(spark, rows, fold_kinds, fold_col,
     con.close()
 
     assert got == want
+
+
+# Grouped maps, each with its DuckDB twin.  The column trace ships the
+# median's one lookup, every column for the .loc filter and only the keys
+# for the count; the answers must not depend on which.
+_cell = st.one_of(st.none(), st.integers(min_value=-20, max_value=20))
+GROUPED_MAPS = {
+    "median": (
+        lambda c: reduce_and_add_key(
+            lambda pdf: pd.DataFrame({"v": [float(pdf[c].median())]}),
+            "v double"),
+        "SELECT k, median(CAST({c} AS DOUBLE)) FROM t GROUP BY k"),
+    "loc_filter": (
+        lambda c: make_recs_with_key(
+            lambda pdf: pdf.loc[pdf[c] > 0, ["x"]].rename(columns={"x": "v"}),
+            "v double"),
+        "SELECT k, CAST(x AS DOUBLE) FROM t WHERE {c} > 0"),
+    "count": (
+        lambda c: reduce_and_add_key(
+            lambda pdf: pd.DataFrame({"v": [len(pdf)]}), "v long"),
+        "SELECT k, count(*) FROM t GROUP BY k"),
+}
+
+
+@given(
+    rows=st.lists(st.tuples(st.sampled_from(["a", "b", None]), _cell, _cell,
+                            _cell),
+                  min_size=1, max_size=30),
+    kind=st.sampled_from(sorted(GROUPED_MAPS)),
+    col=st.sampled_from(["x", "y", "z"]),
+)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_random_grouped_map_matches_duckdb(spark, rows, kind, col):
+    pdf = pd.DataFrame(rows, columns=["k", "x", "y", "z"]).astype(
+        {"x": "Int64", "y": "Int64", "z": "Int64"})
+    df = spark.createDataFrame(
+        [(k, *(None if v is None else float(v) for v in xyz))
+         for k, *xyz in rows],
+        "k string, x double, y double, z double")
+    reduce, sql = GROUPED_MAPS[kind]
+    out = map_reduce(df, unpack_no_op(), split_on_keys(["k"]), reduce(col))
+
+    con = duckdb.connect()
+    con.register("t", pdf)
+    want = con.sql(sql.format(c=col)).fetchall()
+    con.close()
+
+    def canon(rs):
+        return sorted((tuple(r) for r in rs),
+                      key=lambda t: tuple((v is None, v) for v in t))
+
+    assert canon(out.collect()) == canon(want)
 
 
 # ---------------------------------------------------------------------------

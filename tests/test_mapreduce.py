@@ -282,3 +282,107 @@ def test_engine_aliases(spark, lineitem):
     t2 = map_reduce(lineitem, unpack_no_op(), split_on_keys(["l_returnflag"]),
                     make_recs_with_key(two_rows, "n long"))
     assert sorted(map(tuple, t1.collect())) == sorted(map(tuple, t2.collect()))
+
+
+# ---------------------------------------------------------------------------
+# Grouped maps ship only the data columns their function reads
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def kxyz(spark):
+    rows = [("a", 1.0, 2.0, 3.0), ("a", 4.0, None, 6.0), ("a", 2.0, 5.0, 1.0),
+            ("b", 7.0, 8.0, None), (None, 3.0, 3.0, 3.0), (None, 0.0, 9.0, 2.0)]
+    return spark.createDataFrame(rows, "k string, x double, y double, z double")
+
+
+def _above_one(pdf):
+    return pdf.loc[pdf["x"] > 1, ["y"]]
+
+
+def _lowest_x(pdf):
+    return pdf.sort_values(["x", "y"]).head(1)[["y"]]
+
+
+def _whole(pdf):
+    return pdf
+
+
+def _doubled(pdf):
+    pdf["w"] = pdf["x"] * 2
+    return pdf[["w"]]
+
+
+def _first_x(pdf):
+    return pd.DataFrame({"first": [pdf["x"].iloc[0]]})   # IndexError on 0 rows
+
+
+def _count(pdf):
+    return pd.DataFrame({"n": [len(pdf)]})
+
+
+def _sum_xz(pdf):
+    return pd.DataFrame({"s": [float(pdf[["x", "z"]].sum().sum())]})
+
+
+@pytest.mark.parametrize("fn, schema, many, shipped", [
+    (_above_one, "y double", True, ["x", "y", "z"]),
+    (_lowest_x, "y double", True, ["x", "y", "z"]),
+    (_whole, "x double, y double, z double", True, ["x", "y", "z"]),
+    (_doubled, "w double", True, ["x", "y", "z"]),
+    (_first_x, "first double", False, ["x", "y", "z"]),
+    (_count, "n long", False, []),
+    (_sum_xz, "s double", False, ["x", "z"]),
+], ids=["loc", "sort_values", "returns_pdf", "item_assignment",
+        "raises_on_empty", "len_only", "lookups"])
+def test_grouped_map_ships_traced_columns(kxyz, fn, schema, many, shipped):
+    """The zero-row trace ships only plain lookups, falls back to every
+    data column on anything else, and never changes the answer."""
+    make = make_recs_with_key if many else reduce_and_add_key
+    assert make(fn, schema).shipped(kxyz, ["x", "y", "z"]) == shipped
+    got = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]), make(fn, schema))
+    declared = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                          make(fn, schema, reads=["x", "y", "z"]))
+    assert rows_sorted(got) == rows_sorted(declared)
+
+
+def test_reads_hands_fn_exactly_those_columns(kxyz):
+    def cols(pdf):
+        return pd.DataFrame({"cols": [",".join(pdf.columns)]})
+
+    out = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                     reduce_and_add_key(cols, "cols string", reads=["z", "x"]))
+    assert {r["cols"] for r in out.collect()} == {"z,x"}
+
+
+@pytest.mark.parametrize("reads", [["k"], ["x", "nope"]])
+def test_reads_outside_data_is_a_plan_time_error(kxyz, reads):
+    with pytest.raises(SchemaError, match="not data columns"):
+        map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                   reduce_and_add_key(_count, "n long", reads=reads))
+
+
+def test_content_dependent_read_fails_loudly(kxyz):
+    """A lookup the zero-row trace never made is an error naming the
+    column, not an answer computed from the wrong columns."""
+    def big_groups_y(pdf):
+        if len(pdf) > 2:
+            return pd.DataFrame({"s": [float(pdf["y"].sum())]})
+        return pd.DataFrame({"s": [0.0]})
+
+    out = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                     reduce_and_add_key(big_groups_y, "s double"))
+    with pytest.raises(Exception, match=r"SchemaError.*\['y'\].*reads="):
+        out.collect()
+
+
+def test_reduce_and_add_key_rejects_zero_rows(kxyz):
+    """reduceAndAddKey yields exactly one record per group (reference
+    src/Frames/MapReduce.hs:151-159): an empty result is an error, not a
+    dropped group."""
+    def nothing(pdf):
+        return pdf[["x"]].iloc[:0]
+
+    out = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                     reduce_and_add_key(nothing, "x double"))
+    with pytest.raises(Exception, match="returned 0 rows"):
+        out.collect()

@@ -6,15 +6,20 @@ from __future__ import annotations
 
 import re
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from frames_map_reduce_spark import folds
 from frames_map_reduce_spark.mapreduce import (
+    assign_keys_and_data,
     fold_and_add_key,
+    make_recs_with_key,
     map_reduce,
+    reduce_and_add_key,
     split_on_keys,
     unpack_filter_on_field,
+    unpack_no_op,
 )
 from frames_map_reduce_spark.plans import (
     assert_filter_pushed,
@@ -67,6 +72,29 @@ def test_multi_output_fold_is_one_pass(lineitem):
             & folds.count_star("e")))
     assert count_hash_aggregates(five) == 2
     assert count_exchanges(five) == 1
+
+
+def test_grouped_map_scans_only_the_columns_fn_reads(lineitem):
+    """A group-median reduce over the whole complement of the key looks up
+    one column, so the scan reads the key and that column."""
+    def med(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"median_qty": [float(pdf["l_quantity"].median())]})
+
+    q = map_reduce(lineitem, unpack_no_op(), split_on_keys(["l_returnflag"]),
+                   reduce_and_add_key(med, "median_qty double"))
+    assert_scan_pruned(q, 2)
+
+
+def test_grouped_map_scans_only_keys_and_data(lineitem):
+    """Named data bounds the scan even when fn's reads cannot be traced
+    (``sort_values`` ships every data column)."""
+    def top(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.sort_values("l_quantity").head(1)
+
+    q = map_reduce(lineitem, unpack_no_op(),
+                   assign_keys_and_data(["l_returnflag"], ["l_quantity"]),
+                   make_recs_with_key(top, "l_quantity double"))
+    assert_scan_pruned(q, 2)
 
 
 def test_mapping_table_broadcasts(spark, lineitem):
