@@ -263,8 +263,8 @@ class FoldReduce(Reduce):
 
 
 # Special methods Python looks up on the type, bypassing ``__getattribute__``:
-# a traced function that calls any of them on the stand-in spoils the trace.
-_SPOILERS = (
+# :class:`_ColumnLookups` refuses every one of them.
+_REFUSED = (
     "__setitem__", "__delitem__", "__iter__", "__reversed__", "__contains__",
     "__bool__", "__hash__", "__eq__", "__ne__", "__lt__", "__le__", "__gt__",
     "__ge__", "__neg__", "__pos__", "__abs__", "__invert__", "__repr__",
@@ -275,53 +275,67 @@ _SPOILERS = (
 )
 
 
+class _ColumnLookups:
+    """Stand-in for a pandas frame that answers only the column lookups
+    ``s["c"]`` and ``s[["a", "b"]]``, after reporting their names to
+    ``on_lookup``, and ``len(s)`` when ``answer_len``.  Any other attribute,
+    operator or special method calls ``refuse``, which raises."""
+
+    __slots__ = ("_frame", "_on_lookup", "_refuse", "_answer_len")
+
+    def __init__(self, frame: pd.DataFrame,
+                 on_lookup: Callable[[list[str]], None],
+                 refuse: Callable[[], None], answer_len: bool):
+        for name, val in (("_frame", frame), ("_on_lookup", on_lookup),
+                          ("_refuse", refuse), ("_answer_len", answer_len)):
+            object.__setattr__(self, name, val)
+
+    def _refused(self, *_args, **_kwargs):
+        object.__getattribute__(self, "_refuse")()
+
+    __getattribute__ = _refused
+
+    def __getitem__(self, key):
+        own = object.__getattribute__
+        names = [key] if isinstance(key, str) else key
+        if not (isinstance(names, list)
+                and all(isinstance(n, str) for n in names)):
+            own(self, "_refuse")()
+        own(self, "_on_lookup")(names)
+        return own(self, "_frame")[key]
+
+    def __len__(self):
+        if not object.__getattribute__(self, "_answer_len"):
+            _ColumnLookups._refused(self)
+        return len(object.__getattribute__(self, "_frame"))
+
+
+for _name in _REFUSED:
+    setattr(_ColumnLookups, _name, _ColumnLookups._refused)
+
+
 def _trace_reads(fn: Callable[[pd.DataFrame], pd.DataFrame],
                  schema: T.StructType) -> list[str] | None:
     """The columns ``fn`` looks up, found by calling it once on a zero-row
-    stand-in for a pandas frame of ``schema``; ``None`` when the stand-in
-    cannot tell (see :class:`GroupMapReduce`)."""
+    stand-in for a pandas frame of ``schema``; ``None`` when ``fn`` does
+    anything else with it (see :class:`GroupMapReduce`)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     reads: list[str] = []
     spoiled = False
 
-    def spoil(*_args, **_kwargs):
+    def spoil():
         nonlocal spoiled
         spoiled = True
-        raise TypeError("the column trace follows only column lookups and len()")
+        raise TypeError("the column trace follows only column lookups")
 
-    class Stand:
-        __slots__ = ()
-        __getattribute__ = spoil
-
-        def __getitem__(self, key):
-            names = [key] if isinstance(key, str) else key
-            if not (isinstance(names, list)
-                    and all(isinstance(n, str) for n in names)):
-                spoil()
-            reads.extend(names)
-            return empty[key]
-
-        def __len__(self):
-            return 0
-
-    for name in _SPOILERS:
-        setattr(Stand, name, spoil)
     try:
         empty = to_arrow_schema(schema).empty_table().to_pandas()
-        stand = Stand()
+        stand = _ColumnLookups(empty, reads.extend, spoil, answer_len=False)
         out = fn(stand)
     except Exception:   # a type without an Arrow form, or fn failing on 0 rows
         return None
     return None if spoiled or out is stand else reads
-
-
-def _names_column(err: KeyError, col: str) -> bool:
-    """Whether a pandas lookup ``KeyError`` is about column ``col``
-    (``pdf["c"]`` raises ``KeyError('c')``, ``pdf[["c"]]`` a message
-    quoting ``'c'``)."""
-    arg = err.args[0] if err.args else None
-    return (isinstance(arg, str) and arg == col) or repr(col) in str(arg)
 
 
 @dataclass(frozen=True)
@@ -341,41 +355,36 @@ class GroupMapReduce(Reduce):
 
     Only the data columns ``fn`` reads are scanned, shuffled and shipped
     to Python (the reference's Reduce likewise gets only the data
-    columns).  The input is projected to keys ∪ those columns before the
-    ``groupBy``, and ``fn`` receives exactly those columns:
+    columns).  At plan time ``fn`` runs ONCE on the driver, on a zero-row
+    stand-in of the data columns that records ``pdf["c"]`` and
+    ``pdf[["a", "b"]]`` lookups; the input is then projected to keys ∪
+    those columns before the ``groupBy``.  Every data column is shipped,
+    and ``fn`` gets a plain pandas frame of them, when ``fn`` does
+    anything else with the stand-in (``len``, any attribute such as
+    ``.loc`` or ``.columns``, item assignment, iteration, arithmetic,
+    ...), when it raises, when it returns the stand-in, or when the
+    zero-row frame cannot be built for the data types.  So ``fn`` must be
+    free of side effects and cheap on zero rows.
 
-    * ``reads=[...]`` declares them; every name must be a data column.
-    * ``reads=None`` infers them.  At plan time ``fn`` runs ONCE on the
-      driver, on a zero-row stand-in of the data columns that records
-      ``pdf["c"]`` and ``pdf[["a", "b"]]`` lookups and answers
-      ``len(pdf)``.  Every data column is shipped when ``fn`` does
-      anything else with the stand-in (any attribute such as ``.loc`` or
-      ``.columns``, item assignment, iteration, arithmetic, ...), when it
-      raises, when it returns the stand-in, or when the zero-row frame
-      cannot be built for the data types.
-
-    A function whose lookups depend on the group's contents (``if
-    len(pdf) > 3: pdf["y"]``) can read on real data a column its zero-row
-    trace never read.  Such a lookup fails loudly with a ``SchemaError``
-    naming the column; declare ``reads=`` for such a function.  Non-lookup
-    access that only happens on non-empty groups (``pdf.columns`` after a
-    ``len`` check) sees just the shipped columns, so declare ``reads=``
-    there too.
+    When fewer columns are shipped, each group reaches ``fn`` through the
+    same stand-in over the real rows, which answers lookups of shipped
+    columns and ``len``.  A function that acts on its frame differently
+    on some groups than on zero rows (``if pdf["x"].sum() > 5:
+    pdf["y"]``, or ``pdf.mean()`` after such a test) fails there with a
+    ``SchemaError``; it never computes from the wrong columns.  Doing the
+    same thing unconditionally at the top of ``fn`` ships what it needs.
     """
 
     fn: Callable[[pd.DataFrame], pd.DataFrame]
     output_schema: str | T.StructType  # schema of fn's output, WITHOUT keys
     many: bool = True
-    reads: Sequence[str] | None = None   # None ⇒ trace fn at plan time
 
     def shipped(self, df: DataFrame, data: list[str]) -> list[str]:
-        """The data columns handed to ``fn``: ``reads`` when declared,
-        else those the zero-row trace saw, else all of ``data``."""
-        if self.reads is not None:
-            extra = [c for c in self.reads if c not in data]
-            if extra:
-                raise SchemaError(f"reads {extra} are not data columns {data}")
-            return list(dict.fromkeys(self.reads))
+        """The data columns handed to ``fn``: those the zero-row trace saw,
+        else all of ``data``.  One column cannot be pruned: pyspark hands
+        Python at least one."""
+        if len(data) < 2:
+            return list(data)
         traced = _trace_reads(self.fn, T.StructType([df.schema[c] for c in data]))
         return list(data) if traced is None else [c for c in data if c in traced]
 
@@ -391,19 +400,29 @@ class GroupMapReduce(Reduce):
         full_schema = T.StructType(key_fields + list(out_schema.fields))
         fn, many = self.fn, self.many
         shipped = self.shipped(df, data)
-        unshipped = [c for c in data if c not in shipped]
+        unshipped = set(data) - set(shipped)
+
+        def looked_up(names: list[str]) -> None:
+            missed = [c for c in names if c in unshipped]
+            if missed:
+                raise SchemaError(
+                    f"grouped-map fn looked up data column(s) {missed} on a "
+                    f"group but not on zero rows, so only {shipped} were "
+                    f"shipped; look them up on every call, e.g. at the top "
+                    f"of fn")
+
+        def refuse() -> None:
+            raise SchemaError(
+                f"grouped-map fn used its frame beyond column lookups on a "
+                f"group but not on zero rows, so only {shipped} were shipped; "
+                f"do that on every call, e.g. at the top of fn, to ship "
+                f"every data column")
 
         def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            try:
-                out = fn(pdf[shipped])
-            except KeyError as e:
-                missed = [c for c in unshipped if _names_column(e, c)]
-                if missed:
-                    raise SchemaError(
-                        f"grouped-map fn read data column(s) {missed}, which "
-                        f"were not shipped to it (shipped: {shipped}); pass "
-                        f"reads= naming every column fn reads") from e
-                raise
+            group = pdf[shipped]
+            if unshipped:
+                group = _ColumnLookups(group, looked_up, refuse, answer_len=True)
+            out = fn(group)
             if not many and len(out) != 1:
                 raise ValueError(
                     f"reduce_and_add_key fn returned {len(out)} rows, not 1")
@@ -423,23 +442,21 @@ def fold_and_add_key(fold: Fold) -> FoldReduce:
 
 
 def reduce_and_add_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                       output_schema: str | T.StructType,
-                       reads: Sequence[str] | None = None) -> GroupMapReduce:
+                       output_schema: str | T.StructType) -> GroupMapReduce:
     """Whole-group function → exactly one output row (reference
-    src/Frames/MapReduce.hs:151-159).  ``reads`` names the data columns
-    ``fn`` reads; ``None`` infers them (see :class:`GroupMapReduce`)."""
-    return GroupMapReduce(fn, output_schema, many=False,
-                          reads=None if reads is None else tuple(reads))
+    src/Frames/MapReduce.hs:151-159).  ``fn`` also runs once on the driver,
+    on zero rows, to find the columns it reads (see
+    :class:`GroupMapReduce`): it must be free of side effects."""
+    return GroupMapReduce(fn, output_schema, many=False)
 
 
 def make_recs_with_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                       output_schema: str | T.StructType,
-                       reads: Sequence[str] | None = None) -> GroupMapReduce:
+                       output_schema: str | T.StructType) -> GroupMapReduce:
     """Whole-group function → many output rows, key on each (reference
-    src/Frames/MapReduce.hs:169-179; cf. flatMapGroupsInPandas).
-    ``reads`` as for :func:`reduce_and_add_key`."""
-    return GroupMapReduce(fn, output_schema, many=True,
-                          reads=None if reads is None else tuple(reads))
+    src/Frames/MapReduce.hs:169-179; cf. flatMapGroupsInPandas).  ``fn``
+    also runs once on the driver, on zero rows, as for
+    :func:`reduce_and_add_key`."""
+    return GroupMapReduce(fn, output_schema, many=True)
 
 
 
@@ -462,19 +479,17 @@ def fold_and_label(fold: Fold) -> FoldReduce:
 
 
 def process_and_label(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                      output_schema: str | T.StructType,
-                      reads: Sequence[str] | None = None) -> GroupMapReduce:
+                      output_schema: str | T.StructType) -> GroupMapReduce:
     """``MR.processAndLabel process rappend`` (src/Frames/MapReduce.hs:158):
     identical to :func:`reduce_and_add_key`."""
-    return reduce_and_add_key(fn, output_schema, reads)
+    return reduce_and_add_key(fn, output_schema)
 
 
 def reduce_map_with_key(fn: Callable[[pd.DataFrame], pd.DataFrame],
-                        output_schema: str | T.StructType,
-                        reads: Sequence[str] | None = None) -> GroupMapReduce:
+                        output_schema: str | T.StructType) -> GroupMapReduce:
     """``MR.reduceMapWithKey addKey reduceToY`` (src/Frames/MapReduce.hs:177):
     identical to :func:`make_recs_with_key`."""
-    return make_recs_with_key(fn, output_schema, reads)
+    return make_recs_with_key(fn, output_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -84,8 +84,8 @@ def test_random_pipeline_matches_duckdb(spark, rows, fold_kinds, fold_col,
 
 
 # Grouped maps, each with its DuckDB twin.  The column trace ships the
-# median's one lookup, every column for the .loc filter and only the keys
-# for the count; the answers must not depend on which.
+# median's one lookup and every column for the .loc filter and the len
+# count; the answers must not depend on which.
 _cell = st.one_of(st.none(), st.integers(min_value=-20, max_value=20))
 GROUPED_MAPS = {
     "median": (

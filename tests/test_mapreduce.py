@@ -324,55 +324,75 @@ def _sum_xz(pdf):
     return pd.DataFrame({"s": [float(pdf[["x", "z"]].sum().sum())]})
 
 
+def _empty_guard_sum(pdf):
+    if len(pdf) == 0:
+        return pd.DataFrame({"s": [0.0]})
+    return pd.DataFrame({"s": [float(pdf.sum().sum())]})
+
+
 @pytest.mark.parametrize("fn, schema, many, shipped", [
     (_above_one, "y double", True, ["x", "y", "z"]),
     (_lowest_x, "y double", True, ["x", "y", "z"]),
     (_whole, "x double, y double, z double", True, ["x", "y", "z"]),
     (_doubled, "w double", True, ["x", "y", "z"]),
     (_first_x, "first double", False, ["x", "y", "z"]),
-    (_count, "n long", False, []),
+    (_count, "n long", False, ["x", "y", "z"]),
+    (_empty_guard_sum, "s double", False, ["x", "y", "z"]),
     (_sum_xz, "s double", False, ["x", "z"]),
 ], ids=["loc", "sort_values", "returns_pdf", "item_assignment",
-        "raises_on_empty", "len_only", "lookups"])
+        "raises_on_empty", "len", "empty_guard", "lookups"])
 def test_grouped_map_ships_traced_columns(kxyz, fn, schema, many, shipped):
     """The zero-row trace ships only plain lookups, falls back to every
     data column on anything else, and never changes the answer."""
     make = make_recs_with_key if many else reduce_and_add_key
     assert make(fn, schema).shipped(kxyz, ["x", "y", "z"]) == shipped
     got = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]), make(fn, schema))
-    declared = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
-                          make(fn, schema, reads=["x", "y", "z"]))
-    assert rows_sorted(got) == rows_sorted(declared)
+    # .copy() is not a lookup, so every data column reaches the wrapper
+    whole = make(lambda pdf: fn(pdf.copy()), schema)
+    assert whole.shipped(kxyz, ["x", "y", "z"]) == ["x", "y", "z"]
+    want = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]), whole)
+    assert rows_sorted(got) == rows_sorted(want)
 
 
-def test_reads_hands_fn_exactly_those_columns(kxyz):
-    def cols(pdf):
-        return pd.DataFrame({"cols": [",".join(pdf.columns)]})
+def _y_if_big(pdf):
+    if pdf["x"].sum() > 5:      # group "a" only; 0 on zero rows
+        return pd.DataFrame({"s": [float(pdf["y"].sum())]})
+    return pd.DataFrame({"s": [0.0]})
 
+
+def _mean_unless_all_null(pdf):
+    if pdf["x"].isna().all():   # true on zero rows, false on every group
+        return pd.DataFrame({"s": [0.0]})
+    return pd.DataFrame({"s": [float(pdf.mean().sum())]})
+
+
+@pytest.mark.parametrize("fn, match", [
+    (_y_if_big, r"SchemaError.*looked up data column\(s\) \['y'\]"),
+    (_mean_unless_all_null, r"SchemaError.*beyond column lookups"),
+], ids=["lookup", "whole_frame"])
+def test_content_dependent_use_fails_loudly(kxyz, fn, match):
+    """A use of the frame that the zero-row trace never made is an error,
+    not an answer computed from the wrong columns."""
+    assert reduce_and_add_key(fn, "s double").shipped(kxyz, ["x", "y", "z"]) == ["x"]
     out = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
-                     reduce_and_add_key(cols, "cols string", reads=["z", "x"]))
-    assert {r["cols"] for r in out.collect()} == {"z,x"}
+                     reduce_and_add_key(fn, "s double"))
+    with pytest.raises(Exception, match=match):
+        out.collect()
 
 
-@pytest.mark.parametrize("reads", [["k"], ["x", "nope"]])
-def test_reads_outside_data_is_a_plan_time_error(kxyz, reads):
-    with pytest.raises(SchemaError, match="not data columns"):
-        map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
-                   reduce_and_add_key(_count, "n long", reads=reads))
-
-
-def test_content_dependent_read_fails_loudly(kxyz):
-    """A lookup the zero-row trace never made is an error naming the
-    column, not an answer computed from the wrong columns."""
-    def big_groups_y(pdf):
-        if len(pdf) > 2:
-            return pd.DataFrame({"s": [float(pdf["y"].sum())]})
+def test_unrelated_key_error_is_not_rewritten(kxyz):
+    """A KeyError from fn's own dict lookup stays a KeyError, even when the
+    key is also the name of an unshipped data column."""
+    def lookup_table(pdf):
+        if pdf["x"].sum() > 5:
+            return pd.DataFrame({"s": [float({"x": 1.0}["y"])]})
         return pd.DataFrame({"s": [0.0]})
 
     out = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
-                     reduce_and_add_key(big_groups_y, "s double"))
-    with pytest.raises(Exception, match=r"SchemaError.*\['y'\].*reads="):
+                     reduce_and_add_key(lookup_table, "s double"))
+    with pytest.raises(Exception, match="KeyError") as err:
         out.collect()
+    assert "SchemaError" not in str(err.value)
 
 
 def test_reduce_and_add_key_rejects_zero_rows(kxyz):
