@@ -39,6 +39,12 @@ from frames_map_reduce_spark.schema import (
 Predicate = Callable[[Column], Column]
 
 
+def _col(name: str) -> Column:
+    """The column named ``name``, back-quoted so that Spark reads a dot in
+    it literally instead of as a struct field path."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 # ---------------------------------------------------------------------------
 # Unpack stage — filters & row multiplication (reference §2.2)
 # ---------------------------------------------------------------------------
@@ -242,24 +248,23 @@ class FoldReduce(Reduce):
         if clash:
             raise SchemaError(f"fold outputs {sorted(clash)} collide with group keys")
         native, pand = self.fold.split_pandas()
+        by = [_col(k) for k in keys]
         if not pand or not native:
-            return df.groupBy(*keys).agg(*self.fold.columns())
+            return df.groupBy(*by).agg(*self.fold.columns())
         # Spark refuses GROUPED_AGG pandas UDFs mixed with native
         # aggregates in one .agg() (INVALID_PANDAS_UDF_PLACEMENT): run two
         # aggregation passes over the same grouped input and join them
         # null-safely on the keys (NULL keys are groups, cf. §2.3), then
         # restore declaration order.
-        left = df.groupBy(*keys).agg(*native)
-        right = df.groupBy(*keys).agg(*pand)
-        rr = right
-        for k in keys:
-            rr = rr.withColumnRenamed(k, f"_r_{k}")
+        left = df.groupBy(*by).agg(*native)
+        right = df.groupBy(*[c.alias(f"_r{i}") for i, c in enumerate(by)]) \
+            .agg(*pand)
         cond = None
-        for k in keys:
-            c = left[k].eqNullSafe(rr[f"_r_{k}"])
+        for i, k in enumerate(keys):
+            c = _col(k).eqNullSafe(F.col(f"_r{i}"))
             cond = c if cond is None else (cond & c)
-        joined = left.join(rr, cond, "inner").drop(*[f"_r_{k}" for k in keys])
-        return joined.select(*keys, *self.fold.output_names)
+        return left.join(right, cond, "inner") \
+            .select(*map(_col, [*keys, *self.fold.output_names]))
 
 
 # Special methods Python looks up on the type, bypassing ``__getattribute__``:
@@ -418,7 +423,11 @@ class GroupMapReduce(Reduce):
                 f"do that on every call, e.g. at the top of fn, to ship "
                 f"every data column")
 
+        # pyspark cannot hand Python a group with zero columns: keep one
+        cols = list(dict.fromkeys([*keys, *shipped])) or data[:1]
+
         def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf.columns = cols
             group = pdf[shipped]
             if unshipped:
                 group = _ColumnLookups(group, looked_up, refuse, answer_len=True)
@@ -432,9 +441,13 @@ class GroupMapReduce(Reduce):
             # reorder: keys first, then declared outputs (ks ++ cs)
             return out[[f.name for f in full_schema.fields]]
 
-        # pyspark cannot hand Python a group with zero columns: keep one
-        cols = list(dict.fromkeys([*keys, *shipped])) or data[:1]
-        return df.select(*cols).groupBy(*keys).applyInPandas(run, schema=full_schema)
+        # ship positional aliases, which run renames back: applyInPandas
+        # looks its input up by name and groupBy parses dots, so neither
+        # would resolve a column named like ``a.b``
+        slots = [f"_{i}" for i in range(len(cols))]
+        return df.select(*[_col(c).alias(s) for c, s in zip(cols, slots)]) \
+            .groupBy(*[slots[cols.index(k)] for k in keys]) \
+            .applyInPandas(run, schema=full_schema)
 
 
 def fold_and_add_key(fold: Fold) -> FoldReduce:

@@ -491,6 +491,32 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+def _write_index_tables(banded: DataFrame, sig: DataFrame, table: str,
+                        n_buckets: int, mode: str = "overwrite") -> None:
+    """Write a MinHash index's ``_buckets`` and ``_shingles`` tables.  The
+    two writes are independent actions over the same materialized
+    ``sig``: submit them from two driver threads so the second write's
+    tasks back-fill executors idled by the first write's tail (guide
+    §2.6 overlap; jobs are FIFO, the wall-clock is max() instead of
+    sum()).  Each thread carries the caller's local properties, so its
+    jobs keep the caller's job tags."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from frames_map_reduce_spark.sources import write_bucketed
+
+    spark = sig.sparkSession
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(write_bucketed),
+                            frame, f"{table}{suffix}", [by], n_buckets, mode)
+                for frame, suffix, by in (
+                    (banded.select("ref_id", "_bucket"), "_buckets", "_bucket"),
+                    (sig.select("ref_id", "_sh64"), "_shingles", "ref_id"))]
+        for f in futs:
+            f.result()
+
+
 def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
                         id_col: str, num_perm: int = 128, bands: int = 16,
                         shingle_k: int = 5, seed: int = 42,
@@ -520,8 +546,6 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
     inline note); extends inherit the built spec from the catalog."""
     from pyspark import StorageLevel
 
-    from frames_map_reduce_spark.sources import write_bucketed
-
     require_columns(corpus, [text_col, id_col])
     sig = _shingle_sig_frame(corpus, text_col, id_col, shingle_k,
                              num_perm, seed) \
@@ -547,22 +571,9 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
         sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
         ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
         pruned = banded.join(F.broadcast(ok), "_bucket")
-        # The two table writes are independent actions over the SAME
-        # materialized cache — submit them from two driver threads so
-        # the second write's tasks back-fill executors idled by the
-        # first write's tail (guide §2.6 overlap; jobs are FIFO, the
-        # wall-clock is max() instead of sum()).  Safe: ``sig`` is
-        # already materialized by count(), so there is no concurrent
-        # cache-population race.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(write_bucketed,
-                             pruned.select("ref_id", "_bucket"),
-                             f"{table}_buckets", ["_bucket"], n_buckets)
-            fs = pool.submit(write_bucketed, sig.select("ref_id", "_sh64"),
-                             f"{table}_shingles", ["ref_id"], n_buckets)
-            fb.result()
-            fs.result()
+        # Safe to overlap: ``sig`` is already materialized by count(), so
+        # there is no concurrent cache-population race.
+        _write_index_tables(pruned, sig, table, n_buckets)
     finally:
         sig.unpersist()
 
@@ -587,10 +598,7 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     tests/test_dedup.py::test_minhash_index_rebuild_lifecycle."""
     from pyspark import StorageLevel
 
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    from frames_map_reduce_spark.sources import table_num_buckets
 
     require_columns(corpus_delta, [text_col, id_col])
     # append must reuse the table's recorded bucket count — read it
@@ -604,19 +612,7 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     sig.count()
     try:
         banded = _minhash_banded(sig, "ref_id", num_perm, bands)
-        # independent appends over the materialized cache: overlap them
-        # (guide §2.6), same rationale as build_minhash_index's writes
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(write_bucketed,
-                             banded.select("ref_id", "_bucket"),
-                             f"{table}_buckets", ["_bucket"], nb,
-                             mode="append")
-            fs = pool.submit(write_bucketed, sig.select("ref_id", "_sh64"),
-                             f"{table}_shingles", ["ref_id"], nb,
-                             mode="append")
-            fb.result()
-            fs.result()
+        _write_index_tables(banded, sig, table, nb, mode="append")
     finally:
         sig.unpersist()
 

@@ -1,15 +1,63 @@
-"""SparkSession construction tuned for this engine.
+"""SparkSession construction tuned for this engine, and the engine's one
+runtime default for its Python workers.
 
-Defaults chosen for scale-out behavior (AQE on, skew-join handling on,
-Arrow for the pandas interchange paths) while remaining correct on
-``local[N]`` for tests.
+Session defaults are chosen for scale-out behavior (AQE on, skew-join
+handling on, Arrow for the pandas interchange paths) while remaining
+correct on ``local[N]`` for tests.
+
+Worker default: PySpark calls ``importlib.invalidate_caches()`` at the
+start of every Python task (``pyspark/worker_util.py``,
+``setup_spark_files``), so that a file shipped by ``addPyFile`` becomes
+importable.  Before CPython 3.13 that call makes every ``zipimporter`` on
+the path re-parse its archive's central directory in pure Python: a warm
+worker holds a dozen importers on ``pyspark.zip`` plus the py4j zip and
+the spark-core jar, about 27k entries and ~190 ms of CPU per task, which
+dwarfs the engine's few-KB Python stages.  When this module is imported
+inside a task, :func:`skip_unchanged_zip_reloads` replaces
+``zipimporter.invalidate_caches`` with one that re-reads an archive only
+when its ``(st_mtime_ns, st_size)`` differs from the last read.  A zip
+newly shipped by ``addPyFile`` gets a fresh importer and a rewritten one
+changes its stat, so what the per-task call is for still works.  CPython
+3.13 made the call lazy itself, so there (and on the driver) nothing is
+replaced.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
+
+
+def skip_unchanged_zip_reloads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive's modification time or size changed
+    since that archive was last read; otherwise the importer keeps the
+    cached directory.  Idempotent; does nothing on CPython >= 3.13."""
+    stock = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or getattr(stock, "stat_checked", False):
+        return
+    read_at: dict[str, tuple[int, int]] = {}   # archive -> stat at last read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return stock(self)
+        seen = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == seen:
+            self._files = files
+            return
+        # stat before the read: a rewrite in between shows as a new stat
+        stock(self)
+        read_at[self.archive] = seen
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(
@@ -54,3 +102,6 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
+
+if TaskContext.get() is not None:
+    skip_unchanged_zip_reloads()

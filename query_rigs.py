@@ -102,8 +102,15 @@ def _overlap(*thunks):
     propagate.  Only for thunks with NO data dependence on each other
     (the caller asserts that by using this)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # each thread carries its own copy of the caller's local properties,
+    # so its jobs keep the caller's job tags
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        futs = [pool.submit(inheritable_thread_target(spark)(t))
+                for t in thunks]
         return [f.result() for f in futs]
 
 

@@ -601,3 +601,29 @@ def test_minhash_index_rebuild_crash_window_recovery(spark, monkeypatch):
         for suffix in ("_buckets", "_shingles", "_buckets_rebuild",
                        "_buckets_old"):
             real_sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+
+
+def test_index_writes_carry_the_callers_job_group(spark):
+    """build_minhash_index / extend_minhash_index write their two tables
+    from driver threads; every job they launch still carries the caller's
+    local properties (here its job group), so it is attributed to it."""
+    sc, table, group = spark.sparkContext, "minhash_index_tag_test", "fmr-tag-test"
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog"),
+         (1, "a completely different sentence about spark jobs")],
+        "doc_id long, text string")
+    status = sc.statusTracker()
+    ungrouped = set(status.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "tagged index writes")
+    try:
+        DD.build_minhash_index(docs.filter("doc_id = 0"), table, "text", "doc_id")
+        DD.extend_minhash_index(docs.filter("doc_id = 1"), table, "text", "doc_id")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        for suffix in ("_buckets", "_shingles"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
+    assert status.getJobIdsForGroup(group)
+    # no new job without the group (old ones may age out of the tracker)
+    assert set(status.getJobIdsForGroup(None)) <= ungrouped

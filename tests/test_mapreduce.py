@@ -406,3 +406,36 @@ def test_reduce_and_add_key_rejects_zero_rows(kxyz):
                      reduce_and_add_key(nothing, "x double"))
     with pytest.raises(Exception, match="returned 0 rows"):
         out.collect()
+
+
+# ---------------------------------------------------------------------------
+# Column names with dots are names, not struct field paths
+# ---------------------------------------------------------------------------
+
+def _reduce_named(kind, x, y):
+    """A grouped-map or fold reduce over data columns named ``x``, ``y``."""
+    if kind == "grouped_map":       # reads two of three data columns
+        return reduce_and_add_key(
+            lambda pdf: pd.DataFrame({"s": [float(pdf[x].sum())],
+                                      "m": [float(pdf[y].max())]}),
+            "s double, m double")
+    # a pandas fold with a native one takes the two-pass join path
+    return fold_and_add_key(
+        folds.pandas_fold(lambda s: float(s.max() - s.min()), "double",
+                          f"`{y}`", out="rng")
+        & folds.sum_(f"`{x}`", "s"))
+
+
+@pytest.mark.parametrize("kind", ["grouped_map", "fold"])
+@pytest.mark.parametrize("dotted", ["key", "data"])
+def test_dotted_column_names(kxyz, kind, dotted):
+    """A key or data column named like ``k.1`` groups and reduces exactly
+    as the same query over plain names."""
+    names = {"k": "k.1"} if dotted == "key" else {"x": "x.1"}
+    k, x = names.get("k", "k"), names.get("x", "x")
+    out = map_reduce(kxyz.withColumnsRenamed(names), unpack_no_op(),
+                     split_on_keys([k]), _reduce_named(kind, x, "y"))
+    want = map_reduce(kxyz, unpack_no_op(), split_on_keys(["k"]),
+                      _reduce_named(kind, "x", "y"))
+    assert out.columns == [names.get(c, c) for c in want.columns]
+    assert rows_sorted(out) == rows_sorted(want)
