@@ -201,35 +201,12 @@ def build_bloom_index(corpus: DataFrame, table: str, text_col: str,
     from frames_map_reduce_spark.sources import write_bucketed
 
     require_columns(corpus, [text_col])
-    if m_bits == "auto":
-        if k is not None:
-            raise ValueError(
-                "k cannot be combined with m_bits='auto' — the sizing "
-                "derives k from the data; pass explicit m_bits to pin k")
-        if n_items is None:
-            n_items = corpus.agg(
-                F.approx_count_distinct(TX.normalized(F.col(text_col)))
-                 .alias("n")).collect()[0]["n"]
-        geo = suggest_geometry(max(int(n_items), 1), target_fpr)
-        m_bits, k = geo["m_bits"], geo["k"]
-    elif isinstance(m_bits, bool) or not isinstance(m_bits, int):
-        # bool is an int subclass: m_bits=True would "validate" and
-        # build a degenerate 1-bit filter (r9 ADVICE)
-        raise ValueError(f"m_bits must be an int or 'auto', got {m_bits!r}")
-    else:
-        if n_items is not None:
-            raise ValueError(
-                "n_items only applies to m_bits='auto' sizing — an "
-                "explicit geometry ignores the member count")
-        if k is None:
-            k = DEFAULT_K
+    m_bits, k = _resolve_geometry(corpus, text_col, m_bits, k, target_fpr,
+                                  n_items)
     if n_buckets == "auto":
         # scale-adaptive layout (r13): the geometry bounds the word
         # table, so it sizes the buckets — see _bloom_auto_buckets
         n_buckets = _bloom_auto_buckets(m_bits)
-    elif isinstance(n_buckets, bool) or not isinstance(n_buckets, int):
-        raise ValueError(
-            f"n_buckets must be an int or 'auto', got {n_buckets!r}")
     write_bucketed(_word_rows(corpus, text_col, m_bits, k),
                    f"{table}_words", ["_word"], n_buckets)
     # persist the geometry beside the bits (like the IVF centroid
@@ -279,17 +256,12 @@ def extend_bloom_index(corpus_delta: DataFrame, table: str, text_col: str,
     table) BEFORE extending — a verdict plan re-evaluated after the
     extend screens against the already-extended filter and reports
     every extended document as a member."""
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    from frames_map_reduce_spark.sources import append_bucketed
 
     require_columns(corpus_delta, [text_col])
-    spark = corpus_delta.sparkSession
-    _require_bloom_spec(spark, table, m_bits, k)
-    nb = table_num_buckets(spark, f"{table}_words")
-    write_bucketed(_word_rows(corpus_delta, text_col, m_bits, k),
-                   f"{table}_words", ["_word"], nb, mode="append")
+    _require_bloom_spec(corpus_delta.sparkSession, table, m_bits, k)
+    append_bucketed(_word_rows(corpus_delta, text_col, m_bits, k),
+                    f"{table}_words")
 
 
 def bloom_probe_index(spark: SparkSession, table: str, queries: DataFrame,
@@ -328,12 +300,10 @@ def bloom_probe_index(spark: SparkSession, table: str, queries: DataFrame,
 
 def compact_bloom_index(spark: SparkSession, table: str) -> None:
     """Fold an extend-heavy index back to ONE row per word (``bit_or``
-    across generations) and swap it in — same rename-rename-drop swap
-    (and the same crash-window contract) as dedup.rebuild_minhash_index:
-    never data-destroying, a crash between the renames leaves both
-    datasets under ``_old`` / ``_compact`` names and recovery is one
-    manual rename; a stale ``_old`` location from a previous crash is
-    cleared through the Hadoop FileSystem API."""
+    across generations) and replace the word table with it under its
+    recorded bucket count through :func:`sources.write_bucketed` (its
+    replace contract covers the swap, crash-window recovery and stale
+    plans)."""
     from frames_map_reduce_spark.sources import (
         table_num_buckets,
         write_bucketed,
@@ -343,9 +313,7 @@ def compact_bloom_index(spark: SparkSession, table: str) -> None:
     spec = _bloom_spec(spark, table)
     merged = (spark.table(f"{table}_words")
                    .groupBy("_word").agg(F.bit_or("_bits").alias("_bits")))
-    tmp = f"{table}_words_compact"
-    write_bucketed(merged, tmp, ["_word"], nb)
-    _swap_in_word_table(spark, table, tmp)
+    write_bucketed(merged, f"{table}_words", ["_word"], nb)
     if spec is not None:  # the compacted table carries the spec forward
         _set_bloom_spec(spark, table, *spec)
 
@@ -376,17 +344,12 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     across engines, exact counts are).  Explicit integers pin the
     geometry instead.
 
-    The new word table is written beside the live one and swapped in
-    via the same rename-rename-drop sequence (and crash-window
-    contract) as :func:`compact_bloom_index`: never data-destroying, a
-    crash between the renames leaves both generations under ``_old`` /
-    ``_rebuild`` names and recovery is one manual rename.  The bucket
-    count carries over from the live table unless ``n_buckets=``
-    overrides it (a bigger geometry may warrant more buckets).
-
-    Returns the ``(m_bits, k)`` actually built, like build.  Probe
-    plans created before the rebuild hold the old snapshot and must be
-    re-created (same contract as compact)."""
+    The new word table replaces the live one through
+    :func:`sources.write_bucketed` (its replace contract covers the
+    swap, crash-window recovery and stale plans).  The bucket count
+    carries over from the live table unless ``n_buckets=`` overrides it
+    (a bigger geometry may warrant more buckets).  Returns the
+    ``(m_bits, k)`` actually built, like build."""
     spark = corpus.sparkSession
     from frames_map_reduce_spark.sources import (
         table_num_buckets,
@@ -396,9 +359,24 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     require_columns(corpus, [text_col])
     # resolve the bucket spec from the LIVE table first — even under an
     # explicit n_buckets override: rebuilding a nonexistent index is a
-    # build, and must fail loudly BEFORE any write (not mid-swap)
+    # build, and must fail loudly BEFORE any write
     live_nb = table_num_buckets(spark, f"{table}_words")
-    nb = live_nb if n_buckets is None else int(n_buckets)
+    nb = live_nb if n_buckets is None else n_buckets
+    m_bits, k = _resolve_geometry(corpus, text_col, m_bits, k, target_fpr,
+                                  n_items)
+    write_bucketed(_word_rows(corpus, text_col, m_bits, k),
+                   f"{table}_words", ["_word"], nb)
+    _set_bloom_spec(spark, table, m_bits, k)
+    return m_bits, k
+
+
+def _resolve_geometry(corpus: DataFrame, text_col: str, m_bits, k,
+                      target_fpr: float,
+                      n_items: int | None) -> tuple[int, int]:
+    """The ``(m_bits, k)`` a build or rebuild writes: sized from the
+    corpus cardinality for ``target_fpr`` under ``m_bits="auto"``,
+    otherwise the explicit geometry with ``k`` defaulting to
+    ``DEFAULT_K``."""
     if m_bits == "auto":
         if k is not None:
             raise ValueError(
@@ -409,48 +387,16 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
                 F.approx_count_distinct(TX.normalized(F.col(text_col)))
                  .alias("n")).collect()[0]["n"]
         geo = suggest_geometry(max(int(n_items), 1), target_fpr)
-        m_bits, k = geo["m_bits"], geo["k"]
-    elif isinstance(m_bits, bool) or not isinstance(m_bits, int):
+        return geo["m_bits"], geo["k"]
+    if isinstance(m_bits, bool) or not isinstance(m_bits, int):
+        # bool is an int subclass: m_bits=True would "validate" and
+        # build a degenerate 1-bit filter (r9 ADVICE)
         raise ValueError(f"m_bits must be an int or 'auto', got {m_bits!r}")
-    else:
-        if n_items is not None:
-            raise ValueError(
-                "n_items only applies to m_bits='auto' sizing — an "
-                "explicit geometry ignores the member count")
-        if k is None:
-            k = DEFAULT_K
-    tmp = f"{table}_words_rebuild"
-    write_bucketed(_word_rows(corpus, text_col, m_bits, k),
-                   tmp, ["_word"], nb)
-    _swap_in_word_table(spark, table, tmp)
-    _set_bloom_spec(spark, table, m_bits, k)
-    return m_bits, k
-
-
-def _swap_in_word_table(spark: SparkSession, table: str, tmp: str) -> None:
-    """Swap ``tmp`` in as ``{table}_words`` via rename-rename-drop (the
-    compact/rebuild shared tail): never data-destroying — a crash
-    between the renames leaves both datasets under the ``_old`` / tmp
-    names, recovery is one manual rename; a stale ``_old`` warehouse
-    location from a previous crash is cleared through the Hadoop
-    FileSystem API (works for whatever filesystem the warehouse URI
-    names)."""
-    old = f"{table}_words_old"
-    spark.sql(f"DROP TABLE IF EXISTS `{old}`")
-    jvm = spark._jvm
-    wh_path = jvm.org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), old.lower())
-    fs = wh_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(wh_path):
-        fs.delete(wh_path, True)
-    spark.sql(f"ALTER TABLE `{table}_words` RENAME TO `{old}`")
-    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{table}_words`")
-    spark.sql(f"DROP TABLE `{old}`")
-    # drop any cached file listing under the NEW name (plans created
-    # BEFORE the swap hold the old snapshot and must be re-created —
-    # re-collecting one raises FAILED_READ_FILE, same contract as
-    # rebuild_minhash_index)
-    spark.catalog.refreshTable(f"{table}_words")
+    if n_items is not None:
+        raise ValueError(
+            "n_items only applies to m_bits='auto' sizing — an "
+            "explicit geometry ignores the member count")
+    return m_bits, DEFAULT_K if k is None else k
 
 
 def bloom_index_generation_stats(spark: SparkSession, table: str,

@@ -492,24 +492,22 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def _write_index_tables(banded: DataFrame, sig: DataFrame, table: str,
-                        n_buckets: int, mode: str = "overwrite") -> None:
-    """Write a MinHash index's ``_buckets`` and ``_shingles`` tables.  The
-    two writes are independent actions over the same materialized
-    ``sig``: submit them from two driver threads so the second write's
-    tasks back-fill executors idled by the first write's tail (guide
-    §2.6 overlap; jobs are FIFO, the wall-clock is max() instead of
-    sum()).  Each thread carries the caller's local properties, so its
+                        write) -> None:
+    """Write a MinHash index's ``_buckets`` and ``_shingles`` tables with
+    ``write(frame, table, bucket_cols)``.  The two writes are independent
+    actions over the same materialized ``sig``: submit them from two
+    driver threads so the second write's tasks back-fill executors
+    idled by the first write's tail (guide §2.6 overlap; jobs are FIFO,
+    the wall-clock is max() instead of sum()).  Each thread carries the caller's local properties, so its
     jobs keep the caller's job tags."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    from frames_map_reduce_spark.sources import write_bucketed
-
     spark = sig.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(inheritable_thread_target(spark)(write_bucketed),
-                            frame, f"{table}{suffix}", [by], n_buckets, mode)
+        futs = [pool.submit(inheritable_thread_target(spark)(write),
+                            frame, f"{table}{suffix}", [by])
                 for frame, suffix, by in (
                     (banded.select("ref_id", "_bucket"), "_buckets", "_bucket"),
                     (sig.select("ref_id", "_sh64"), "_shingles", "ref_id"))]
@@ -546,6 +544,8 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
     inline note); extends inherit the built spec from the catalog."""
     from pyspark import StorageLevel
 
+    from frames_map_reduce_spark.sources import write_bucketed
+
     require_columns(corpus, [text_col, id_col])
     sig = _shingle_sig_frame(corpus, text_col, id_col, shingle_k,
                              num_perm, seed) \
@@ -563,9 +563,6 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
         # past 32 MB instead — the right trade, see clamp_buckets).
         from frames_map_reduce_spark.sources import clamp_buckets
         n_buckets = clamp_buckets(n_docs * 4096)
-    elif isinstance(n_buckets, bool) or not isinstance(n_buckets, int):
-        raise ValueError(
-            f"n_buckets must be an int or 'auto', got {n_buckets!r}")
     try:
         banded = _minhash_banded(sig, "ref_id", num_perm, bands)
         sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
@@ -573,7 +570,9 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
         pruned = banded.join(F.broadcast(ok), "_bucket")
         # Safe to overlap: ``sig`` is already materialized by count(), so
         # there is no concurrent cache-population race.
-        _write_index_tables(pruned, sig, table, n_buckets)
+        _write_index_tables(
+            pruned, sig, table,
+            lambda df, name, by: write_bucketed(df, name, by, n_buckets))
     finally:
         sig.unpersist()
 
@@ -598,13 +597,9 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     tests/test_dedup.py::test_minhash_index_rebuild_lifecycle."""
     from pyspark import StorageLevel
 
-    from frames_map_reduce_spark.sources import table_num_buckets
+    from frames_map_reduce_spark.sources import append_bucketed
 
     require_columns(corpus_delta, [text_col, id_col])
-    # append must reuse the table's recorded bucket count — read it
-    # from the catalog (before any signing) rather than trusting a
-    # caller parameter
-    nb = table_num_buckets(corpus_delta.sparkSession, f"{table}_buckets")
     sig = _shingle_sig_frame(corpus_delta, text_col, id_col, shingle_k,
                              num_perm, seed) \
         .withColumnRenamed(id_col, "ref_id") \
@@ -612,7 +607,8 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     sig.count()
     try:
         banded = _minhash_banded(sig, "ref_id", num_perm, bands)
-        _write_index_tables(banded, sig, table, nb, mode="append")
+        _write_index_tables(banded, sig, table,
+                            lambda df, name, _by: append_bucketed(df, name))
     finally:
         sig.unpersist()
 
@@ -649,16 +645,10 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
     Reads only the skinny ``{table}_buckets`` table (never the corpus,
     never the shingle table — signatures are immutable, only the cap
     policy is re-evaluated), drops every bucket that has grown past
-    ``max_bucket``, and swaps the compacted table in via a temp table +
-    two catalog renames (Spark refuses to overwrite a table that its
-    own write plan reads).  The swap is rename-rename-drop, NOT atomic:
-    a crash between the renames leaves no ``{table}_buckets`` — but
-    BOTH datasets survive under ``{table}_buckets_old`` /
-    ``{table}_buckets_rebuild``, so recovery is one manual rename (a
-    drop-first sequence would destroy the index in that window; this
-    ordering never loses data).  A leftover ``_old`` from a crash after
-    the second rename is dropped on the next rebuild.  The shingle
-    table is untouched:
+    ``max_bucket``, and replaces the table under its recorded bucket
+    count through :func:`sources.write_bucketed` (its replace contract
+    covers the swap, crash-window recovery and stale plans).  The
+    shingle table is untouched:
     verify-side rows for capped docs are unreachable without a bucket
     row, and a later rebuild with a looser cap cannot be run anyway
     (capped bucket rows are gone — re-run :func:`build_minhash_index`
@@ -676,25 +666,7 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
     sizes = src.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
     ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
     pruned = src.join(F.broadcast(ok), "_bucket").select("ref_id", "_bucket")
-    tmp = f"{table}_buckets_rebuild"
-    old = f"{table}_buckets_old"
-    write_bucketed(pruned, tmp, ["_bucket"], nb)
-    spark.sql(f"DROP TABLE IF EXISTS `{old}`")
-    # a crash mid-swap in a PREVIOUS process can leave the `_old`
-    # warehouse DIRECTORY with no catalog entry; the rename below would
-    # refuse the occupied destination — clear the stale location through
-    # the Hadoop FileSystem API (r6 ADVICE: os.path/shutil only see a
-    # local warehouse; this works for hdfs://, s3a://, file://, … —
-    # whatever filesystem the warehouse URI names)
-    jvm = spark._jvm
-    wh_path = jvm.org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), old.lower())
-    fs = wh_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(wh_path):
-        fs.delete(wh_path, True)
-    spark.sql(f"ALTER TABLE `{table}_buckets` RENAME TO `{old}`")
-    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{table}_buckets`")
-    spark.sql(f"DROP TABLE `{old}`")
+    write_bucketed(pruned, f"{table}_buckets", ["_bucket"], nb)
 
 
 def minhash_probe_index(spark, table: str, queries: DataFrame,

@@ -727,17 +727,12 @@ def extend_media_contamination_index(eval_delta: DataFrame, table: str,
     ``build(A); extend(B)`` probes bit-identically to
     ``build(A ∪ B)`` (law pinned in tests and by the registry oracle).
     """
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    from frames_map_reduce_spark.sources import append_bucketed
 
     require_columns(eval_delta, [id_col, binary_col])
-    nb = table_num_buckets(eval_delta.sparkSession, f"{table}_bands")
     sigs = _media_sigs(eval_delta, id_col, binary_col, kind, grid,
                        n_bands, fake)
-    write_bucketed(_banded_rows(sigs), f"{table}_bands", ["bucket"], nb,
-                   mode="append")
+    append_bucketed(_banded_rows(sigs), f"{table}_bands")
 
 
 def probe_media_contamination_index(spark, table: str, incoming: DataFrame,

@@ -436,25 +436,24 @@ def build_ivf_pq_index(corpus: DataFrame, table: str,
 def extend_ivf_pq_index(new_df: DataFrame, table: str, centroids,
                         codebooks, id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        frac_bits: int = 8,
-                        n_buckets: int | None = None) -> None:
+                        frac_bits: int = 8) -> None:
     """Maintenance half: PQ-encode a NEW batch against the FROZEN
     coarse quantizer + codebooks and APPEND to the persisted bucketed
     lists — the ``extend_ivf_index`` contract verbatim: no retraining,
-    no rewrite, and because both halves of the spec are frozen,
+    no rewrite, the bucket spec read from the catalog, and because both
+    halves of the spec are frozen,
     ``probe(extend(build(A), B)) ≡ probe(build(A ∪ B, frozen spec))``
     exactly (the registry oracle replays the rebuild).  Retrain
     trigger: ``similarity.ivf_drift_stats`` applies unchanged — PQ
     adds no new drift mode of its own (codebook fit degrades exactly
     when the cells drift)."""
     import numpy as np
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed
     require_columns(new_df, [id_col, vec_col])
     cents = np.asarray(centroids, dtype=np.float64)
     encoded = pq_encode(new_df, cents, codebooks, id_col, vec_col,
                         frac_bits)
-    write_bucketed(encoded, table, ["_centroid"],
-                   n_buckets or len(cents), mode="append")
+    append_bucketed(encoded, table)
 
 
 def ivf_pq_topk(spark, table: str, queries: DataFrame, centroids,

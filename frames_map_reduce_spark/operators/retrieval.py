@@ -314,15 +314,11 @@ def extend_contamination_index(eval_delta: DataFrame, table: str,
     membership, not multiplicity, so ``build(A); extend(B)`` probes
     bit-identically to ``build(A ∪ B)`` (law pinned in
     tests/test_retrieval.py)."""
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    from frames_map_reduce_spark.sources import append_bucketed
 
     require_columns(eval_delta, [text_col])
     if n < 1:
         raise ValueError("extend_contamination_index needs n >= 1")
-    nb = table_num_buckets(eval_delta.sparkSession, f"{table}_grams")
     # explode_outer + isnotnull: see ngram_contamination — avoids the
     # InferFiltersFromGenerate double evaluation of the n-gram chain.
     grams = (eval_delta
@@ -330,7 +326,7 @@ def extend_contamination_index(eval_delta: DataFrame, table: str,
                  TX.word_ngrams(F.col(text_col), n))).alias("g"))
              .where(F.col("g").isNotNull())
              .distinct())
-    write_bucketed(grams, f"{table}_grams", ["g"], nb, mode="append")
+    append_bucketed(grams, f"{table}_grams")
 
 
 def probe_contamination_index(spark, table: str, incoming: DataFrame,

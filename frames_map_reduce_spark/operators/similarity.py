@@ -792,8 +792,8 @@ def ivf_topk_indexed(spark, table: str, queries: DataFrame, centroids,
 
 
 def extend_ivf_index(new_df: DataFrame, table: str, centroids,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     n_buckets: int | None = None) -> None:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> None:
     """Maintenance half of the IVF deployment shape (r11 verdict #7 —
     the bloom/minhash build→extend lifecycle applied to ANN): assign a
     batch of NEW vectors to the EXISTING frozen coarse quantizer
@@ -804,8 +804,8 @@ def extend_ivf_index(new_df: DataFrame, table: str, centroids,
     or extend time — ``probe(extend(build(A), B)) ≡ probe(build(A∪B,
     centroids=frozen))`` exactly (the registry row ``ann_ivf_extend``
     hash-proves this against a rebuild-replaying oracle; the append
-    keeps the build's bucket spec, so bucket pruning and the
-    zero-exchange probe are untouched).
+    reads the build's bucket spec from the catalog, so bucket pruning
+    and the zero-exchange probe are untouched).
 
     When to retrain instead of extend: :func:`ivf_drift_stats` — the
     frozen quantizer quietly degrades as the data distribution moves
@@ -814,11 +814,10 @@ def extend_ivf_index(new_df: DataFrame, table: str, centroids,
     require_columns(new_df, [id_col, vec_col])
     import numpy as np
 
-    from frames_map_reduce_spark.sources import write_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed
     cents = np.asarray(centroids, dtype=np.float64)
     assigned = ivf_assign(new_df.select(id_col, vec_col), vec_col, cents)
-    write_bucketed(assigned, table, ["_centroid"],
-                   n_buckets or len(cents), mode="append")
+    append_bucketed(assigned, table)
 
 
 _VEC_MICRO = 1_000_000

@@ -139,10 +139,11 @@ def clamp_buckets(est_bytes: int, lo: int = 8, hi: int = 32768,
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
-                   n_buckets: int, mode: str = "overwrite") -> None:
-    """Bucketed sink: pre-shuffles once at write time so later joins and
-    aggregations on ``bucket_cols`` are shuffle-free — the co-location
-    primitive for repeated 100 TB joins.
+                   n_buckets: int) -> None:
+    """Replace ``table`` with ``df`` as a bucketed table — the one
+    replace path of every persisted index.  Bucketing pre-shuffles once
+    at write time so later joins and aggregations on ``bucket_cols`` are
+    shuffle-free — the co-location primitive for repeated 100 TB joins.
 
     The input is repartitioned on ``bucket_cols`` into ``n_buckets``
     partitions before the write: ``repartition(n, cols)`` is the SAME
@@ -155,20 +156,84 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
     small-files problem; r13 optimization round).  At 100 TB the same
     repartition is what keeps file counts proportional to n_buckets
     instead of tasks × n_buckets; size n_buckets for ~128 MB-1 GB per
-    bucket there."""
-    if mode == "overwrite":
-        # A fresh session's catalog doesn't know tables a previous process
-        # left in the warehouse dir, and saveAsTable refuses to reuse the
-        # stale location — drop both the entry and the directory.
-        import os
-        import shutil
-        from urllib.parse import urlparse
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        loc = os.path.join(wh, table.lower())
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
+    bucket there.
+
+    Replace contract: ``df`` is written to ``{table}_rebuild`` and
+    swapped in by rename-rename-drop (``table`` → ``{table}_old``,
+    ``{table}_rebuild`` → ``table``, drop ``{table}_old``).  So a write
+    that fails leaves the live table as it was, and ``df`` may read the
+    table it replaces.  The swap is not atomic, but it never destroys
+    data: a crash between the renames leaves no ``table``, yet both
+    datasets survive under ``{table}_old`` / ``{table}_rebuild`` and one
+    manual rename recovers.  A leftover ``_rebuild`` or ``_old`` — a
+    catalog entry, or in a fresh session a bare warehouse directory — is
+    cleared by the next replace through the Hadoop FileSystem API (so
+    for hdfs://, s3a://, file://, whatever the warehouse URI names).
+    Plans created before the replace hold the old file listing and must
+    be re-created: re-collecting one raises ``FAILED_READ_FILE``."""
+    if isinstance(n_buckets, bool) or not isinstance(n_buckets, int):
+        # bool is an int subclass: n_buckets=True would write 1 bucket
+        raise ValueError(f"n_buckets must be an int, got {n_buckets!r}")
+    spark = df.sparkSession
+    tmp, old = f"{table}_rebuild", f"{table}_old"
+    spark.sql(f"DROP TABLE IF EXISTS `{tmp}`")
+    _clear_location(spark, tmp)
+    _save_bucketed(df, tmp, bucket_cols, n_buckets, "overwrite")
+    spark.sql(f"DROP TABLE IF EXISTS `{old}`")
+    _clear_location(spark, old)
+    live = spark.catalog.tableExists(table)
+    if live:
+        spark.sql(f"ALTER TABLE `{table}` RENAME TO `{old}`")
+    else:
+        # a fresh session's catalog does not know a table a previous
+        # process left in the warehouse, and the rename refuses to
+        # move onto its directory
+        _clear_location(spark, table)
+    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{table}`")
+    if live:
+        spark.sql(f"DROP TABLE `{old}`")
+    spark.catalog.refreshTable(table)
+
+
+def append_bucketed(df: DataFrame, table: str) -> None:
+    """Append ``df`` to a table :func:`write_bucketed` wrote, under the
+    bucket spec the catalog recorded for it — the one append path of
+    every persisted index, so an extend can never write under a bucket
+    count or columns other than the build's."""
+    n_buckets, bucket_cols = _bucket_spec(df.sparkSession, table)
+    _save_bucketed(df, table, bucket_cols, n_buckets, "append")
+
+
+def table_num_buckets(spark: SparkSession, table: str) -> int:
+    """The bucket count the catalog recorded for ``table`` — the catalog,
+    not a caller parameter, owns the bucket spec of a persisted index.
+    Raises ``ValueError`` when none is recorded (see :func:`_bucket_spec`)."""
+    return _bucket_spec(spark, table)[0]
+
+
+def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str]]:
+    """``(Num Buckets, Bucket Columns)`` from one ``DESCRIBE TABLE
+    EXTENDED``, collected and read on the driver: the command result is
+    local, so this runs no Spark job (a DataFrame filter over it would
+    run two).  A table WITHOUT a recorded bucket spec (externally created,
+    or written unbucketed) raises rather than assuming one: appending
+    under a guessed spec would silently break the probe's pruned
+    bucketed-scan contract."""
+    # the detailed-table section follows the column rows, so its keys win
+    desc = {r["col_name"]: r["data_type"] for r in
+            spark.sql(f"DESCRIBE TABLE EXTENDED `{table}`").collect()}
+    if "Num Buckets" not in desc:
+        raise ValueError(
+            f"`{table}` has no 'Num Buckets' in the catalog — it was not "
+            "written by write_bucketed; refusing to write under an "
+            "assumed bucket spec")
+    cols = [c.strip().strip("`")
+            for c in desc["Bucket Columns"].strip("[]").split(",")]
+    return int(desc["Num Buckets"]), cols
+
+
+def _save_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
+                   n_buckets: int, mode: str) -> None:
     (df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
        .write.mode(mode)
        .bucketBy(n_buckets, *bucket_cols)
@@ -177,18 +242,11 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
        .saveAsTable(table))
 
 
-def table_num_buckets(spark: SparkSession, table: str) -> int:
-    """The bucket count the catalog recorded for ``table`` — the catalog,
-    not a caller parameter, owns the bucket spec of a persisted index.
-    A table WITHOUT a recorded bucket spec (externally created, or
-    written unbucketed) raises rather than assuming one: appending under
-    a guessed spec would silently break the probe's pruned bucketed-scan
-    contract."""
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED `{table}`") \
-                .filter(F.col("col_name") == "Num Buckets").first()
-    if desc is None:
-        raise ValueError(
-            f"`{table}` has no 'Num Buckets' in the catalog — it was not "
-            "written by write_bucketed; refusing to write under an "
-            "assumed bucket spec")
-    return int(desc["data_type"])
+def _clear_location(spark: SparkSession, table: str) -> None:
+    """Delete the warehouse directory a managed ``table`` would own, if
+    one is there."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), table.lower())
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path):
+        fs.delete(path, True)

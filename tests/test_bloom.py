@@ -32,7 +32,7 @@ def _probe_map(spark, table, queries, **spec):
 
 
 def _drop(spark, table):
-    for suffix in ("words", "words_old", "words_compact", "words_rebuild"):
+    for suffix in ("words", "words_old", "words_rebuild"):
         spark.sql(f"DROP TABLE IF EXISTS {table}_{suffix}")
 
 

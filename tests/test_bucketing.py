@@ -14,13 +14,8 @@ from frames_map_reduce_spark.sources import table_num_buckets, write_bucketed
 def bucketed_tables(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
     # a fresh session has an empty in-memory catalog, but the warehouse
-    # DIRECTORY survives earlier runs and blocks saveAsTable
-    import shutil
-    for d in ("spark-warehouse/li_b", "spark-warehouse/ord_b"):
-        shutil.rmtree(d, ignore_errors=True)
+    # DIRECTORIES of earlier runs survive: write_bucketed clears them
     write_bucketed(li.withColumnRenamed("l_orderkey", "okey"), "li_b", ["okey"], 8)
     write_bucketed(orders.withColumnRenamed("o_orderkey", "okey"), "ord_b", ["okey"], 8)
     yield spark.table("li_b"), spark.table("ord_b")
@@ -141,3 +136,94 @@ def test_native_topk_matches_grouped_map(spark, lineitem):
     a = sorted(tuple(r) for r in native.collect())
     b = sorted(tuple(r) for r in gm.collect())
     assert a == b
+
+
+def test_table_num_buckets_runs_no_job(spark, bucketed_tables):
+    """The catalog spec read is a driver-side look at one DESCRIBE
+    result: reading it launches no Spark job."""
+    sc, group = spark.sparkContext, "fmr-spec-read-test"
+    sc.setJobGroup(group, "bucket spec read")
+    try:
+        assert table_num_buckets(spark, "li_b") == 8
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def _build_contamination(df, table):
+    from frames_map_reduce_spark.operators.retrieval import (
+        build_contamination_index,
+    )
+    build_contamination_index(df, table, "text", n=3)
+
+
+def _probe_contamination(spark, table, queries):
+    from frames_map_reduce_spark.operators.retrieval import (
+        probe_contamination_index,
+    )
+    return probe_contamination_index(spark, table, queries, "text",
+                                     "doc_id", n=3)
+
+
+def _build_bloom(df, table):
+    from frames_map_reduce_spark.operators.bloom import build_bloom_index
+    build_bloom_index(df, table, "text")
+
+
+def _probe_bloom(spark, table, queries):
+    from frames_map_reduce_spark.operators.bloom import bloom_probe_index
+    return bloom_probe_index(spark, table, queries, "text", "doc_id")
+
+
+def _build_minhash(df, table):
+    from frames_map_reduce_spark.operators.dedup import build_minhash_index
+    build_minhash_index(df, table, "text", "doc_id")
+
+
+def _probe_minhash(spark, table, queries):
+    from frames_map_reduce_spark.operators.dedup import minhash_probe_index
+    return minhash_probe_index(spark, table, queries, "text", "doc_id",
+                               threshold=0.5)
+
+
+@pytest.mark.parametrize("suffix,build,probe", [
+    ("_grams", _build_contamination, _probe_contamination),
+    ("_words", _build_bloom, _probe_bloom),
+    ("_buckets", _build_minhash, _probe_minhash),
+], ids=["contamination", "bloom", "minhash"])
+def test_failed_replace_keeps_the_old_index(spark, suffix, build, probe):
+    """A build whose write fails leaves the index it was replacing
+    readable and unchanged, and the next good build clears what the
+    failed one left behind."""
+    table = "failed_replace_t"
+    good = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "pack my box with five dozen liquor jugs")],
+        "doc_id long, text string")
+    bad = good.withColumn(
+        "text", F.raise_error(F.lit("injected write failure")).cast("string"))
+    queries = good.union(spark.createDataFrame(
+        [(3, "sphinx of black quartz judge my vow")],
+        "doc_id long, text string"))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    try:
+        build(good, table)
+        index_before = rows(spark.table(f"{table}{suffix}"))
+        probe_before = rows(probe(spark, table, queries))
+        assert probe_before
+        with pytest.raises(Exception, match="injected write failure"):
+            build(bad, table)
+        assert rows(spark.table(f"{table}{suffix}")) == index_before
+        assert rows(probe(spark, table, queries)) == probe_before
+        build(good, table)
+        assert rows(probe(spark, table, queries)) == probe_before
+        assert not spark.catalog.tableExists(f"{table}{suffix}_rebuild")
+    finally:
+        for s in ("_grams", "_words", "_buckets", "_shingles"):
+            for extra in ("", "_rebuild", "_old"):
+                spark.sql(f"DROP TABLE IF EXISTS {table}{s}{extra}")

@@ -238,23 +238,29 @@ class TestIvfPq:
             m_sub=8, k_codes=16, keep=lambda i: i >= 5)
         assert books.dtype == np.int64 and (books == replay).all()
 
-    def test_extend_equals_rebuild_and_adc_law(self, spark, embeddings):
+    @pytest.mark.parametrize("n_buckets", [None, 4],
+                             ids=["default_buckets", "4_buckets"])
+    def test_extend_equals_rebuild_and_adc_law(self, spark, embeddings,
+                                               n_buckets):
         """build(A); extend(B) probes identically to a rebuild over
         A ∪ B at the frozen spec, and each ADC score equals the manual
         reconstruction qq·cq + Σ qq_m·codebook[m][code] recomputed in
-        numpy from the persisted codes."""
+        numpy from the persisted codes.  The extend appends under the
+        bucket count the build recorded, also when that is not the
+        centroid count."""
         from frames_map_reduce_spark.sources import write_bucketed
         queries, corpus = self._split(embeddings)
         build = corpus.filter(F.col("vec_id") % 3 != 2)
         delta = corpus.filter(F.col("vec_id") % 3 == 2)
         cents, books = QZ.build_ivf_pq_index(
-            build, "t_pq_ext", n_centroids=8, m_sub=8, k_codes=16)
+            build, "t_pq_ext", n_centroids=8, m_sub=8, k_codes=16,
+            n_buckets=n_buckets)
         QZ.extend_ivf_pq_index(delta, "t_pq_ext", cents, books)
         out = QZ.ivf_pq_topk(spark, "t_pq_ext", queries, cents, books,
                              k=5, nprobe=3)
         got = sorted(map(tuple, out.collect()))
         write_bucketed(QZ.pq_encode(corpus, cents, books), "t_pq_reb",
-                       ["_centroid"], 8)
+                       ["_centroid"], n_buckets or 8)
         reb = QZ.ivf_pq_topk(spark, "t_pq_reb", queries, cents, books,
                              k=5, nprobe=3)
         assert got == sorted(map(tuple, reb.collect())) and got

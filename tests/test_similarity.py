@@ -470,11 +470,15 @@ def test_hierarchical_centroids_deterministic_and_usable(spark, embeddings):
 # IVF index maintenance arc (r11 verdict #7): extend + drift trigger
 # ---------------------------------------------------------------------------
 
-def test_extend_ivf_index_equals_rebuild(spark, embeddings):
+@pytest.mark.parametrize("n_buckets", [None, 8],
+                         ids=["default_buckets", "8_buckets"])
+def test_extend_ivf_index_equals_rebuild(spark, embeddings, n_buckets):
     """The lifecycle law: build(A) + extend(B) must probe IDENTICALLY to
     a from-scratch rebuild of A∪B at the SAME frozen centroids — the
     quantizer is frozen, so each row's cell is arrival-order-blind, and
-    the bucketed append preserves the probe's physical shape."""
+    the bucketed append preserves the probe's physical shape.  The
+    extend appends under the bucket count the build recorded, also when
+    that is not the centroid count."""
     queries = (embeddings.filter(F.col("vec_id") < 5)
                          .select(F.col("vec_id").alias("query_id"),
                                  "embedding"))
@@ -482,7 +486,8 @@ def test_extend_ivf_index_equals_rebuild(spark, embeddings):
     a = corpus.filter(F.col("vec_id") % 4 != 3)
     b = corpus.filter(F.col("vec_id") % 4 == 3)
 
-    cents = SIM.build_ivf_index(a, "t_ivf_ext", n_centroids=16)
+    cents = SIM.build_ivf_index(a, "t_ivf_ext", n_centroids=16,
+                                n_buckets=n_buckets)
     SIM.extend_ivf_index(b, "t_ivf_ext", cents)
     # the extended table holds exactly the union, assigned
     assert spark.table("t_ivf_ext").count() == corpus.count()
@@ -492,7 +497,8 @@ def test_extend_ivf_index_equals_rebuild(spark, embeddings):
     assigned = SIM.ivf_assign(corpus.select("vec_id", "embedding"),
                               "embedding", cents)
     from frames_map_reduce_spark.sources import write_bucketed
-    write_bucketed(assigned, "t_ivf_rebuild", ["_centroid"], 16)
+    write_bucketed(assigned, "t_ivf_rebuild", ["_centroid"],
+                   n_buckets or 16)
     want = sorted(tuple(r) for r in SIM.ivf_topk_indexed(
         spark, "t_ivf_rebuild", queries, cents, k=5, nprobe=4).collect())
     assert got == want and len(got) > 0

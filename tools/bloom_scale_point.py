@@ -37,7 +37,7 @@ def main() -> None:
 
     spark = get_spark("bloom-scale-point")
     table = "bloom_scale_point"
-    for suffix in ("words", "words_old", "words_compact"):
+    for suffix in ("words", "words_old", "words_rebuild"):
         spark.sql(f"DROP TABLE IF EXISTS {table}_{suffix}")
 
     docs = spark.range(n_docs).select(
@@ -84,7 +84,7 @@ def main() -> None:
         "measured_fpr": measured_fpr,
     }
     assert agg["members"] == 100_000, "false negative — impossible"
-    for suffix in ("words", "words_old", "words_compact"):
+    for suffix in ("words", "words_old", "words_rebuild"):
         spark.sql(f"DROP TABLE IF EXISTS {table}_{suffix}")
     print(json.dumps(record))
 
