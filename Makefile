@@ -14,8 +14,13 @@ verify:
 verify-fast:
 	python tools/verify_all.py --fast
 
+# the Tier-1 command in ROADMAP.md: the suite a change must
+# keep green, on every CPU this process may use, within its time budget
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q \
+	    --continue-on-collection-errors -p no:cacheprovider
 
 parity:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \

@@ -5,6 +5,15 @@ Session defaults are chosen for scale-out behavior (AQE on, skew-join
 handling on, Arrow for the pandas interchange paths) while remaining
 correct on ``local[N]`` for tests.
 
+Codegen default: every fold pipeline and operator runs as whole-stage
+Java that Janino compiles, 7-11 ms of CPU per class, and Spark keeps the
+compiled classes in one JVM-wide cache bounded by the static conf
+``spark.sql.codegen.cache.maxEntries`` (100 by default).  One pass of the
+``corpus_ingest`` benchmark workload needs about 330-360 classes, so at
+100 a session that runs the same operators again recompiles nearly all
+of them (~275 per pass).  The session raises the bound to 1024, so a
+long-lived session compiles each operator's code once.
+
 Worker default: PySpark calls ``importlib.invalidate_caches()`` at the
 start of every Python task (``pyspark/worker_util.py``,
 ``setup_spark_files``), so that a file shipped by ``addPyFile`` becomes
@@ -73,6 +82,15 @@ def get_spark(
       sf0.01 locally and at 100 TB on a cluster.
     - Arrow enabled: every applyInPandas / pandas_udf path in this engine
       moves batches over Arrow, never row-at-a-time pickling.
+    - Codegen class cache of 1024 entries
+      (``spark.sql.codegen.cache.maxEntries``, Spark's default is 100):
+      about 3x the ~330-360 classes one ``corpus_ingest`` benchmark pass
+      compiles, so the operators a session runs again hit the cache
+      instead of recompiling, and still bounded, so the metaspace the
+      loaded classes hold cannot grow without limit.  It is a STATIC
+      conf, read once per JVM: ``getOrCreate()`` over a session that
+      already exists keeps that session's value, and only a fresh JVM
+      picks up a new one (``extra_conf`` overrides it like any default).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS",
                           str(len(os.sched_getaffinity(0))))
@@ -95,6 +113,7 @@ def get_spark(
         # a non-ANSI session would silently wrap BIGINT instead of
         # throwing (r10 ADVICE)
         .config("spark.sql.ansi.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -278,6 +278,36 @@ def stream_to_memory(result: DataFrame, name: str, output_mode: str = "complete"
                   .start())
 
 
+def _start_foreach_batch(stream: DataFrame, apply, checkpoint: str | None):
+    """Start ``apply`` as an ``availableNow`` ``foreachBatch`` query whose
+    every micro-batch runs under the local properties the caller held at
+    this call (job tags, scheduler pool, ...).  The micro-batches run on
+    the query's own thread: it inherits the caller's properties once, at
+    start, and whatever one batch leaves set there would otherwise
+    carry into the next.  Keys under ``spark.`` and ``callSite.`` are
+    left alone: they hold the query's own job group, which ``stop()``
+    cancels by."""
+    sc = stream.sparkSession.sparkContext
+    props = sc._jsc.sc().getLocalProperties()
+    caller = {k: props.getProperty(k) for k in props.stringPropertyNames()
+              if not k.startswith(("spark.", "callSite."))}
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        before = {k: sc.getLocalProperty(k) for k in caller}
+        for k, v in caller.items():
+            sc.setLocalProperty(k, v)
+        try:
+            apply(batch_df, batch_id)
+        finally:
+            for k, v in before.items():
+                sc.setLocalProperty(k, v)
+
+    writer = stream.writeStream.foreachBatch(run).trigger(availableNow=True)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
+
+
 # ---------------------------------------------------------------------------
 # Streaming snapshot maintenance: changelog stream -> latest-wins table
 # ---------------------------------------------------------------------------
@@ -408,11 +438,7 @@ def stream_merge_snapshot(stream: DataFrame, snapshot_dir: str,
             shutil.rmtree(os.path.join(snapshot_dir, d),
                           ignore_errors=True)
 
-    writer = stream.writeStream.foreachBatch(apply) \
-        .trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint)
 
 
 def stream_classifier_gate(stream: DataFrame,
@@ -596,11 +622,7 @@ def stream_ingest_gate_v2(stream: DataFrame, words, weights,
         out.write.mode("overwrite").parquet(
             os.path.join(sink_dir, f"batch_id={batch_id}"))
 
-    writer = gated.writeStream.foreachBatch(apply) \
-        .trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(gated, apply, checkpoint)
 
 
 def stream_decontamination_gate(stream: DataFrame, table: str,
@@ -667,11 +689,7 @@ def stream_decontamination_gate(stream: DataFrame, table: str,
         out.write.mode("overwrite").parquet(
             os.path.join(sink_dir, f"batch_id={batch_id}"))
 
-    writer = stream.writeStream.foreachBatch(apply) \
-        .trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint)
 
 
 def stream_drift_monitor(stream: DataFrame, value_col: str,
@@ -715,11 +733,7 @@ def stream_drift_monitor(stream: DataFrame, value_col: str,
         (one.coalesce(1).write.mode("overwrite")
             .parquet(os.path.join(sink_dir, f"batch_id={batch_id}")))
 
-    writer = stream.writeStream.foreachBatch(apply) \
-        .trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint)
 
 
 def stream_quality_dashboard(stream: DataFrame, text_col: str,
@@ -875,8 +889,4 @@ def stream_quality_dashboard(stream: DataFrame, text_col: str,
         (row.coalesce(1).write.mode("overwrite")
             .parquet(os.path.join(sink_dir, f"batch_id={batch_id}")))
 
-    writer = stream.writeStream.foreachBatch(apply) \
-        .trigger(availableNow=True)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint)

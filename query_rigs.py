@@ -3596,21 +3596,31 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe two-stage aggregation (skew.salted_aggregate): each hot
     key is split into 16 salted sub-keys for the heavy first pass, then
-    the small partials re-merge.  Result is IDENTICAL to the plain
-    group-by, so the plain aggregate is a full value oracle."""
+    the small partials re-merge.  Sum and mean are staged in integer
+    cents (``value`` is cents-exact in the data): a BIGINT sum is the
+    same under any partitioning, where a double sum differs from the
+    plain group-by's in the last ulp — enough to split ``round(avg, 6)``
+    at a 7th-decimal tie (1374.11 / 32 = 42.9409375).  The mean is a
+    half-up integer division onto the 6dp grid (the funnel/scd2
+    lesson; ``value`` >= 0, so ``div``'s truncation is the half-up
+    rule), so the plain aggregate with the same staging is a full value
+    oracle."""
     from frames_map_reduce_spark.skew import salted_aggregate
-    ev = _events(spark, sf_dir)
+    ev = _events(spark, sf_dir).withColumn(
+        "_cents", F.round(F.col("value") * 100).cast("bigint"))
     out = salted_aggregate(
         ev, ["event_type"],
         {"n": ("count_star", ""),
-         "sum_value": ("sum", "value"),
-         "avg_value": ("mean", "value"),
+         "_sum_cents": ("sum", "_cents"),
+         "_n_value": ("count", "_cents"),
          "max_value": ("max", "value")},
         salts=16)
     return out.select(
         "event_type", "n",
-        F.round("sum_value", 2).alias("sum_value"),
-        F.round("avg_value", 6).alias("avg_value"),
+        (F.col("_sum_cents") / F.lit(100.0)).alias("sum_value"),
+        (F.expr("case when _n_value > 0 then (2 * _sum_cents * 10000"
+                " + _n_value) div (2 * _n_value) end") / F.lit(1e6))
+        .alias("avg_value"),
         F.round("max_value", 2).alias("max_value"))
 
 
@@ -6550,12 +6560,20 @@ def oracle_sql() -> dict[str, str]:
             SELECT l_returnflag, 'sum_price', sum_price FROM wide
             UNION ALL
             SELECT l_returnflag, 'sum_tax', sum_tax FROM wide""",
+        # the rig's integer-cent staging: exact BIGINT sums, one
+        # division for the sum, a half-up integer division for the mean
         "salted_agg": """
             SELECT event_type, count(*) AS n,
-                   round(sum(value), 2) AS sum_value,
-                   round(avg(value), 6) AS avg_value,
+                   CAST(sum(c) AS BIGINT) / 100.0 AS sum_value,
+                   CASE WHEN count(c) > 0 THEN
+                     CAST((2 * sum(c) * 10000 + count(c))
+                          // (2 * count(c)) AS BIGINT) / 1e6
+                   END AS avg_value,
                    round(max(value), 2) AS max_value
-            FROM events GROUP BY event_type""",
+            FROM (SELECT event_type, value,
+                         CAST(round(value * 100) AS BIGINT) AS c
+                  FROM events)
+            GROUP BY event_type""",
         # The sketch itself is implementation-specific; what IS exact is
         # the count_distinct twin and the guarantee that the HLL estimate
         # sits inside its 3*rsd envelope — encoded as within_tol = 1.

@@ -1,10 +1,12 @@
-"""The worker runtime default in ``session.py``: PySpark's per-task
+"""The runtime defaults in ``session.py``: the codegen class cache holds
+more than Spark's default 100 classes, and PySpark's per-task
 ``importlib.invalidate_caches()`` re-reads a zip archive's directory only
 when the archive's stat changed, and imports still follow new and
 rewritten zips."""
 
 from __future__ import annotations
 
+import functools
 import importlib
 import sys
 import uuid
@@ -13,9 +15,32 @@ import zipimport
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
 from frames_map_reduce_spark import map_reduce, reduce_and_add_key, split_on_keys, unpack_no_op
 from frames_map_reduce_spark.session import skip_unchanged_zip_reloads
+
+
+def test_codegen_cache_outlives_default_size(spark):
+    """128 distinct small plans compile more than Spark's default 100
+    cached classes; run again on the same session, they compile none."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    n = 128
+
+    def compiles_per_round() -> int:
+        # one job over a union, so each plan costs a task, not a job;
+        # every branch is its own whole-stage class (literals are inlined)
+        plans = [spark.range(0, 3, 1, 1).selectExpr(f"id * {i} + 7919 AS v")
+                 for i in range(n)]
+        before = compiled.getCount()
+        assert len(functools.reduce(DataFrame.unionAll, plans).collect()) \
+            == 3 * n
+        return compiled.getCount() - before
+
+    assert compiles_per_round() > 100
+    assert compiles_per_round() == 0
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:

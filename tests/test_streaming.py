@@ -386,6 +386,65 @@ def test_stream_merge_snapshot_equals_batch_compaction(spark, tmp_path):
     assert (3, 3, False, 32.0) in grown
 
 
+def test_gate_batches_run_under_caller_local_properties(spark, tmp_path,
+                                                       monkeypatch):
+    """Every micro-batch of a foreachBatch gate runs under the local
+    properties its caller held at start, even after an earlier batch
+    cleared one (as a span scope that closes on the query's thread
+    does); the query keeps its own job group."""
+    from pyspark import TaskContext
+
+    from frames_map_reduce_spark.operators import cdc
+    from frames_map_reduce_spark.streaming import (
+        read_snapshot,
+        stream_merge_snapshot,
+    )
+
+    key = "fmr.test.caller"
+    sc = spark.sparkContext
+
+    @F.udf("string")
+    def seen(_):
+        props = TaskContext.get()
+        return (f"{props.getLocalProperty(key)}|"
+                f"{props.getLocalProperty('spark.jobGroup.id')}")
+
+    compact_latest, cleared = cdc.compact_latest, []
+
+    def compact_then_clear(*args, **kwargs):
+        # first call (batch 1) only: removes the property on the query's
+        # thread; merge_upsert calls compact_latest again in batch 2
+        if not cleared:
+            cleared.append(True)
+            sc.setLocalProperty(key, None)
+        return compact_latest(*args, **kwargs)
+
+    monkeypatch.setattr(cdc, "compact_latest", compact_then_clear)
+    schema = "k long, v long"
+    src = str(tmp_path / "log")
+    for rows in ([(1, 1), (2, 1)], [(3, 1), (4, 1)]):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(src)
+              .withColumn("seen", seen("k")))
+    snap_dir = str(tmp_path / "snap")
+    sc.setLocalProperty(key, "caller")
+    sc.setLocalProperty("spark.jobGroup.id", "caller-group")
+    try:
+        q = stream_merge_snapshot(stream, snap_dir, keys=["k"],
+                                  version=["v"])
+    finally:
+        sc.setLocalProperty(key, None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    q.awaitTermination(120)
+    got = dict(map(tuple, read_snapshot(spark, snap_dir)
+                   .select("k", "seen").collect()))
+    # batch 2's rows were computed under the caller's value again, in
+    # the query's own job group (its run id), not the caller's
+    assert got[3] == got[4] == f"caller|{q.runId}"
+
+
 def test_stream_classifier_gate_threshold_filters(spark, documents, tmp_path):
     """The gate's threshold form drops below-gate and tokenless rows
     inside the stream (append mode, no state, no watermark)."""

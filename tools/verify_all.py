@@ -13,7 +13,10 @@ wall, not the first brick):
    DuckDB and fails on HUGEINT/DECIMAL/unsigned output columns (the
    r7 label_outliers hash-red class).
 1. pytest  — the unit/law/fuzz suite, including the sf0.001 oracle
-   parity run of every registry query (tests/test_oracle_parity.py).
+   parity run of every registry query (tests/test_oracle_parity.py),
+   run by `make test`, which holds ROADMAP.md's Tier-1 command: every
+   CPU of the process's affinity, Spark local dirs under
+   /tmp/spark-local, a 2,670 s budget.
 2. parity@sf0.01 — the same differential suite at the driver's
    correctness scale (SPARK_GRAFT_TEST_SF_DIR).
 3. perfbench — one repo-benchmark run (perfbench/run.py, seed 1,
@@ -65,8 +68,8 @@ def main() -> None:
     gates: dict[str, dict] = {}
     gates["oracle_types"] = run_gate(
         "oracle_types", [sys.executable, "tools/lint_oracle_types.py"])
-    gates["pytest"] = run_gate(
-        "pytest", [sys.executable, "-m", "pytest", "tests/", "-q"])
+    gates["pytest"] = run_gate("pytest", ["make", "--no-print-directory",
+                                          "test"])
     gates["parity_sf0.01"] = run_gate(
         "parity_sf0.01",
         [sys.executable, "-m", "pytest", "tests/test_oracle_parity.py", "-q"],
