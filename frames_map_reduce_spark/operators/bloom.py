@@ -167,10 +167,11 @@ def build_bloom_index(corpus: DataFrame, table: str, text_col: str,
     """Build ``{table}_words`` — the bucketed Bloom word table — over the
     corpus's canonical text forms.  One shuffle (the bit_or groupBy, with
     map-side combine) + one bucketed write; the corpus text is read once
-    and never again.  Probe-time ``m_bits``/``k`` must match the build —
-    they define the filter the way the centroid array defines an IVF
-    index.  Returns the ``(m_bits, k)`` actually built (also persisted;
-    read it back any time with :func:`bloom_geometry`).
+    and never again.  ``m_bits``/``k`` define the filter the way the
+    centroid array defines an IVF index: the build stamps them on the
+    word table, and extend/probe check theirs against the stamp.
+    Returns the ``(m_bits, k)`` actually built (read it back any time
+    with :func:`bloom_geometry`).
 
     ``m_bits="auto"`` (r8 verdict #3, the turnkey form of the sizing
     loop): one ``approx_count_distinct`` over the canonical forms sizes
@@ -208,12 +209,8 @@ def build_bloom_index(corpus: DataFrame, table: str, text_col: str,
         # table, so it sizes the buckets — see _bloom_auto_buckets
         n_buckets = _bloom_auto_buckets(m_bits)
     write_bucketed(_word_rows(corpus, text_col, m_bits, k),
-                   f"{table}_words", ["_word"], n_buckets)
-    # persist the geometry beside the bits (like the IVF centroid
-    # array): a mismatched extend/probe would silently destroy the
-    # no-false-negative guarantee, so the catalog owns the spec and
-    # extend/probe validate against it
-    _set_bloom_spec(corpus.sparkSession, table, m_bits, k)
+                   f"{table}_words", ["_word"], n_buckets,
+                   _spec(m_bits, k))
     return m_bits, k
 
 
@@ -225,17 +222,19 @@ def bloom_geometry(spark: SparkSession, table: str) -> tuple[int, int]:
     table with no recorded geometry, same contract as the monitor."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
+    from frames_map_reduce_spark.sources import table_spec
+
     try:
-        spec = _bloom_spec(spark, table)
+        stamp = table_spec(spark, f"{table}_words").stamp
     except AnalysisException as exc:
         raise ValueError(
             f"no bloom index `{table}` (word table not found)") from exc
-    if spec is None:
+    if "fmr.bloom.m_bits" not in stamp:
         raise ValueError(
             f"`{table}_words` has no recorded bloom geometry "
             f"(fmr.bloom.m_bits) — it was not created by "
-            f"build_bloom_index")
-    return spec
+            f"build_bloom_index; refusing to assume one")
+    return int(stamp["fmr.bloom.m_bits"]), int(stamp["fmr.bloom.k"])
 
 
 def extend_bloom_index(corpus_delta: DataFrame, table: str, text_col: str,
@@ -248,18 +247,19 @@ def extend_bloom_index(corpus_delta: DataFrame, table: str, text_col: str,
     recorded at build (enforced by the catalog).  Generations accumulate
     one word-table copy per extend in the worst case; fold them back to
     one row per word with :func:`compact_bloom_index` when probe-side
-    read amplification matters.  Spec parameters must match the build
-    (validated against the persisted table properties).
+    read amplification matters.  ``m_bits``/``k`` are checked against
+    the build's stamp before anything runs.
 
     ORDERING GOTCHA: probe results are LAZY plans over the live word
     table.  Materialize the verdicts (collect, or write to a staging
     table) BEFORE extending — a verdict plan re-evaluated after the
     extend screens against the already-extended filter and reports
     every extended document as a member."""
-    from frames_map_reduce_spark.sources import append_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(corpus_delta, [text_col])
-    _require_bloom_spec(corpus_delta.sparkSession, table, m_bits, k)
+    require_spec(corpus_delta.sparkSession, f"{table}_words",
+                 _spec(m_bits, k))
     append_bucketed(_word_rows(corpus_delta, text_col, m_bits, k),
                     f"{table}_words")
 
@@ -279,9 +279,14 @@ def bloom_probe_index(spark: SparkSession, table: str, queries: DataFrame,
     (the table is bucketed by ``_word``); the incoming side explodes to
     k rows/doc, joins on ``_word`` (only the skinny probe side
     exchanges), and a final groupBy ANDs the k bit tests per document.
-    The accepted corpus's text is never touched."""
+    The accepted corpus's text is never touched.  ``m_bits``/``k`` are
+    checked against the build's stamp: positions computed in another
+    bit space read the wrong words and return false ``maybe_dup =
+    false`` verdicts, the guarantee the firewall drops documents on."""
+    from frames_map_reduce_spark.sources import require_spec
+
     require_columns(queries, [text_col, id_col])
-    _require_bloom_spec(spark, table, m_bits, k)
+    require_spec(spark, f"{table}_words", _spec(m_bits, k))
     words = (spark.table(f"{table}_words")
                   .groupBy("_word").agg(F.bit_or("_bits").alias("_bits")))
     qpos = queries.select(
@@ -301,21 +306,15 @@ def bloom_probe_index(spark: SparkSession, table: str, queries: DataFrame,
 def compact_bloom_index(spark: SparkSession, table: str) -> None:
     """Fold an extend-heavy index back to ONE row per word (``bit_or``
     across generations) and replace the word table with it under its
-    recorded bucket count through :func:`sources.write_bucketed` (its
-    replace contract covers the swap, crash-window recovery and stale
-    plans)."""
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    recorded bucket count and stamp through :func:`sources.write_bucketed`
+    (its replace contract covers the swap, crash-window recovery and
+    stale plans)."""
+    from frames_map_reduce_spark.sources import table_spec, write_bucketed
 
-    nb = table_num_buckets(spark, f"{table}_words")
-    spec = _bloom_spec(spark, table)
+    nb, _, stamp = table_spec(spark, f"{table}_words")
     merged = (spark.table(f"{table}_words")
                    .groupBy("_word").agg(F.bit_or("_bits").alias("_bits")))
-    write_bucketed(merged, f"{table}_words", ["_word"], nb)
-    if spec is not None:  # the compacted table carries the spec forward
-        _set_bloom_spec(spark, table, *spec)
+    write_bucketed(merged, f"{table}_words", ["_word"], nb, stamp)
 
 
 def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
@@ -328,7 +327,7 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     when :func:`expected_fpr` drifts above the design target (r9
     verdict #2), closing the loop the way ``dedup.rebuild_minhash_index``
     closes cap drift.  Geometry is immutable per index
-    (:func:`extend_bloom_index` validates against the persisted spec),
+    (:func:`extend_bloom_index` checks it against the stamp),
     and a Bloom filter stores BITS, not keys — the member set cannot be
     enumerated from the index — so a re-size must re-sign from the
     ACCEPTED CORPUS itself (pass the same frame, or corpus ∪ deltas,
@@ -344,12 +343,12 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     across engines, exact counts are).  Explicit integers pin the
     geometry instead.
 
-    The new word table replaces the live one through
-    :func:`sources.write_bucketed` (its replace contract covers the
-    swap, crash-window recovery and stale plans).  The bucket count
-    carries over from the live table unless ``n_buckets=`` overrides it
-    (a bigger geometry may warrant more buckets).  Returns the
-    ``(m_bits, k)`` actually built, like build."""
+    The new word table, stamped with the new geometry, replaces the
+    live one through :func:`sources.write_bucketed` (its replace
+    contract covers the swap, crash-window recovery and stale plans).
+    The bucket count carries over from the live table unless
+    ``n_buckets=`` overrides it (a bigger geometry may warrant more
+    buckets).  Returns the ``(m_bits, k)`` actually built, like build."""
     spark = corpus.sparkSession
     from frames_map_reduce_spark.sources import (
         table_num_buckets,
@@ -365,8 +364,7 @@ def rebuild_bloom_index(corpus: DataFrame, table: str, text_col: str,
     m_bits, k = _resolve_geometry(corpus, text_col, m_bits, k, target_fpr,
                                   n_items)
     write_bucketed(_word_rows(corpus, text_col, m_bits, k),
-                   f"{table}_words", ["_word"], nb)
-    _set_bloom_spec(spark, table, m_bits, k)
+                   f"{table}_words", ["_word"], nb, _spec(m_bits, k))
     return m_bits, k
 
 
@@ -428,19 +426,9 @@ def bloom_index_generation_stats(spark: SparkSession, table: str,
     corpus is never touched."""
     if max_read_amp < 1:
         raise ValueError(f"max_read_amp must be >= 1, got {max_read_amp}")
-    spec = _bloom_spec(spark, table)
-    if spec is None:
-        # Same strictness as sources.table_num_buckets (r8 ADVICE): a
-        # word table without a recorded geometry cannot report
-        # m_bits/fill — assuming DEFAULT_M_BITS would silently misreport
-        # the fill (and hence the FPR) for any non-default-geometry
-        # index.
-        raise ValueError(
-            f"`{table}_words` has no recorded bloom geometry "
-            f"(fmr.bloom.m_bits) — it was not created by "
-            f"build_bloom_index; refusing to report fill against an "
-            f"assumed m_bits")
-    m_bits = spec[0]
+    # strict (r8 ADVICE): assuming DEFAULT_M_BITS for a word table with
+    # no recorded geometry would misreport the fill, and hence the FPR
+    m_bits, _k = bloom_geometry(spark, table)
     per_word = (spark.table(f"{table}_words")
                      .groupBy("_word")
                      .agg(F.count(F.lit(1)).alias("_gen"),
@@ -521,14 +509,9 @@ def expected_fpr(spark: SparkSession, table: str,
     when it drifts above the design target, the filter is overfull —
     re-size with :func:`suggest_geometry` and rebuild.
 
-    ``k`` comes from the persisted geometry (``fmr.bloom.k``), same
-    strict contract as the stats themselves."""
-    spec = _bloom_spec(spark, table)
-    if spec is None:  # stats below would raise too; raise the same way
-        raise ValueError(
-            f"`{table}_words` has no recorded bloom geometry — cannot "
-            f"derive expected_fpr without m_bits/k")
-    _m_bits, k = spec
+    ``k`` comes from the persisted geometry (:func:`bloom_geometry`),
+    same strict contract as the stats themselves."""
+    _m_bits, k = bloom_geometry(spark, table)
     stats = bloom_index_generation_stats(spark, table,
                                          max_read_amp=max_read_amp)
     return stats.withColumn(
@@ -608,32 +591,9 @@ def suggest_geometry(n_items: int, target_fpr: float) -> dict:
             "bytes": m_bits // 8, "fpr_at_n": fpr_at_n}
 
 
-def _set_bloom_spec(spark: SparkSession, table: str,
-                    m_bits: int, k: int) -> None:
-    spark.sql(f"ALTER TABLE `{table}_words` SET TBLPROPERTIES "
-              f"('fmr.bloom.m_bits' = '{m_bits}', 'fmr.bloom.k' = '{k}')")
-
-
-def _bloom_spec(spark: SparkSession, table: str) -> tuple[int, int] | None:
-    props = {r["key"]: r["value"] for r in
-             spark.sql(f"SHOW TBLPROPERTIES `{table}_words`").collect()}
-    if "fmr.bloom.m_bits" not in props:
-        return None  # externally-created word table: convention applies
-    return int(props["fmr.bloom.m_bits"]), int(props["fmr.bloom.k"])
-
-
-def _require_bloom_spec(spark: SparkSession, table: str,
-                        m_bits: int, k: int) -> None:
-    """Refuse a geometry that differs from the one the index was built
-    with — positions computed in a different bit space read the wrong
-    words and return false `maybe_dup = false` verdicts, the exact
-    guarantee the firewall drops documents on."""
-    spec = _bloom_spec(spark, table)
-    if spec is not None and spec != (m_bits, k):
-        raise ValueError(
-            f"bloom index `{table}` was built with m_bits={spec[0]}, "
-            f"k={spec[1]} — got m_bits={m_bits}, k={k}; the geometry is "
-            f"part of the index (rebuild to change it)")
+def _spec(m_bits: int, k: int) -> dict[str, str]:
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec("bloom", m_bits=m_bits, k=k)
 
 
 # ---------------------------------------------------------------------------

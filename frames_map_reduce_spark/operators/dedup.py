@@ -9,11 +9,12 @@ Four families, ordered by cost:
 4. embedding     — SRP-LSH buckets over a vector column, cosine verify
                    (see similarity.py for the SRP machinery).
 
-Everything per-row is a native Column expression (shingling, hashing,
-signatures): no Python in the scan.  The only shuffles are the bucket
-group/join — which is the point of LSH: at 100 TB you cannot afford the
-O(n²) pair space, so candidate generation must be a key-equality join
-Spark can hash-partition.
+MinHash and SimHash sign each document in ONE Arrow-batched numpy
+``mapInPandas`` pass (shingle hashes and signature together); banding,
+bucketing and verification are native Column expressions.  The only
+shuffles are the bucket group/join — which is the point of LSH: at
+100 TB you cannot afford the O(n²) pair space, so candidate generation
+must be a key-equality join Spark can hash-partition.
 """
 
 from __future__ import annotations
@@ -93,59 +94,6 @@ def _minhash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     return [(rng.randrange(1, _P31), rng.randrange(0, _P31)) for _ in range(num_perm)]
 
 
-def shingle_hashes(text: Column, shingle_k: int = 5) -> Column:
-    """``array<bigint>``: xxhash64 mod 2^31-1 of each distinct character
-    k-gram of the normalized text.  Compute this ONCE per row (behind a
-    projection/exchange barrier) before fanning out to ``num_perm``
-    permutations — lambda bodies are interpreted (no codegen CSE), so an
-    inlined copy per permutation would re-shingle the text num_perm times."""
-    return F.transform(
-        char_shingles(text, shingle_k),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)),
-    )
-
-
-def minhash_signature_from_hashes(hashes: Column, num_perm: int = 64,
-                                  seed: int = 42) -> Column:
-    """``array<bigint>`` of ``num_perm`` minhash values over a pre-computed
-    shingle-hash array.  Each permutation ``(a*x+b) mod p`` is an
-    ``array_min∘transform``; ``a*x`` stays below 2^62 so it cannot
-    overflow ANSI bigint arithmetic."""
-    def perm_fn(a: int, b: int):
-        # closure factory — default-arg lambdas would be mis-read by
-        # PySpark as (element, index) lambdas
-        return lambda x: F.pmod(x * F.lit(a) + F.lit(b), F.lit(_P31))
-
-    sigs = [
-        F.array_min(F.transform(hashes, perm_fn(a, b)))
-        for a, b in _minhash_params(num_perm, seed)
-    ]
-    return F.array(*sigs)
-
-
-def minhash_signature(text: Column, num_perm: int = 64, shingle_k: int = 5,
-                      seed: int = 42) -> Column:
-    """Single-expression form (convenience; prefer the two-step
-    ``shingle_hashes`` → barrier → ``minhash_signature_from_hashes`` in
-    pipelines, which ``minhash_lsh_candidates`` does internally)."""
-    return minhash_signature_from_hashes(shingle_hashes(text, shingle_k),
-                                         num_perm, seed)
-
-
-def shingle_hashes64(text: Column, shingle_k: int = 5) -> Column:
-    """Full-range xxhash64 of each distinct shingle (no modulus).  Used as
-    the verify-stage shingle-set representation: array_intersect on
-    fixed-width longs is far cheaper than on strings, and the 64-bit space
-    makes a hash collision distorting a pair's Jaccard (~1e-14 per pair)
-    negligible.
-
-    Expression form — each substring + hash is an INTERPRETED lambda eval
-    (~chars-per-doc of them per row).  Pipelines should prefer
-    :func:`shingle_hashes64_frame`, the vectorized numpy rendering of the
-    same shingle-set semantics (measured ~10× on 5k docs)."""
-    return F.transform(char_shingles(text, shingle_k), lambda s: F.xxhash64(s))
-
-
 # splitmix64 constants (public-domain mixer, Steele et al.) — used to
 # finalize the rolling polynomial so shingle hashes are well-distributed
 _SM_GAMMA = np.uint64(0x9E3779B97F4A7C15)
@@ -167,11 +115,10 @@ def _mix64(z: "np.ndarray") -> "np.ndarray":
 def _shingle_hashes_np(s: str, k: int) -> "np.ndarray":
     """Distinct 64-bit hashes of the character k-grams of an ALREADY
     normalized string — polynomial rolling hash over code points,
-    splitmix64-finalized, np.unique'd.  Hash identity differs from the
-    expression form's xxhash64 (irrelevant: only shingle-set EQUALITY
-    semantics matter for Jaccard/minhash), but the set semantics are
-    identical: k-grams of the normalized text, whole string when shorter
-    than k."""
+    splitmix64-finalized, np.unique'd.  Only shingle-set EQUALITY
+    matters for Jaccard/minhash, and the sets are those of
+    ``functions.text.char_shingles``: k-grams of the normalized text,
+    whole string when shorter than k."""
     cp = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
     n = len(cp)
     if n < k + 1:  # 0..k chars: single shingle = the whole string
@@ -200,97 +147,20 @@ def _normalize_py(s: str) -> str:
     return _WS_JAVA.sub(" ", s.lower()).strip(" ")
 
 
-def shingle_hashes64_frame(df: DataFrame, text_col: str, id_col: str,
-                           shingle_k: int = 5) -> DataFrame:
-    """(id, _sh64): the vectorized scale path for shingle hashing — an
-    Arrow-batched ``mapInPandas`` stage computing normalized-text k-gram
-    hash sets in numpy (rolling polynomial + splitmix64 + np.unique)
-    instead of per-element interpreted ``substring``/``xxhash64`` lambdas.
-
-    Structural plan node (AQE-safe, same rationale as
-    ``_minhash_map_in_pandas``); also serves as the parallelism barrier
-    that ``ensure_parallelism`` provided in the expression path."""
-    require_columns(df, [text_col, id_col])
-    narrow = ensure_parallelism(df.select(F.col(id_col),
-                                          F.col(text_col).alias("_txt")))
-    schema = T.StructType([df.schema[id_col],
-                           T.StructField("_sh64", T.ArrayType(T.LongType()))])
-
-    def run(batches):
-        for pdf in batches:
-            hs = [_shingle_hashes_np(_normalize_py(t or ""), shingle_k)
-                  .view(np.int64)
-                  for t in pdf["_txt"]]
-            yield pd.DataFrame({pdf.columns[0]: pdf.iloc[:, 0], "_sh64": hs})
-
-    return narrow.mapInPandas(run, schema=schema)
-
-
-def minhash_signature_pandas(num_perm: int = 128, seed: int = 42):
-    """Vectorized minhash: a pandas UDF mapping a shingle-hash64 array to
-    the ``num_perm`` permutation minima.
-
-    Rationale: Spark evaluates lambda (higher-order-function) bodies
-    interpreted, per element — num_perm × n_shingles interpreted evals per
-    row dominates the whole dedup job (measured ~20 s on 5k docs).  The
-    same arithmetic in numpy over Arrow batches is a C-speed matmul-shaped
-    loop (~100× faster).  Identical integer math ⇒ identical signatures to
-    :func:`minhash_signature_from_hashes`.
-    """
-    params = _minhash_params(num_perm, seed)
-    a = np.array([p[0] for p in params], dtype=np.int64)[None, :]
-    b = np.array([p[1] for p in params], dtype=np.int64)[None, :]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(hashes: pd.Series) -> pd.Series:
-        out = []
-        for h in hashes:
-            x = (np.asarray(h, dtype=np.int64) % _P31)[:, None]  # (n, 1) < 2^31
-            if x.size == 0:
-                out.append(np.full(num_perm, _P31, dtype=np.int64))
-            else:
-                out.append(((x * a + b) % _P31).min(axis=0))  # < 2^62: no overflow
-        return pd.Series(out)
-
-    return sig
-
-
-def _minhash_map_in_pandas(hashed: DataFrame, id_col: str, num_perm: int,
-                           seed: int) -> DataFrame:
-    """(id, _sh64) → (id, _sig) as a ``mapInPandas`` PLAN NODE.
-
-    A pandas-UDF *expression* for the signature is unsafe here: the
-    optimizer (and AQE re-optimization) can collapse downstream banding
-    projections onto it and land the PythonUDF inside a grouping/shuffle
-    projection, which Spark cannot evaluate (INTERNAL_ERROR Unevaluable
-    PythonUDF — reproduced under AQE).  mapInPandas is a structural
-    operator, so the signature stage keeps its own Arrow-batched node no
-    matter how the surrounding plan is rewritten."""
-    params = _minhash_params(num_perm, seed)
-    a = np.array([p[0] for p in params], dtype=np.int64)[None, :]
-    b = np.array([p[1] for p in params], dtype=np.int64)[None, :]
-    schema = T.StructType([hashed.schema[id_col],
-                           T.StructField("_sig", T.ArrayType(T.LongType()))])
-
-    def run(batches):
-        for pdf in batches:
-            sigs = []
-            for h in pdf["_sh64"]:
-                x = (np.asarray(h, dtype=np.int64) % _P31)[:, None]
-                sigs.append(np.full(num_perm, _P31, dtype=np.int64) if x.size == 0
-                            else ((x * a + b) % _P31).min(axis=0))
-            yield pd.DataFrame({id_col: pdf[id_col], "_sig": sigs})
-
-    return hashed.mapInPandas(run, schema=schema)
-
-
 def _shingle_sig_frame(df: DataFrame, text_col: str, id_col: str,
                        shingle_k: int, num_perm: int, seed: int) -> DataFrame:
-    """(id, _sh64, _sig) in ONE fused Python stage: normalized-k-gram
-    hash set (see :func:`shingle_hashes64_frame`) AND the minhash
-    signature computed from it in the same Arrow batch — one
-    worker/serialization round instead of two chained ones.  The fused
-    frame is what ``minhash_near_dup_pairs`` persists: every consumer
+    """(id, _sh64, _sig) in ONE fused Python stage: the normalized
+    text's distinct k-gram hashes (:func:`_shingle_hashes_np`, 64-bit,
+    so a collision distorting a pair's Jaccard is ~1e-14 per pair) AND
+    the minhash signature computed from them in the same Arrow batch —
+    each permutation ``(a*x+b) mod p`` stays below 2^62, so numpy int64
+    cannot overflow.  The stage is a ``mapInPandas`` PLAN NODE, not a
+    pandas-UDF expression: the optimizer (and AQE re-optimization) can
+    collapse downstream banding projections onto a UDF expression and
+    land it inside a grouping/shuffle projection, which Spark cannot
+    evaluate (INTERNAL_ERROR Unevaluable PythonUDF).  It also serves as
+    the parallelism barrier (``ensure_parallelism``).  The fused frame
+    is what ``minhash_near_dup_pairs`` persists: every consumer
     (banding, both verify sides) reads it cache-side, so the whole dedup
     pays exactly one Python pass over the corpus."""
     require_columns(df, [text_col, id_col])
@@ -323,12 +193,12 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str, id_col: str,
                            num_perm: int = 128, bands: int = 16,
                            shingle_k: int = 5, seed: int = 42,
                            max_bucket: int = 1000,
-                           hashed: DataFrame | None = None,
                            with_sig: DataFrame | None = None) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded LSH.
 
     Plan shape (scale rationale):
-    - signature: per-row expressions, no shuffle;
+    - signature: one fused Python pass (:func:`_shingle_sig_frame`), no
+      shuffle — or ``with_sig``, a caller's already-signed frame;
     - band explode: rows × bands, still narrow;
     - bucket id = hash(band index, band slice) — ONE key column, so the
       candidate join is a plain hash-partitioned equi-self-join;
@@ -348,34 +218,18 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str, id_col: str,
     rows_per_band = num_perm // bands
     if rows_per_band * bands != num_perm:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    # Stage 1: shingle-hash once per row (vectorized numpy mapInPandas —
-    # doubles as parallelism fix and optimizer barrier for narrow inputs).
-    # Stage 2: permutation minima in a vectorized pandas UDF (see
-    # minhash_signature_pandas for why not a native expression).
-    # The banded frame is PERSISTED (memory-and-disk): it has two
-    # consumers (bucket sizes, bucket join), and recomputing it re-runs
-    # both Python stages — with Python stages in the lineage the
-    # cache-vs-recompute tradeoff flips (per-stage worker/Arrow overhead
-    # dominates, unlike the earlier all-JVM lineage).  The persisted form
-    # is skinny: (id, _bucket) — 2 longs × rows × bands.
+    # The signature frame is PERSISTED (memory-and-disk): the banded
+    # frame below has two consumers (bucket sizes, bucket join), and with
+    # a Python stage in the lineage recomputing per consumer re-pays it —
+    # the cache-vs-recompute tradeoff flips (per-stage worker/Arrow
+    # overhead dominates, unlike an all-JVM lineage).  Re-deriving banded
+    # per consumer is then a cheap JVM explode over the cache.
     from pyspark import StorageLevel
-    sig_cached = with_sig is not None
     if with_sig is None:
-        if hashed is not None:
-            with_sig = _minhash_map_in_pandas(hashed, id_col, num_perm, seed)
-        else:
-            with_sig = _shingle_sig_frame(df, text_col, id_col, shingle_k,
-                                          num_perm, seed) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            sig_cached = True
+        with_sig = _shingle_sig_frame(df, text_col, id_col, shingle_k,
+                                      num_perm, seed) \
+            .persist(StorageLevel.MEMORY_AND_DISK)
     banded = _minhash_banded(with_sig, id_col, num_perm, bands)
-    # Two consumers below (sizes, join).  If the signature frame is cached
-    # (the normal path), re-deriving banded per consumer is a cheap JVM
-    # explode over the cache — persisting it again would only add a
-    # materialization barrier.  With an UNcached Python lineage, persist:
-    # recomputing would re-pay the Python stage per consumer.
-    if not sig_cached:
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     # Size-filter buckets BEFORE materializing any id array: the counts
     # pass has bounded (one long) agg state per bucket, and only surviving
     # buckets reach the collect_list, so its buffer is capped at
@@ -537,11 +391,12 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
     - ``{table}_shingles`` — (ref_id, _sh64), bucketed by ref_id: the
       exact-Jaccard verify side.
 
-    Probe-time parameters (num_perm/bands/shingle_k/seed) must match the
-    build; they define the signature spec the way the centroid array
-    defines an IVF index.  ``n_buckets="auto"`` (r13) sizes the bucket
-    count from the corpus count the build already materializes (see the
-    inline note); extends inherit the built spec from the catalog."""
+    num_perm/bands/shingle_k/seed define the signature spec the way the
+    centroid array defines an IVF index: the build stamps them on both
+    tables, and extend/probe check theirs against the stamp.
+    ``n_buckets="auto"`` (r13) sizes the bucket count from the corpus
+    count the build already materializes (see the inline note); extends
+    inherit the built bucket spec from the catalog."""
     from pyspark import StorageLevel
 
     from frames_map_reduce_spark.sources import write_bucketed
@@ -570,9 +425,11 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
         pruned = banded.join(F.broadcast(ok), "_bucket")
         # Safe to overlap: ``sig`` is already materialized by count(), so
         # there is no concurrent cache-population race.
+        spec = _minhash_spec(num_perm, bands, shingle_k, seed)
         _write_index_tables(
             pruned, sig, table,
-            lambda df, name, by: write_bucketed(df, name, by, n_buckets))
+            lambda df, name, by: write_bucketed(df, name, by, n_buckets,
+                                                spec))
     finally:
         sig.unpersist()
 
@@ -588,7 +445,8 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     Appends to both bucketed tables with the same bucket spec Spark
     recorded at build time (enforced by the catalog), paying only the
     delta's signature pass — the existing index is never read or
-    rewritten.  Spec parameters must match the build.  The build-time
+    rewritten.  The spec parameters are checked against the build's
+    stamp before the delta is signed.  The build-time
     ``max_bucket`` cap is NOT re-evaluated across appends (that would
     require reading the whole index); monitor with
     :func:`minhash_index_bucket_stats` (one agg over the persisted
@@ -597,9 +455,11 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     tests/test_dedup.py::test_minhash_index_rebuild_lifecycle."""
     from pyspark import StorageLevel
 
-    from frames_map_reduce_spark.sources import append_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(corpus_delta, [text_col, id_col])
+    require_spec(corpus_delta.sparkSession, f"{table}_buckets",
+                 _minhash_spec(num_perm, bands, shingle_k, seed))
     sig = _shingle_sig_frame(corpus_delta, text_col, id_col, shingle_k,
                              num_perm, seed) \
         .withColumnRenamed(id_col, "ref_id") \
@@ -611,6 +471,13 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
                             lambda df, name, _by: append_bucketed(df, name))
     finally:
         sig.unpersist()
+
+
+def _minhash_spec(num_perm: int, bands: int, shingle_k: int,
+                  seed: int) -> dict[str, str]:
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec("minhash", num_perm=num_perm, bands=bands,
+                      shingle_k=shingle_k, seed=seed)
 
 
 def minhash_index_bucket_stats(spark, table: str,
@@ -646,8 +513,8 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
     never the shingle table — signatures are immutable, only the cap
     policy is re-evaluated), drops every bucket that has grown past
     ``max_bucket``, and replaces the table under its recorded bucket
-    count through :func:`sources.write_bucketed` (its replace contract
-    covers the swap, crash-window recovery and stale plans).  The
+    count and stamp through :func:`sources.write_bucketed` (its replace
+    contract covers the swap, crash-window recovery and stale plans).  The
     shingle table is untouched:
     verify-side rows for capped docs are unreachable without a bucket
     row, and a later rebuild with a looser cap cannot be run anyway
@@ -656,17 +523,20 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
 
     Cost: one agg + one broadcast semi-join + one bucketed rewrite of
     the (ref_id, _bucket) table — no Python stage, no re-signing."""
-    from frames_map_reduce_spark.sources import (
-        table_num_buckets,
-        write_bucketed,
-    )
+    from frames_map_reduce_spark.sources import table_spec, write_bucketed
 
-    nb = table_num_buckets(spark, f"{table}_buckets")
+    nb, _, stamp = table_spec(spark, f"{table}_buckets")
     src = spark.table(f"{table}_buckets")
     sizes = src.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
     ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
     pruned = src.join(F.broadcast(ok), "_bucket").select("ref_id", "_bucket")
-    write_bucketed(pruned, f"{table}_buckets", ["_bucket"], nb)
+    write_bucketed(pruned, f"{table}_buckets", ["_bucket"], nb, stamp)
+
+
+#: largest probe set :func:`minhash_probe_index` pushes into the
+#: bucketed scan as an IN filter: past it the literal list costs Catalyst
+#: more than the skinny bucket-table scan it would save
+PUSHDOWN_LIMIT = 2048
 
 
 def minhash_probe_index(spark, table: str, queries: DataFrame,
@@ -674,16 +544,15 @@ def minhash_probe_index(spark, table: str, queries: DataFrame,
                         threshold: float = 0.8, num_perm: int = 128,
                         bands: int = 16, shingle_k: int = 5,
                         seed: int = 42,
-                        max_probe_buckets: int = 1_000_000,
-                        pushdown_limit: int = 2048) -> DataFrame:
+                        max_probe_buckets: int = 1_000_000) -> DataFrame:
     """Query-many half: screen an incoming batch against a persisted
-    minhash index (:func:`build_minhash_index`; pass the SAME spec
-    parameters).  Returns ``(id_col, ref_id, jaccard_sim)`` for every
-    (incoming, corpus) pair with exact shingle-set Jaccard ≥ threshold
-    among banded-bucket candidates.
+    minhash index (:func:`build_minhash_index`; the spec parameters are
+    checked against the build's stamp).  Returns ``(id_col, ref_id,
+    jaccard_sim)`` for every (incoming, corpus) pair with exact
+    shingle-set Jaccard ≥ threshold among banded-bucket candidates.
 
     Plan: the incoming batch is signed with the same fused Python stage;
-    for SMALL batches (≤ ``pushdown_limit`` distinct bucket keys) the
+    for SMALL batches (≤ :data:`PUSHDOWN_LIMIT` distinct bucket keys) the
     probe set is pushed as an IN filter into the bucketed scan, so the
     corpus side runs scan→filter→join with zero exchanges and bucket
     pruning skips every unprobed bucket.  Past that limit the filter is
@@ -703,7 +572,11 @@ def minhash_probe_index(spark, table: str, queries: DataFrame,
     frame is unreachable, so a later probe never evicts an earlier
     result.  Checkpointed blocks are not recomputed after an executor
     loss: the job fails instead of re-running a stage."""
+    from frames_map_reduce_spark.sources import require_spec
+
     require_columns(queries, [text_col, id_col])
+    require_spec(spark, f"{table}_buckets",
+                 _minhash_spec(num_perm, bands, shingle_k, seed))
     qsig = _shingle_sig_frame(queries, text_col, id_col, shingle_k,
                               num_perm, seed).localCheckpoint(eager=False)
     qb = _minhash_banded(qsig, id_col, num_perm, bands)
@@ -717,7 +590,7 @@ def minhash_probe_index(spark, table: str, queries: DataFrame,
             "run minhash_near_dup_pairs over the union for corpus-scale "
             "pair generation")
     cb = spark.table(f"{table}_buckets")
-    if len(probed) <= pushdown_limit:
+    if len(probed) <= PUSHDOWN_LIMIT:
         cb = cb.filter(F.col("_bucket").isin(probed))
     cands = (cb.join(F.broadcast(qb.select("_bucket", id_col)), "_bucket")
                .select("ref_id", id_col).distinct())
@@ -894,7 +767,7 @@ def _simhash_map_in_pandas(hashed: DataFrame, id_col: str, bits: int) -> DataFra
     — interpreted per element as a HOF expression (the minhash lesson) —
     becomes one numpy shift/mask per Arrow batch.  mapInPandas (structural
     node) rather than a pandas-UDF expression so the optimizer can never
-    fold it into a shuffle projection (see _minhash_map_in_pandas)."""
+    fold it into a shuffle projection (see _shingle_sig_frame)."""
     schema = T.StructType([hashed.schema[id_col],
                            T.StructField("_sim", T.LongType())])
     shifts = np.arange(bits, dtype=np.uint64)

@@ -698,8 +698,9 @@ def build_media_contamination_index(eval_media: DataFrame, table: str,
 
     One Arrow decode pass + one bucketed-write shuffle over the (small)
     eval suite; training corpora are never touched.  ``kind``/``grid``/
-    ``n_bands`` are the index's spec parameters — probes and extends
-    must pass the same values (the text firewall's ``n`` convention).
+    ``n_bands`` are the index's spec parameters: the build stamps them
+    on the table, and extend/probe check theirs against the stamp (the
+    text firewall's ``n`` convention).
     """
     from frames_map_reduce_spark.sources import write_bucketed
 
@@ -707,7 +708,7 @@ def build_media_contamination_index(eval_media: DataFrame, table: str,
     sigs = _media_sigs(eval_media, id_col, binary_col, kind, grid,
                        n_bands, fake)
     write_bucketed(_banded_rows(sigs), f"{table}_bands", ["bucket"],
-                   n_buckets)
+                   n_buckets, _media_spec(kind, grid, n_bands))
 
 
 def extend_media_contamination_index(eval_delta: DataFrame, table: str,
@@ -726,10 +727,13 @@ def extend_media_contamination_index(eval_delta: DataFrame, table: str,
     and takes a MIN Hamming — both multiplicity-blind — so
     ``build(A); extend(B)`` probes bit-identically to
     ``build(A ∪ B)`` (law pinned in tests and by the registry oracle).
+    ``kind``/``grid``/``n_bands`` are checked against the build's stamp.
     """
-    from frames_map_reduce_spark.sources import append_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(eval_delta, [id_col, binary_col])
+    require_spec(eval_delta.sparkSession, f"{table}_bands",
+                 _media_spec(kind, grid, n_bands))
     sigs = _media_sigs(eval_delta, id_col, binary_col, kind, grid,
                        n_bands, fake)
     append_bucketed(_banded_rows(sigs), f"{table}_bands")
@@ -764,14 +768,17 @@ def probe_media_contamination_index(spark, table: str, incoming: DataFrame,
     frames) fans out incoming × that bucket's eval rows — bounded by
     the eval suite size; watch ``max_bucket`` in
     :func:`media_contamination_index_stats` if eval media is
-    boilerplate-heavy."""
+    boilerplate-heavy.  ``kind``/``grid``/``n_bands`` are checked
+    against the build's stamp."""
     from frames_map_reduce_spark.operators.dedup import hamming_words
+    from frames_map_reduce_spark.sources import require_spec
 
     require_columns(incoming, [id_col, binary_col])
     if max_hamming >= n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} >= n_bands={n_bands}: banding "
             "only guarantees recall for Hamming distance < n_bands")
+    require_spec(spark, f"{table}_bands", _media_spec(kind, grid, n_bands))
     idx = spark.table(f"{table}_bands") \
         .withColumnRenamed("bands", "_ibands")
     sigs = _media_sigs(incoming, id_col, binary_col, kind, grid,
@@ -789,6 +796,11 @@ def probe_media_contamination_index(spark, table: str, incoming: DataFrame,
                 .agg(F.countDistinct("eval_id").cast("long")
                       .alias("n_eval_hits"),
                      F.min("_hd").cast("int").alias("best_hamming")))
+
+
+def _media_spec(kind: str, grid: int, n_bands: int) -> dict[str, str]:
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec("media", kind=kind, grid=grid, n_bands=n_bands)
 
 
 def media_contamination_index_stats(spark, table: str) -> DataFrame:

@@ -415,7 +415,8 @@ def build_ivf_pq_index(corpus: DataFrame, table: str,
     ``build_ivf_index`` lifecycle with the lists stored as ``m_sub``
     small ints per vector instead of ``dim`` floats.  Returns
     ``(centroids, codebooks)`` — the frozen spec every extend/probe
-    must reuse."""
+    must reuse; the table is stamped with their sha256 digests and
+    ``frac_bits``, and extend/probe check theirs against the stamp."""
     from frames_map_reduce_spark.operators.similarity import (
         train_ivf_centroids,
     )
@@ -429,7 +430,8 @@ def build_ivf_pq_index(corpus: DataFrame, table: str,
     encoded = pq_encode(corpus, centroids, codebooks, id_col, vec_col,
                         frac_bits)
     write_bucketed(encoded, table, ["_centroid"],
-                   n_buckets or len(centroids))
+                   n_buckets or len(centroids),
+                   _ivf_pq_spec(centroids, codebooks, frac_bits))
     return centroids, codebooks
 
 
@@ -446,10 +448,13 @@ def extend_ivf_pq_index(new_df: DataFrame, table: str, centroids,
     exactly (the registry oracle replays the rebuild).  Retrain
     trigger: ``similarity.ivf_drift_stats`` applies unchanged — PQ
     adds no new drift mode of its own (codebook fit degrades exactly
-    when the cells drift)."""
+    when the cells drift).  The spec is checked against the build's
+    stamp."""
     import numpy as np
-    from frames_map_reduce_spark.sources import append_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
     require_columns(new_df, [id_col, vec_col])
+    require_spec(new_df.sparkSession, table,
+                 _ivf_pq_spec(centroids, codebooks, frac_bits))
     cents = np.asarray(centroids, dtype=np.float64)
     encoded = pq_encode(new_df, cents, codebooks, id_col, vec_col,
                         frac_bits)
@@ -481,12 +486,13 @@ def ivf_pq_topk(spark, table: str, queries: DataFrame, centroids,
     broadcast join → a zip_with/aggregate LUT lookup (JVM) → per-batch
     partial top-k.  Zero corpus-side exchanges, and the scan reads
     ``m_sub`` small ints per row — the ~64× scan-volume win PQ
-    exists for."""
+    exists for.  The spec is checked against the build's stamp."""
     import numpy as np
 
     from frames_map_reduce_spark.operators.similarity import (
         _collect_queries,
     )
+    from frames_map_reduce_spark.sources import require_spec
     require_columns(queries, [query_id_col, vec_col])
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -496,6 +502,7 @@ def ivf_pq_topk(spark, table: str, queries: DataFrame, centroids,
     _pq_validate(cents.shape[1], m_sub, k_codes, frac_bits)
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    require_spec(spark, table, _ivf_pq_spec(cents, books, frac_bits))
     cq = np.floor(cents * float(1 << frac_bits)).astype(np.int64)
     qrows = _collect_queries(queries, [query_id_col, vec_col])
     probe_rows = []
@@ -525,6 +532,14 @@ def ivf_pq_topk(spark, table: str, queries: DataFrame, centroids,
     part = partial_topk(scored, k, query_id_col, id_col,
                         sim_col="score_q")
     return _rank_topk(part, k, query_id_col, id_col, sim_col="score_q")
+
+
+def _ivf_pq_spec(centroids, codebooks, frac_bits: int) -> dict[str, str]:
+    from frames_map_reduce_spark.operators.similarity import _sha256
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec(
+        "ivf_pq", centroids_sha256=_sha256(centroids, "float64"),
+        codebooks_sha256=_sha256(codebooks, "int64"), frac_bits=frac_bits)
 
 
 def ivf_pq_oracle_sql(table: str, id_col: str, vec_col: str,

@@ -284,8 +284,9 @@ def build_contamination_index(eval_df: DataFrame, table: str,
 
     One scan + one distinct shuffle over the (small) eval corpus; the
     training corpus is never touched.  ``n`` is the index's spec
-    parameter — probes must pass the same value, the way MinHash probes
-    must match the build's signature spec."""
+    parameter: the build stamps it on the table, and extend/probe check
+    theirs against the stamp (an index probed at another ``n`` would
+    flag nothing)."""
     from frames_map_reduce_spark.sources import write_bucketed
 
     require_columns(eval_df, [text_col])
@@ -298,7 +299,8 @@ def build_contamination_index(eval_df: DataFrame, table: str,
                  TX.word_ngrams(F.col(text_col), n))).alias("g"))
              .where(F.col("g").isNotNull())
              .distinct())
-    write_bucketed(grams, f"{table}_grams", ["g"], n_buckets)
+    write_bucketed(grams, f"{table}_grams", ["g"], n_buckets,
+                   _contamination_spec(n))
 
 
 def extend_contamination_index(eval_delta: DataFrame, table: str,
@@ -313,12 +315,15 @@ def extend_contamination_index(eval_delta: DataFrame, table: str,
     :func:`probe_contamination_index` joins ``left_semi``, which tests
     membership, not multiplicity, so ``build(A); extend(B)`` probes
     bit-identically to ``build(A ∪ B)`` (law pinned in
-    tests/test_retrieval.py)."""
-    from frames_map_reduce_spark.sources import append_bucketed
+    tests/test_retrieval.py).  ``n`` is checked against the build's
+    stamp."""
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(eval_delta, [text_col])
     if n < 1:
         raise ValueError("extend_contamination_index needs n >= 1")
+    require_spec(eval_delta.sparkSession, f"{table}_grams",
+                 _contamination_spec(n))
     # explode_outer + isnotnull: see ngram_contamination — avoids the
     # InferFiltersFromGenerate double evaluation of the n-gram chain.
     grams = (eval_delta
@@ -343,8 +348,12 @@ def probe_contamination_index(spark, table: str, incoming: DataFrame,
     broadcast, and the membership test is a ``left_semi`` hash join
     (multiplicity-blind, so extend-appended duplicate grams cannot
     double-count).  The only shuffle of the incoming side is the
-    per-doc reduce.  Zero index-side exchanges, no corpus self-join."""
+    per-doc reduce.  Zero index-side exchanges, no corpus self-join.
+    ``n`` is checked against the build's stamp."""
+    from frames_map_reduce_spark.sources import require_spec
+
     require_columns(incoming, [text_col, id_col])
+    require_spec(spark, f"{table}_grams", _contamination_spec(n))
     idx = spark.table(f"{table}_grams")
     # explode_outer + isnotnull: see ngram_contamination — avoids the
     # InferFiltersFromGenerate double evaluation of the n-gram chain.
@@ -361,6 +370,11 @@ def probe_contamination_index(spark, table: str, incoming: DataFrame,
               .withColumn("hit_frac",
                           F.round(F.try_divide(F.col("n_hit"),
                                                F.col("n_grams")), 6)))
+
+
+def _contamination_spec(n: int) -> dict[str, str]:
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec("contamination", n=n)
 
 
 def contamination_index_stats(spark, table: str) -> DataFrame:

@@ -765,14 +765,16 @@ def build_ivf_index(corpus: DataFrame, table: str, n_centroids: int = 16,
     query batch probes the saved table with a broadcast key-equality join
     that needs NO corpus-side exchange (test_similarity pins the
     0-exchange plan), and Spark's bucket pruning skips the inverted lists
-    no query probes.  Returns the centroid array — persist it however you
-    like (it is tiny: n_centroids × dim floats)."""
+    no query probes.  Returns the centroid array — keep it however you
+    like (it is tiny: n_centroids × dim floats); the table is stamped
+    with its sha256, and extend/probe check the array they are handed
+    against the stamp."""
     from frames_map_reduce_spark.sources import write_bucketed
     require_columns(corpus, [id_col, vec_col])
     centroids = train_ivf_centroids(corpus, vec_col, n_centroids, seed=seed)
     assigned = ivf_assign(corpus.select(id_col, vec_col), vec_col, centroids)
     write_bucketed(assigned, table, ["_centroid"],
-                   n_buckets or n_centroids)
+                   n_buckets or n_centroids, _ivf_spec(centroids))
     return centroids
 
 
@@ -783,7 +785,10 @@ def ivf_topk_indexed(spark, table: str, queries: DataFrame, centroids,
     """Query-many half: probe a persisted IVF index (built by
     :func:`build_ivf_index`).  The ``_centroid IN (probed…)`` filter
     prunes unread buckets at scan time; the probe join is broadcast, so
-    the corpus side runs scan→filter→score with zero exchanges."""
+    the corpus side runs scan→filter→score with zero exchanges.
+    ``centroids`` are checked against the build's stamp."""
+    from frames_map_reduce_spark.sources import require_spec
+    require_spec(spark, table, _ivf_spec(centroids))
     cb = spark.table(table)
     qb, probed = _ivf_probe_frame(spark, queries, centroids, nprobe,
                                   query_id_col, vec_col)
@@ -810,14 +815,31 @@ def extend_ivf_index(new_df: DataFrame, table: str, centroids,
     When to retrain instead of extend: :func:`ivf_drift_stats` — the
     frozen quantizer quietly degrades as the data distribution moves
     (cells bloat or their true mean walks away from the trained
-    centroid, inflating the scan fraction a given recall costs)."""
+    centroid, inflating the scan fraction a given recall costs).
+    ``centroids`` are checked against the build's stamp."""
     require_columns(new_df, [id_col, vec_col])
     import numpy as np
 
-    from frames_map_reduce_spark.sources import append_bucketed
+    from frames_map_reduce_spark.sources import append_bucketed, require_spec
+    require_spec(new_df.sparkSession, table, _ivf_spec(centroids))
     cents = np.asarray(centroids, dtype=np.float64)
     assigned = ivf_assign(new_df.select(id_col, vec_col), vec_col, cents)
     append_bucketed(assigned, table)
+
+
+def _sha256(array, dtype: str) -> str:
+    """Hex sha256 of ``array``'s bytes as ``dtype`` — the stamp of a
+    caller-held spec array (centroids, codebooks)."""
+    import hashlib
+
+    import numpy as np
+    return hashlib.sha256(
+        np.ascontiguousarray(array, dtype=dtype).tobytes()).hexdigest()
+
+
+def _ivf_spec(centroids) -> dict[str, str]:
+    from frames_map_reduce_spark.sources import index_spec
+    return index_spec("ivf", centroids_sha256=_sha256(centroids, "float64"))
 
 
 _VEC_MICRO = 1_000_000

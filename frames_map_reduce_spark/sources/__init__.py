@@ -13,7 +13,8 @@ try-cast, and the columnar formats a 100 TB deployment actually uses
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Mapping, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -139,7 +140,8 @@ def clamp_buckets(est_bytes: int, lo: int = 8, hi: int = 32768,
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
-                   n_buckets: int) -> None:
+                   n_buckets: int, spec: Mapping[str, str] | None = None
+                   ) -> None:
     """Replace ``table`` with ``df`` as a bucketed table — the one
     replace path of every persisted index.  Bucketing pre-shuffles once
     at write time so later joins and aggregations on ``bucket_cols`` are
@@ -157,6 +159,11 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
     repartition is what keeps file counts proportional to n_buckets
     instead of tasks × n_buckets; size n_buckets for ~128 MB-1 GB per
     bucket there.
+
+    ``spec`` (from :func:`index_spec`) is the index's stamp: recorded as
+    table properties before the swap, so the live table is never
+    unstamped, and checked by :func:`require_spec` on every extend and
+    probe.
 
     Replace contract: ``df`` is written to ``{table}_rebuild`` and
     swapped in by rename-rename-drop (``table`` → ``{table}_old``,
@@ -179,6 +186,9 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
     spark.sql(f"DROP TABLE IF EXISTS `{tmp}`")
     _clear_location(spark, tmp)
     _save_bucketed(df, tmp, bucket_cols, n_buckets, "overwrite")
+    if spec:
+        props = ", ".join(f"'{k}' = '{v}'" for k, v in spec.items())
+        spark.sql(f"ALTER TABLE `{tmp}` SET TBLPROPERTIES ({props})")
     spark.sql(f"DROP TABLE IF EXISTS `{old}`")
     _clear_location(spark, old)
     live = spark.catalog.tableExists(table)
@@ -199,37 +209,75 @@ def append_bucketed(df: DataFrame, table: str) -> None:
     """Append ``df`` to a table :func:`write_bucketed` wrote, under the
     bucket spec the catalog recorded for it — the one append path of
     every persisted index, so an extend can never write under a bucket
-    count or columns other than the build's."""
-    n_buckets, bucket_cols = _bucket_spec(df.sparkSession, table)
+    count or columns other than the build's.  Appends keep the stamp."""
+    n_buckets, bucket_cols, _ = table_spec(df.sparkSession, table)
     _save_bucketed(df, table, bucket_cols, n_buckets, "append")
+
+
+def index_spec(family: str, **values) -> dict[str, str]:
+    """The stamp of a ``family`` index: ``fmr.<family>.<name>`` → the
+    value as text, in the caller's order — what :func:`write_bucketed`
+    records and :func:`require_spec` checks."""
+    return {f"fmr.{family}.{name}": str(v) for name, v in values.items()}
+
+
+def require_spec(spark: SparkSession, table: str,
+                 spec: Mapping[str, str]) -> None:
+    """Refuse to extend or probe ``table`` under a spec other than the
+    one its build stamped: an index read or grown under another spec
+    (n-gram size, signature seed, filter geometry, centroids …) answers
+    silently wrong.  One catalog read, no Spark job.  A table that
+    records none of ``spec``'s keys was written outside a build and has
+    nothing to check against."""
+    stamp = table_spec(spark, table).stamp
+    if not any(k in stamp for k in spec):
+        return
+    if any(stamp.get(k) != v for k, v in spec.items()):
+        def show(values: Mapping[str, str]) -> str:
+            return ", ".join(f"{k.rsplit('.', 1)[1]}={values.get(k)}"
+                             for k in spec)
+        raise ValueError(
+            f"`{table}` was built with {show(stamp)} — got {show(spec)}; "
+            "the build's spec (filter geometry, signature seed, n-gram "
+            "size, centroids …) is part of the index: rebuild to change it")
 
 
 def table_num_buckets(spark: SparkSession, table: str) -> int:
     """The bucket count the catalog recorded for ``table`` — the catalog,
     not a caller parameter, owns the bucket spec of a persisted index.
-    Raises ``ValueError`` when none is recorded (see :func:`_bucket_spec`)."""
-    return _bucket_spec(spark, table)[0]
+    Raises ``ValueError`` when none is recorded (see :func:`table_spec`)."""
+    return table_spec(spark, table).n_buckets
 
 
-def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str]]:
-    """``(Num Buckets, Bucket Columns)`` from one ``DESCRIBE TABLE
-    EXTENDED``, collected and read on the driver: the command result is
-    local, so this runs no Spark job (a DataFrame filter over it would
-    run two).  A table WITHOUT a recorded bucket spec (externally created,
-    or written unbucketed) raises rather than assuming one: appending
-    under a guessed spec would silently break the probe's pruned
-    bucketed-scan contract."""
+class TableSpec(NamedTuple):
+    n_buckets: int
+    bucket_cols: list[str]
+    stamp: dict[str, str]
+
+
+def table_spec(spark: SparkSession, table: str) -> TableSpec:
+    """The bucket spec and the stamp (its ``fmr.*`` table properties) of
+    a persisted index table, from one ``DESCRIBE TABLE EXTENDED``
+    collected and read on the driver: the command result is local, so
+    this runs no Spark job (a DataFrame filter over it would run two).
+    A table WITHOUT a recorded bucket spec (externally created, or
+    written unbucketed) raises rather than assuming one: appending under
+    a guessed spec would silently break the probe's pruned bucketed-scan
+    contract."""
     # the detailed-table section follows the column rows, so its keys win
     desc = {r["col_name"]: r["data_type"] for r in
             spark.sql(f"DESCRIBE TABLE EXTENDED `{table}`").collect()}
     if "Num Buckets" not in desc:
         raise ValueError(
             f"`{table}` has no 'Num Buckets' in the catalog — it was not "
-            "written by write_bucketed; refusing to write under an "
-            "assumed bucket spec")
+            "written by write_bucketed; refusing to assume a bucket spec")
     cols = [c.strip().strip("`")
             for c in desc["Bucket Columns"].strip("[]").split(",")]
-    return int(desc["Num Buckets"]), cols
+    # rendered "[k1=v1, k2=v2]"; stamp values never hold ", "
+    props = desc.get("Table Properties", "").strip("[]").split(", ")
+    stamp = dict(p.split("=", 1) for p in props
+                 if p.startswith("fmr.") and "=" in p)
+    return TableSpec(int(desc["Num Buckets"]), cols, stamp)
 
 
 def _save_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],

@@ -657,6 +657,17 @@ def q_drift_psi_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return QL.psi_drift(ref, cur, "n_chars", breakpoints=bks)
 
 
+def _oracle_sf_dir() -> str:
+    """The fixture directory a twin replays data-dependent constants
+    from: ``SPARK_GRAFT_ORACLE_SF_DIR`` (set by the local parity suite),
+    else ``SPARK_GRAFT_TEST_SF_DIR``, else sf0.01."""
+    import os
+    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
+              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
+              or "/root/testdata/sf0.01")
+    return sf_dir
+
+
 _DRIFT_QUANTILE_ORACLE_CACHE: dict[str, str] = {}
 
 
@@ -671,9 +682,7 @@ def _drift_psi_quantile_oracle() -> str:
 
     import duckdb as _duckdb
 
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _DRIFT_QUANTILE_ORACLE_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -753,9 +762,7 @@ def _stream_drift_oracle() -> str:
 
     import duckdb as _duckdb
 
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _STREAM_DRIFT_ORACLE_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -874,9 +881,7 @@ def _psi_lifecycle_oracle() -> str:
 
     import duckdb as _duckdb
 
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _PSI_LIFECYCLE_ORACLE_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -1009,9 +1014,7 @@ def _quality_dashboard_oracle() -> str:
 
     import duckdb as _duckdb
 
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _QUALITY_DASH_ORACLE_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -5294,9 +5297,7 @@ def _bloom_resize_oracle() -> str:
     import duckdb as _duckdb
 
     from frames_map_reduce_spark.operators.bloom import suggest_geometry
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _RESIZE_ORACLE_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -5335,9 +5336,7 @@ def _bpe_replayed_merges() -> list:
     import os
 
     import duckdb as _duckdb
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _BPE_ORACLE_CACHE:
         # driver testdata is a single file; the sf1.0 replica is a
@@ -5403,9 +5402,7 @@ def _semantic_dedup_oracle() -> str:
     :func:`_ivf_oracle`, with ``min_id=0`` because semantic_dedup trains
     on the whole table rather than the id-split corpus."""
     import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "embeddings.parquet")
     if path not in _SEMDEDUP_ORACLE_CACHE:
         cents = SIM.replay_ivf_centroids(path, min_id=0, n_centroids=32)
@@ -5427,9 +5424,7 @@ def _ivf_oracle() -> str:
     literals are exactly the centroids every q_ann_ivf* run trains on
     that fixture."""
     import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "embeddings.parquet")
     if path not in _IVF_ORACLE_CACHE:
         cents = SIM.replay_ivf_centroids(path, min_id=5, n_centroids=16)
@@ -5455,9 +5450,7 @@ def _ivf_extend_oracle() -> str:
     build→extend→probe Spark arc is the lifecycle law (extend ≡
     rebuild at frozen centroids)."""
     import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "embeddings.parquet")
     if path not in _IVF_EXTEND_ORACLE_CACHE:
         cents = _ivf_build_slice_centroids(path)
@@ -5479,9 +5472,7 @@ def _shingle_vocab_bits() -> int:
     import os
 
     import duckdb as _duckdb
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "documents.parquet")
     if path not in _SHINGLE_VOCAB_CACHE:
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
@@ -5517,10 +5508,7 @@ def _jaccard_pair_fragments() -> dict:
     Keys: self / cross / cross_all / blocked (single-statement SQL) +
     ``staged`` ({key: (setup stmts, final select)} — the temp-table
     rendering the sf1.0 gate runs, see scale_staged_oracles)."""
-    import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _JACCARD_FRAG_CACHE:
         return _JACCARD_FRAG_CACHE[sf_dir]
     shingle5 = TX.char_shingles_sql("text", 5)
@@ -5607,9 +5595,7 @@ def _ivf_pq_oracle() -> str:
     quantized.ivf_pq_oracle_sql's per-row assignment + residual +
     argmin-code + BIGINT ADC score + recall derivation over the union."""
     import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "embeddings.parquet")
     if path not in _IVF_PQ_ORACLE_CACHE:
         keep = lambda i: i >= 5 and i % 4 != 3  # noqa: E731
@@ -5629,9 +5615,7 @@ def _ivf_drift_oracle() -> str:
     micro-quantize → floor-mean → exact squared-delta → floored-sqrt
     staging (similarity.ivf_drift_stats_sql)."""
     import os
-    sf_dir = (os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-              or os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-              or "/root/testdata/sf0.01")
+    sf_dir = _oracle_sf_dir()
     path = os.path.join(sf_dir, "embeddings.parquet")
     if path not in _IVF_DRIFT_ORACLE_CACHE:
         cents = _ivf_build_slice_centroids(path)

@@ -3,11 +3,25 @@ key must not shuffle either side — the repeated-join primitive at 100 TB."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from pathlib import Path
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.plans import count_exchanges
-from frames_map_reduce_spark.sources import table_num_buckets, write_bucketed
+from frames_map_reduce_spark.operators import bloom as BL
+from frames_map_reduce_spark.operators import dedup as DD
+from frames_map_reduce_spark.operators import multimodal as MM
+from frames_map_reduce_spark.operators import quantized as QZ
+from frames_map_reduce_spark.operators import retrieval as RET
+from frames_map_reduce_spark.operators import similarity as SIM
+from frames_map_reduce_spark.sources import (
+    table_num_buckets,
+    table_spec,
+    write_bucketed,
+)
 
 
 @pytest.fixture(scope="module")
@@ -138,18 +152,26 @@ def test_native_topk_matches_grouped_map(spark, lineitem):
     assert a == b
 
 
-def test_table_num_buckets_runs_no_job(spark, bucketed_tables):
-    """The catalog spec read is a driver-side look at one DESCRIBE
-    result: reading it launches no Spark job."""
-    sc, group = spark.sparkContext, "fmr-spec-read-test"
-    sc.setJobGroup(group, "bucket spec read")
+@contextmanager
+def _no_jobs(spark, group):
+    """Run the body in job group ``group`` and assert it launched no
+    Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        assert table_num_buckets(spark, "li_b") == 8
+        yield
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_table_num_buckets_runs_no_job(spark, bucketed_tables):
+    """The catalog spec read is a driver-side look at one DESCRIBE
+    result: reading it launches no Spark job."""
+    with _no_jobs(spark, "fmr-spec-read-test"):
+        assert table_num_buckets(spark, "li_b") == 8
 
 
 def _build_contamination(df, table):
@@ -227,3 +249,143 @@ def test_failed_replace_keeps_the_old_index(spark, suffix, build, probe):
         for s in ("_grams", "_words", "_buckets", "_shingles"):
             for extra in ("", "_rebuild", "_old"):
                 spark.sql(f"DROP TABLE IF EXISTS {table}{s}{extra}")
+
+
+def _drop_index(spark, table):
+    for s in ("", "_words", "_buckets", "_shingles", "_grams", "_bands"):
+        for extra in ("", "_rebuild", "_old"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}{s}{extra}")
+
+
+def _spec_docs(spark):
+    texts = ["the quick brown fox jumps over the lazy dog",
+             "pack my box with five dozen liquor jugs",
+             "sphinx of black quartz judge my vow",
+             "how vexingly quick daft zebras jump"]
+    return spark.createDataFrame(
+        [(i, t, t.encode()) for i, t in enumerate(texts)],
+        "doc_id long, text string, payload binary")
+
+
+def _spec_vectors(embeddings):
+    return embeddings.filter(F.col("vec_id") < 32).select("vec_id",
+                                                          "embedding")
+
+
+def _queries(vecs):
+    return vecs.select(F.col("vec_id").alias("query_id"), "embedding")
+
+
+# family -> (index table suffix, key that differs, build at spec A
+# returning what extend/probe need, extend at spec B, probe at spec B)
+_SPEC_CASES = {
+    "bloom": ("_words", "k",
+              lambda d, v, t: BL.build_bloom_index(d, t, "text",
+                                                   m_bits=1 << 12, k=3),
+              lambda d, v, t, _: BL.extend_bloom_index(
+                  d, t, "text", m_bits=1 << 12, k=4),
+              lambda d, v, t, _: BL.bloom_probe_index(
+                  d.sparkSession, t, d, "text", "doc_id", m_bits=1 << 12,
+                  k=4)),
+    "minhash": ("_buckets", "seed",
+                lambda d, v, t: DD.build_minhash_index(d, t, "text",
+                                                       "doc_id", seed=42),
+                lambda d, v, t, _: DD.extend_minhash_index(
+                    d, t, "text", "doc_id", seed=7),
+                lambda d, v, t, _: DD.minhash_probe_index(
+                    d.sparkSession, t, d, "text", "doc_id", seed=7)),
+    "contamination": ("_grams", "n",
+                      lambda d, v, t: RET.build_contamination_index(
+                          d, t, "text", n=3),
+                      lambda d, v, t, _: RET.extend_contamination_index(
+                          d, t, "text", n=4),
+                      lambda d, v, t, _: RET.probe_contamination_index(
+                          d.sparkSession, t, d, "text", "doc_id", n=4)),
+    "media": ("_bands", "n_bands",
+              lambda d, v, t: MM.build_media_contamination_index(
+                  d, t, "doc_id", "payload", fake=True),
+              lambda d, v, t, _: MM.extend_media_contamination_index(
+                  d, t, "doc_id", "payload", n_bands=8, fake=True),
+              lambda d, v, t, _: MM.probe_media_contamination_index(
+                  d.sparkSession, t, d, "doc_id", "payload", n_bands=8,
+                  fake=True)),
+    "ivf": ("", "centroids_sha256",
+            lambda d, v, t: SIM.build_ivf_index(v, t, n_centroids=2),
+            lambda d, v, t, cents: SIM.extend_ivf_index(v, t, cents + 1.0),
+            lambda d, v, t, cents: SIM.ivf_topk_indexed(
+                v.sparkSession, t, _queries(v), cents + 1.0, k=1,
+                nprobe=1)),
+    "ivf_pq": ("", "codebooks_sha256",
+               lambda d, v, t: QZ.build_ivf_pq_index(
+                   v, t, n_centroids=2, m_sub=8, k_codes=4),
+               lambda d, v, t, spec: QZ.extend_ivf_pq_index(
+                   v, t, spec[0], np.asarray(spec[1]) + 1),
+               lambda d, v, t, spec: QZ.ivf_pq_topk(
+                   v.sparkSession, t, _queries(v), spec[0],
+                   np.asarray(spec[1]) + 1, k=1, nprobe=1)),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_SPEC_CASES))
+def test_mismatched_spec_is_refused_before_any_job(spark, embeddings,
+                                                   family):
+    """Every family stamps its spec at build; an extend or probe at
+    another spec raises naming the key, before any Spark job runs, and
+    leaves the index as it was."""
+    suffix, key, build, extend, probe = _SPEC_CASES[family]
+    table = f"spec_refusal_{family}_t"
+    docs, vecs = _spec_docs(spark), _spec_vectors(embeddings)
+    try:
+        built = build(docs, vecs, table)
+        n_rows = spark.table(f"{table}{suffix}").count()
+        with _no_jobs(spark, f"fmr-spec-refusal-{family}"):
+            for call in (extend, probe):
+                with pytest.raises(ValueError,
+                                   match=rf"was built with .*\b{key}="):
+                    call(docs, vecs, table, built)
+        assert spark.table(f"{table}{suffix}").count() == n_rows
+    finally:
+        _drop_index(spark, table)
+
+
+def test_stamp_survives_compact_and_rebuild(spark):
+    """Compaction and the MinHash cap rebuild carry the build's stamp
+    over; a Bloom re-size stamps its new geometry."""
+    docs, table = _spec_docs(spark), "stamp_keep_t"
+
+    def stamp(suffix):
+        return table_spec(spark, f"{table}{suffix}").stamp
+
+    try:
+        BL.build_bloom_index(docs, table, "text", m_bits=1 << 12, k=3)
+        BL.extend_bloom_index(docs, table, "text", m_bits=1 << 12, k=3)
+        BL.compact_bloom_index(spark, table)
+        assert stamp("_words") == {"fmr.bloom.m_bits": "4096",
+                                   "fmr.bloom.k": "3"}
+        BL.rebuild_bloom_index(docs, table, "text", m_bits=1 << 13, k=4)
+        assert stamp("_words") == {"fmr.bloom.m_bits": "8192",
+                                   "fmr.bloom.k": "4"}
+        assert BL.bloom_geometry(spark, table) == (1 << 13, 4)
+
+        DD.build_minhash_index(docs, table, "text", "doc_id", seed=7)
+        want = {"fmr.minhash.num_perm": "128", "fmr.minhash.bands": "16",
+                "fmr.minhash.shingle_k": "5", "fmr.minhash.seed": "7"}
+        assert stamp("_buckets") == want and stamp("_shingles") == want
+        DD.rebuild_minhash_index(spark, table, max_bucket=1)
+        assert stamp("_buckets") == want
+    finally:
+        _drop_index(spark, table)
+
+
+def test_catalog_and_filesystem_calls_live_in_sources():
+    """Table properties, renames and the Hadoop FileSystem are touched
+    by ``sources`` alone: every persisted index is replaced, appended
+    and stamped through it."""
+    pkg = Path(__file__).resolve().parent.parent / "frames_map_reduce_spark"
+    owner = pkg / "sources" / "__init__.py"
+    found = [(str(p.relative_to(pkg)), word)
+             for p in sorted(pkg.rglob("*.py")) if p != owner
+             for word in ("TBLPROPERTIES", "RENAME TO", "getFileSystem")
+             if word in p.read_text()]
+    assert found == []
+    assert "SHOW TBLPROPERTIES" not in owner.read_text()
