@@ -52,12 +52,6 @@ def key_map(in_col: str, out_col: str,
     return KeyMap((in_col,), ((out_col, expr),))
 
 
-def key_map_multi(in_cols: Sequence[str],
-                  exprs: dict[str, Column]) -> KeyMap:
-    """Key map over several input columns at once."""
-    return KeyMap(tuple(in_cols), tuple(exprs.items()))
-
-
 def combine_key_aggregations(a: KeyMap, b: KeyMap) -> KeyMap:
     """Product of key maps over disjoint column sets, disjointness checked
     at plan time exactly as the reference type-checks it

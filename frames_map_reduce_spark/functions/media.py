@@ -235,13 +235,6 @@ def png_encode(arr: np.ndarray) -> bytes:
             + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b""))
 
 
-def png_resize_nearest(b: bytes, width: int, height: int) -> bytes:
-    """Decode → nearest-neighbor resample → re-encode.  Pure numpy
-    index-gather; deterministic.  (PNG-only convenience around
-    :func:`image_thumbnail_png`, which also handles JPEG/GIF.)"""
-    return png_encode(_resample_nearest(png_decode(b), width, height))
-
-
 def _resample_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
     h, w = img.shape[:2]
     ys = (np.arange(height) * h // height).clip(0, h - 1)

@@ -68,18 +68,8 @@ def wordish_count_sql(col: str) -> str:
 # Quality scoring
 # ---------------------------------------------------------------------------
 
-PUNCT_CLASS = f"[^a-zA-Z0-9{WS_CHARS}]"
-DIGIT_CLASS = "[0-9]"
-
-
 def _ratio(numer: Column, denom: Column) -> Column:
     return F.try_divide(numer, denom)
-
-
-def char_class_ratio(col: Column, cls: str) -> Column:
-    """share of characters matching regex class ``cls``."""
-    kept = F.length(F.regexp_replace(col, f"(?s)(?!{cls}).", ""))
-    return _ratio(kept, F.length(col))
 
 
 def punct_ratio(col: Column) -> Column:
@@ -168,21 +158,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "it": ("il", "di", "che", "per", "con", "una", "sono", "della"),
 }
 _LANG_ORDER = tuple(LANG_MARKERS)  # deterministic tie-break order
-
-
-def _contains_fn(arr: Column):
-    # closure factory: a default-arg lambda (lambda t, a=arr: ...) would be
-    # seen by PySpark as a TWO-arg (element, index) lambda — wrong semantics
-    return lambda t: F.array_contains(arr, t)
-
-
-def lang_scores(col: Column) -> dict[str, Column]:
-    toks = tokens(col)
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, _contains_fn(arr)))
-    return out
 
 
 def lang_id(col: Column) -> Column:

@@ -258,10 +258,10 @@ def extend_bloom_index(corpus_delta: DataFrame, table: str, text_col: str,
     from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(corpus_delta, [text_col])
-    require_spec(corpus_delta.sparkSession, f"{table}_words",
-                 _spec(m_bits, k))
+    spec = require_spec(corpus_delta.sparkSession, f"{table}_words",
+                        _spec(m_bits, k))
     append_bucketed(_word_rows(corpus_delta, text_col, m_bits, k),
-                    f"{table}_words")
+                    f"{table}_words", spec)
 
 
 def bloom_probe_index(spark: SparkSession, table: str, queries: DataFrame,

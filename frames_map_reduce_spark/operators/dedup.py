@@ -86,6 +86,97 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str,
 
 
 # ---------------------------------------------------------------------------
+# Banded buckets — the candidate step every near-dup pairer shares
+# ---------------------------------------------------------------------------
+# MinHash, SimHash, the perceptual media hashes and SRP embeddings all
+# assign each row one ``_bucket`` key per band and pair the rows of each
+# bucket (the fold's assign-then-reduce); only the verify differs.
+
+def _sign_once(sig: DataFrame) -> DataFrame:
+    """Persist a signature frame (memory-and-disk) and materialize it
+    NOW.  The pairers read it from several plan branches (bucket sizes,
+    both self-join sides, verify sides); with a Python signing stage in
+    the lineage, recomputing per branch re-pays the worker round, and
+    within one downstream action the branches otherwise race to populate
+    the cache and each can recompute the Python stage (measured ~1.5×
+    total job cost).  One eager pass is strictly cheaper than that race
+    at any scale.  The cache is never released (ROADMAP item 5)."""
+    from pyspark import StorageLevel
+    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig.count()
+    return sig
+
+
+def _require_pigeonhole(max_hamming: int, n_bands: int) -> None:
+    """Banding finds every pair within Hamming distance < ``n_bands``:
+    such a pair agrees exactly on ≥ 1 band (pigeonhole).  At or past it
+    a pair can spread its differing bits over every band and is lost
+    silently, so refuse."""
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} >= n_bands={n_bands}: banding only "
+            "guarantees recall for Hamming distance < n_bands (pigeonhole)")
+
+
+def _bucket_sizes(banded: DataFrame) -> DataFrame:
+    """(_bucket, _n): each bucket's member count — bounded (one long)
+    aggregation state per bucket."""
+    return banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
+
+
+def _bucket_stats(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """Drop-accountability for a band cap: one row (n_buckets, n_multi,
+    n_oversized, max_size) over the bucket sizes of ``banded``."""
+    return _bucket_sizes(banded).agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(F.when(F.col("_n") > 1, 1).otherwise(0)).alias("n_multi"),
+        F.sum(F.when(F.col("_n") > max_bucket, 1).otherwise(0))
+         .alias("n_oversized"),
+        F.max("_n").alias("max_size"))
+
+
+def _prune_buckets(banded: DataFrame, max_bucket: int,
+                   keep_singletons: bool = False,
+                   broadcast: bool = True) -> DataFrame:
+    """The rows of ``banded`` whose bucket has at most ``max_bucket``
+    members and, unless ``keep_singletons`` (an index side, whose rows
+    pair with probes rather than with each other), more than one — a
+    B-member bucket emits B² join rows, so a degenerate one (empties,
+    boilerplate — exact dedup's job) is dropped rather than left to
+    dominate the job.
+
+    The sizes are filtered BEFORE any pair work.  By default the
+    surviving-bucket list is broadcast and prunes the rows map-side, so
+    rows of dropped buckets never reach the pair shuffle (at sf1.0 the
+    oversized buckets held most of a boilerplate corpus's entries).
+    ``broadcast=False`` leaves the join to the planner, for a caller
+    whose next step re-groups on ``_bucket`` and so reuses the join's
+    exchange."""
+    keep = F.col("_n") <= max_bucket
+    if not keep_singletons:
+        keep = (F.col("_n") > 1) & keep
+    ok = _bucket_sizes(banded).filter(keep).select("_bucket")
+    return banded.join(F.broadcast(ok) if broadcast else ok, "_bucket")
+
+
+def _bucket_self_join(pruned: DataFrame, id_col: str,
+                      carry: list[str]) -> DataFrame:
+    """Every pair of rows sharing a ``_bucket``, once per shared bucket:
+    ``(_bucket, id_a, <c>_a …, _bucket_b, id_b, <c>_b …)`` with ``id_a <
+    id_b``, each ``carry`` column on both sides — an equi-join on the
+    bucket key, never an all-pairs product.  A pair sharing several
+    buckets appears once per bucket; the caller's verify filters, then
+    de-duplicates."""
+    a = pruned.select("_bucket", F.col(id_col).alias("id_a"),
+                      *[F.col(c).alias(f"{c}_a") for c in carry])
+    b = pruned.select(F.col("_bucket").alias("_bucket_b"),
+                      F.col(id_col).alias("id_b"),
+                      *[F.col(c).alias(f"{c}_b") for c in carry])
+    return a.join(b, (F.col("_bucket") == F.col("_bucket_b"))
+                  & (F.col("id_a") < F.col("id_b")))
+
+
+# ---------------------------------------------------------------------------
 # 2. MinHash + LSH
 # ---------------------------------------------------------------------------
 
@@ -230,17 +321,13 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str, id_col: str,
                                       num_perm, seed) \
             .persist(StorageLevel.MEMORY_AND_DISK)
     banded = _minhash_banded(with_sig, id_col, num_perm, bands)
-    # Size-filter buckets BEFORE materializing any id array: the counts
-    # pass has bounded (one long) agg state per bucket, and only surviving
-    # buckets reach the collect_list, so its buffer is capped at
-    # ``max_bucket`` elements — a degenerate bucket never builds an
+    # Size-filter buckets BEFORE materializing any id array: only
+    # surviving buckets reach the collect_list, so its buffer is capped
+    # at ``max_bucket`` elements — a degenerate bucket never builds an
     # unbounded array.  The join and the regroup share the hash
     # partitioning on ``_bucket`` (one exchange, reused).
-    sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)) \
-              .select("_bucket")
     pairs = (
-        banded.join(ok, "_bucket")
+        _prune_buckets(banded, max_bucket, broadcast=False)
               .groupBy("_bucket").agg(F.collect_list(id_col).alias("_ids"))
               .select(F.explode(_pairs_expr(F.sort_array(F.col("_ids")))).alias("_p"))
               .select(F.col("_p._1").alias("id_a"), F.col("_p._2").alias("id_b"))
@@ -250,14 +337,17 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str, id_col: str,
 
 
 def _minhash_banded(with_sig: DataFrame, id_col: str, num_perm: int,
-                    bands: int) -> DataFrame:
-    """(id, …, _sig) → (id, _bucket): one bucket key per band =
+                    bands: int, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(id, …, _sig) → (id, *carry, _bucket): one bucket key per band =
     xxhash64(band index, band slice of the signature) — pure JVM
-    expressions over the (cached) signature frame."""
+    expressions over the (cached) signature frame.  The one band-key
+    formula of every MinHash table, pairer and probe: a build and a
+    probe keyed by two copies that drift would miss every probe without
+    raising."""
     rows_per_band = num_perm // bands
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_band")
-    return with_sig.select(id_col, "_sig", band_idx).select(
-        id_col,
+    return with_sig.select(id_col, *carry, "_sig", band_idx).select(
+        id_col, *carry,
         F.xxhash64(
             F.col("_band"),
             F.slice(F.col("_sig"), F.col("_band") * rows_per_band + 1, rows_per_band),
@@ -277,13 +367,8 @@ def minhash_bucket_stats(df: DataFrame, text_col: str, id_col: str,
     tripping the cap fails loudly instead of as a recall loss."""
     with_sig = _shingle_sig_frame(df, text_col, id_col, shingle_k,
                                   num_perm, seed)
-    sizes = _minhash_banded(with_sig, id_col, num_perm, bands) \
-        .groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("_n") > 1, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("_n") > max_bucket, 1).otherwise(0)).alias("n_oversized"),
-        F.max("_n").alias("max_size"))
+    return _bucket_stats(_minhash_banded(with_sig, id_col, num_perm, bands),
+                         max_bucket)
 
 
 def _pairs_expr(sorted_ids: Column) -> Column:
@@ -314,18 +399,11 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     Returns (id_a, id_b, jaccard_sim) with jaccard_sim ≥ threshold."""
     # ONE fused Python pass (shingle-hash set + minhash signature in the
     # same Arrow batch) feeds the candidate branch and both verify join
-    # sides.  PERSISTED (memory-and-disk, spills at scale): with a Python
-    # stage in the lineage, recomputing per branch re-pays the
-    # worker/serialization round each time — measured slower than caching,
-    # the OPPOSITE call from the earlier all-JVM expression lineage whose
+    # sides, signed once — measured slower recomputed per branch, the
+    # OPPOSITE call from the earlier all-JVM expression lineage whose
     # recompute pipelined for free inside each consumer stage.
-    from pyspark import StorageLevel
-    fused = _shingle_sig_frame(df, text_col, id_col, shingle_k,
-                               num_perm, seed) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # eager materialization: see simhash_near_dup_pairs — avoids the
-    # concurrent-consumer cache-population race re-running the Python pass
-    fused.count()
+    fused = _sign_once(_shingle_sig_frame(df, text_col, id_col, shingle_k,
+                                          num_perm, seed))
     cands = minhash_lsh_candidates(df, text_col, id_col, num_perm, bands,
                                    shingle_k, seed, with_sig=fused)
     # verify on 64-bit shingle-hash arrays: same Jaccard as string shingles
@@ -419,10 +497,9 @@ def build_minhash_index(corpus: DataFrame, table: str, text_col: str,
         from frames_map_reduce_spark.sources import clamp_buckets
         n_buckets = clamp_buckets(n_docs * 4096)
     try:
-        banded = _minhash_banded(sig, "ref_id", num_perm, bands)
-        sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-        ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
-        pruned = banded.join(F.broadcast(ok), "_bucket")
+        pruned = _prune_buckets(
+            _minhash_banded(sig, "ref_id", num_perm, bands), max_bucket,
+            keep_singletons=True)
         # Safe to overlap: ``sig`` is already materialized by count(), so
         # there is no concurrent cache-population race.
         spec = _minhash_spec(num_perm, bands, shingle_k, seed)
@@ -445,8 +522,8 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     Appends to both bucketed tables with the same bucket spec Spark
     recorded at build time (enforced by the catalog), paying only the
     delta's signature pass — the existing index is never read or
-    rewritten.  The spec parameters are checked against the build's
-    stamp before the delta is signed.  The build-time
+    rewritten.  The spec parameters are checked against both tables'
+    stamps before the delta is signed.  The build-time
     ``max_bucket`` cap is NOT re-evaluated across appends (that would
     require reading the whole index); monitor with
     :func:`minhash_index_bucket_stats` (one agg over the persisted
@@ -458,8 +535,9 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(corpus_delta, [text_col, id_col])
-    require_spec(corpus_delta.sparkSession, f"{table}_buckets",
-                 _minhash_spec(num_perm, bands, shingle_k, seed))
+    spec = _minhash_spec(num_perm, bands, shingle_k, seed)
+    specs = {name: require_spec(corpus_delta.sparkSession, name, spec)
+             for name in (f"{table}_buckets", f"{table}_shingles")}
     sig = _shingle_sig_frame(corpus_delta, text_col, id_col, shingle_k,
                              num_perm, seed) \
         .withColumnRenamed(id_col, "ref_id") \
@@ -467,8 +545,9 @@ def extend_minhash_index(corpus_delta: DataFrame, table: str, text_col: str,
     sig.count()
     try:
         banded = _minhash_banded(sig, "ref_id", num_perm, bands)
-        _write_index_tables(banded, sig, table,
-                            lambda df, name, _by: append_bucketed(df, name))
+        _write_index_tables(
+            banded, sig, table,
+            lambda df, name, _by: append_bucketed(df, name, specs[name]))
     finally:
         sig.unpersist()
 
@@ -494,14 +573,7 @@ def minhash_index_bucket_stats(spark, table: str,
     full candidate fan-out.  ``n_oversized > 0`` here is the signal to
     run :func:`rebuild_minhash_index`.  Cost: one aggregation over the
     skinny (ref_id, _bucket) table, no Python stage."""
-    sizes = (spark.table(f"{table}_buckets")
-                  .groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n")))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("_n") > 1, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("_n") > max_bucket, 1).otherwise(0))
-         .alias("n_oversized"),
-        F.max("_n").alias("max_size"))
+    return _bucket_stats(spark.table(f"{table}_buckets"), max_bucket)
 
 
 def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
@@ -526,10 +598,8 @@ def rebuild_minhash_index(spark, table: str, max_bucket: int = 1000) -> None:
     from frames_map_reduce_spark.sources import table_spec, write_bucketed
 
     nb, _, stamp = table_spec(spark, f"{table}_buckets")
-    src = spark.table(f"{table}_buckets")
-    sizes = src.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
-    pruned = src.join(F.broadcast(ok), "_bucket").select("ref_id", "_bucket")
+    pruned = _prune_buckets(spark.table(f"{table}_buckets"), max_bucket,
+                            keep_singletons=True).select("ref_id", "_bucket")
     write_bucketed(pruned, f"{table}_buckets", ["_bucket"], nb, stamp)
 
 
@@ -910,44 +980,17 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     thousand-member buckets — the 2000 default clears the measured sf1.0
     geometry, max bucket 1060 over 50k docs, while bounding the worst
     bucket at ~2M pairs.)"""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: banding only "
-            f"guarantees recall for Hamming distance < n_bands")
-    chunk = bits // n_bands
-    # PERSIST the signature frame: three consumers below (bucket sizes and
-    # both self-join sides) would otherwise re-run the tokenize + Python
-    # signature stage each — and (id, _sim) is two longs per row, the
-    # cheapest possible thing to cache.
-    from pyspark import StorageLevel
-    sh = _simhash_from_text_frame(df, text_col, id_col, bits) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # Materialize NOW: within one downstream action the three consumers
-    # otherwise race to populate the cache and each can recompute the
-    # Python stage (measured ~1.5× total job cost).  One eager pass is
-    # strictly cheaper than that race at any scale.
-    sh.count()
-    banded = sh.select(
-        id_col, "_sim",
-        F.explode(_simhash_chunks(bits, n_bands)).alias("_bucket"))
-    sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    # surviving-bucket list is bounded by min(n_bands * 2^chunk, n_bands *
-    # corpus) MULTI-member buckets — a few MB even at the 126-bit default's
-    # 147k-key band space — broadcast it and prune BOTH self-join sides
-    # map-side, so rows in oversized buckets never reach the join shuffle
-    # (they can only pair inside their dropped bucket, so pruning the b
-    # side too loses nothing).  At sf1.0 the measured oversized buckets
-    # hold most of a boilerplate corpus's entries; one-sided pruning
-    # shuffled all of them for zero matches.
-    ok = sizes.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)) \
-              .select("_bucket")
-    pruned = banded.join(F.broadcast(ok), "_bucket")
-    a = pruned.select(
-        "_bucket", F.col(id_col).alias("id_a"), F.col("_sim").alias("_sim_a"))
-    b = pruned.select(F.col("_bucket").alias("_bucket_b"), F.col(id_col).alias("id_b"),
-                      F.col("_sim").alias("_sim_b"))
+    _require_pigeonhole(max_hamming, n_bands)
+    # (id, _sim) is two longs per row: the cheapest possible thing to
+    # cache, and the bucket sizes and both self-join sides read it.  The
+    # surviving-bucket list is bounded by min(n_bands * 2^chunk, n_bands
+    # * corpus) multi-member buckets — a few MB even at the 126-bit
+    # default's 147k-key band space — so it is broadcast.
+    sh = _sign_once(_simhash_from_text_frame(df, text_col, id_col, bits))
+    pruned = _prune_buckets(
+        _simhash_banded(sh, id_col, bits, n_bands), max_bucket)
     return (
-        a.join(b, (F.col("_bucket") == F.col("_bucket_b")) & (F.col("id_a") < F.col("id_b")))
+        _bucket_self_join(pruned, id_col, ["_sim"])
          .select("id_a", "id_b",
                  hamming_words(F.col("_sim_a"), F.col("_sim_b"),
                                _sim_n_words(bits)).alias("hamming_dist"))
@@ -1015,6 +1058,13 @@ def _simhash_chunks(bits: int, n_bands: int):
     return F.array(*keys)
 
 
+def _simhash_banded(sh: DataFrame, id_col: str, bits: int,
+                    n_bands: int) -> DataFrame:
+    """(id, _sim) → (id, _sim, _bucket): one row per band."""
+    return sh.select(id_col, "_sim",
+                     F.explode(_simhash_chunks(bits, n_bands)).alias("_bucket"))
+
+
 def simhash_bucket_stats(df: DataFrame, text_col: str, id_col: str,
                          bits: int = 126, n_bands: int = 4,
                          max_bucket: int = 2000) -> DataFrame:
@@ -1027,14 +1077,8 @@ def simhash_bucket_stats(df: DataFrame, text_col: str, id_col: str,
     be owned by exact dedup instead — monitor this so a corpus change
     surfaces as a loud stat, not a silent recall loss."""
     sh = _simhash_from_text_frame(df, text_col, id_col, bits)
-    sizes = (sh.select(F.explode(_simhash_chunks(bits, n_bands))
-                        .alias("_bucket"))
-               .groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n")))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("_n") > 1, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("_n") > max_bucket, 1).otherwise(0)).alias("n_oversized"),
-        F.max("_n").alias("max_size"))
+    return _bucket_stats(_simhash_banded(sh, id_col, bits, n_bands),
+                         max_bucket)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from frames_map_reduce_spark.functions import media as MEDIA
+from frames_map_reduce_spark.operators.dedup import (_bucket_self_join,
+                                                     _prune_buckets,
+                                                     _require_pigeonhole,
+                                                     _sign_once, hamming_words)
 from frames_map_reduce_spark.schema import require_columns
 
 MEDIA_META = T.StructType([
@@ -59,9 +63,6 @@ def attach_media_meta(df: DataFrame, binary_col: str, mime: str) -> DataFrame:
             F.length(F.col(binary_col)).cast("long").alias("n_bytes"),
         ),
     )
-
-
-MEDIA_META_FIELDS = [f.name for f in MEDIA_META.fields]
 
 
 def extract_media_meta(df: DataFrame, id_col: str, binary_col: str,
@@ -411,39 +412,17 @@ def ahash_near_dup_pairs(sigs: DataFrame, n_bands: int = 4,
     shape when signatures are persisted alongside the corpus (sign once,
     pair many; the minhash build/probe convention).  Semantics and scale
     notes as in :func:`image_near_dup_pairs`."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: banding "
-            f"only guarantees recall for Hamming distance < n_bands")
+    _require_pigeonhole(max_hamming, n_bands)
     require_columns(sigs, ["doc_id", "bands"])
-    from pyspark import StorageLevel
-
-    from frames_map_reduce_spark.operators.dedup import hamming_words
-
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    # materialize NOW: three consumers (bucket sizes + both join sides)
-    # would otherwise race the cache and re-run the decode stage — the
-    # simhash lesson (dedup.py:1058), and decode is far costlier here
-    sigs.count()
-    banded = sigs.select(
-        "doc_id", "bands",
-        F.posexplode("bands").alias("_band_idx", "_band_val")) \
-        .select("doc_id", "bands",
-                F.concat_ws(":", "_band_idx", "_band_val").alias("_bucket"))
-    sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)) \
-              .select("_bucket")
-    pruned = banded.join(F.broadcast(ok), "_bucket")
-    a = pruned.select("_bucket", F.col("doc_id").alias("id_a"),
-                      F.col("bands").alias("_bands_a"))
-    b = pruned.select(F.col("_bucket").alias("_bucket_b"),
-                      F.col("doc_id").alias("id_b"),
-                      F.col("bands").alias("_bands_b"))
+    # signed once: the signing stage is a decode, far costlier than
+    # simhash's tokenize, and three branches read it
+    sigs = _sign_once(sigs)
+    pruned = _prune_buckets(
+        _media_banded(sigs, ["doc_id", "bands"], "_bucket"), max_bucket)
     return (
-        a.join(b, (F.col("_bucket") == F.col("_bucket_b"))
-               & (F.col("id_a") < F.col("id_b")))
+        _bucket_self_join(pruned, "doc_id", ["bands"])
          .select("id_a", "id_b",
-                 hamming_words(F.col("_bands_a"), F.col("_bands_b"),
+                 hamming_words(F.col("bands_a"), F.col("bands_b"),
                                n_bands).alias("hamming_dist"))
          .filter(F.col("hamming_dist") <= max_hamming)
          .distinct()
@@ -539,40 +518,18 @@ def video_near_dup_pairs_from_sigs(sigs: DataFrame, n_bands: int = 4,
     """The pairing half of :func:`video_near_dup_pairs` over a
     precomputed ``(doc_id, frame_idx, bands)`` frame-signature frame
     (sign once, pair many — the persisted-index deployment shape)."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: banding "
-            f"only guarantees recall for Hamming distance < n_bands")
+    _require_pigeonhole(max_hamming, n_bands)
     if min_match_frames < 1:
         raise ValueError("min_match_frames must be >= 1")
     require_columns(sigs, ["doc_id", "frame_idx", "bands"])
-    from pyspark import StorageLevel
-
-    from frames_map_reduce_spark.operators.dedup import hamming_words
-
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    banded = sigs.select(
-        "doc_id", "frame_idx", "bands",
-        F.posexplode("bands").alias("_band_idx", "_band_val")) \
-        .select("doc_id", "frame_idx", "bands",
-                F.concat_ws(":", "_band_idx", "_band_val").alias("_bucket"))
-    sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)) \
-              .select("_bucket")
-    pruned = banded.join(F.broadcast(ok), "_bucket")
-    a = pruned.select("_bucket", F.col("doc_id").alias("id_a"),
-                      F.col("frame_idx").alias("_fa"),
-                      F.col("bands").alias("_bands_a"))
-    b = pruned.select(F.col("_bucket").alias("_bucket_b"),
-                      F.col("doc_id").alias("id_b"),
-                      F.col("frame_idx").alias("_fb"),
-                      F.col("bands").alias("_bands_b"))
+    sigs = _sign_once(sigs)
+    pruned = _prune_buckets(
+        _media_banded(sigs, ["doc_id", "frame_idx", "bands"], "_bucket"),
+        max_bucket)
     frame_pairs = (
-        a.join(b, (F.col("_bucket") == F.col("_bucket_b"))
-               & (F.col("id_a") < F.col("id_b")))
-         .select("id_a", "_fa", "id_b", "_fb",
-                 hamming_words(F.col("_bands_a"), F.col("_bands_b"),
+        _bucket_self_join(pruned, "doc_id", ["frame_idx", "bands"])
+         .select("id_a", "frame_idx_a", "id_b", "frame_idx_b",
+                 hamming_words(F.col("bands_a"), F.col("bands_b"),
                                n_bands).alias("hamming_dist"))
          .filter(F.col("hamming_dist") <= max_hamming)
          .distinct())   # a frame pair can meet in several buckets
@@ -668,15 +625,24 @@ def _media_sigs(df: DataFrame, id_col: str, binary_col: str, kind: str,
                   fake=fake)
 
 
+def _media_banded(sigs: DataFrame, carry: list, key: str) -> DataFrame:
+    """``carry`` + ``key``, one row per band of each ``bands``
+    signature: ``key`` is the "band index:band value" string whose
+    equality is the pigeonhole candidate test.  The one band-key formula
+    of the media pairers and of both sides of the contamination index
+    join — two copies that drift would miss every probe without
+    raising."""
+    rows = sigs.select(*carry, F.posexplode("bands").alias("_bi", "_bv"))
+    return rows.select(*rows.columns[:-2],
+                       F.concat_ws(":", "_bi", "_bv").alias(key))
+
+
 def _banded_rows(sigs: DataFrame) -> DataFrame:
-    """(eval_id, bucket, bands): one row per band per item — the
-    persisted shape of a perceptual contamination index.  ``bucket`` is
-    the (band index, band value) key whose equality is the pigeonhole
-    candidate test; ``bands`` rides along for the exact verify."""
-    return (sigs.select(F.col("doc_id").alias("eval_id"), "bands",
-                        F.posexplode("bands").alias("_bi", "_bv"))
-                .select("eval_id", "bands",
-                        F.concat_ws(":", "_bi", "_bv").alias("bucket")))
+    """(eval_id, bands, bucket): one row per band per item — the
+    persisted shape of a perceptual contamination index; ``bands`` rides
+    along for the exact verify."""
+    return _media_banded(sigs, [F.col("doc_id").alias("eval_id"), "bands"],
+                         "bucket")
 
 
 def build_media_contamination_index(eval_media: DataFrame, table: str,
@@ -732,11 +698,11 @@ def extend_media_contamination_index(eval_delta: DataFrame, table: str,
     from frames_map_reduce_spark.sources import append_bucketed, require_spec
 
     require_columns(eval_delta, [id_col, binary_col])
-    require_spec(eval_delta.sparkSession, f"{table}_bands",
-                 _media_spec(kind, grid, n_bands))
+    spec = require_spec(eval_delta.sparkSession, f"{table}_bands",
+                        _media_spec(kind, grid, n_bands))
     sigs = _media_sigs(eval_delta, id_col, binary_col, kind, grid,
                        n_bands, fake)
-    append_bucketed(_banded_rows(sigs), f"{table}_bands")
+    append_bucketed(_banded_rows(sigs), f"{table}_bands", spec)
 
 
 def probe_media_contamination_index(spark, table: str, incoming: DataFrame,
@@ -770,23 +736,17 @@ def probe_media_contamination_index(spark, table: str, incoming: DataFrame,
     :func:`media_contamination_index_stats` if eval media is
     boilerplate-heavy.  ``kind``/``grid``/``n_bands`` are checked
     against the build's stamp."""
-    from frames_map_reduce_spark.operators.dedup import hamming_words
     from frames_map_reduce_spark.sources import require_spec
 
     require_columns(incoming, [id_col, binary_col])
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: banding "
-            "only guarantees recall for Hamming distance < n_bands")
+    _require_pigeonhole(max_hamming, n_bands)
     require_spec(spark, f"{table}_bands", _media_spec(kind, grid, n_bands))
     idx = spark.table(f"{table}_bands") \
         .withColumnRenamed("bands", "_ibands")
     sigs = _media_sigs(incoming, id_col, binary_col, kind, grid,
                        n_bands, fake)
-    banded = (sigs.select(F.col("doc_id").alias(id_col), "bands",
-                          F.posexplode("bands").alias("_bi", "_bv"))
-                  .select(id_col, "bands",
-                          F.concat_ws(":", "_bi", "_bv").alias("bucket")))
+    banded = _media_banded(sigs, [F.col("doc_id").alias(id_col), "bands"],
+                           "bucket")
     cand = (banded.join(F.broadcast(idx), "bucket")
                   .select(id_col, "eval_id",
                           hamming_words(F.col("bands"), F.col("_ibands"),

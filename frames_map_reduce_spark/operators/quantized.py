@@ -453,12 +453,12 @@ def extend_ivf_pq_index(new_df: DataFrame, table: str, centroids,
     import numpy as np
     from frames_map_reduce_spark.sources import append_bucketed, require_spec
     require_columns(new_df, [id_col, vec_col])
-    require_spec(new_df.sparkSession, table,
-                 _ivf_pq_spec(centroids, codebooks, frac_bits))
+    spec = require_spec(new_df.sparkSession, table,
+                        _ivf_pq_spec(centroids, codebooks, frac_bits))
     cents = np.asarray(centroids, dtype=np.float64)
     encoded = pq_encode(new_df, cents, codebooks, id_col, vec_col,
                         frac_bits)
-    append_bucketed(encoded, table)
+    append_bucketed(encoded, table, spec)
 
 
 def ivf_pq_topk(spark, table: str, queries: DataFrame, centroids,

@@ -322,8 +322,8 @@ def extend_contamination_index(eval_delta: DataFrame, table: str,
     require_columns(eval_delta, [text_col])
     if n < 1:
         raise ValueError("extend_contamination_index needs n >= 1")
-    require_spec(eval_delta.sparkSession, f"{table}_grams",
-                 _contamination_spec(n))
+    spec = require_spec(eval_delta.sparkSession, f"{table}_grams",
+                        _contamination_spec(n))
     # explode_outer + isnotnull: see ngram_contamination — avoids the
     # InferFiltersFromGenerate double evaluation of the n-gram chain.
     grams = (eval_delta
@@ -331,7 +331,7 @@ def extend_contamination_index(eval_delta: DataFrame, table: str,
                  TX.word_ngrams(F.col(text_col), n))).alias("g"))
              .where(F.col("g").isNotNull())
              .distinct())
-    append_bucketed(grams, f"{table}_grams")
+    append_bucketed(grams, f"{table}_grams", spec)
 
 
 def probe_contamination_index(spark, table: str, incoming: DataFrame,

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from frames_map_reduce_spark.functions.vectors import (cosine, dot, norm,
                                                        srp_signature)
+from frames_map_reduce_spark.operators.dedup import (_bucket_self_join,
+                                                     _prune_buckets)
 from frames_map_reduce_spark.schema import require_columns
 
 
@@ -821,10 +823,10 @@ def extend_ivf_index(new_df: DataFrame, table: str, centroids,
     import numpy as np
 
     from frames_map_reduce_spark.sources import append_bucketed, require_spec
-    require_spec(new_df.sparkSession, table, _ivf_spec(centroids))
+    spec = require_spec(new_df.sparkSession, table, _ivf_spec(centroids))
     cents = np.asarray(centroids, dtype=np.float64)
     assigned = ivf_assign(new_df.select(id_col, vec_col), vec_col, cents)
-    append_bucketed(assigned, table)
+    append_bucketed(assigned, table, spec)
 
 
 def _sha256(array, dtype: str) -> str:
@@ -1082,27 +1084,18 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
         dim = first["d"]
     b = srp_bucketed(df, vec_col, dim, n_planes, seed).select(
         "_bucket", F.col(id_col), F.col(vec_col))
-    sizes = b.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    # surviving buckets ≤ 2^n_planes rows: broadcast and prune BOTH join
-    # sides map-side — dropped-bucket rows can only pair inside their own
-    # bucket, so the rhs prune loses nothing and keeps those rows (the
-    # bulk of a skewed corpus) out of the join shuffle entirely
-    ok = sizes.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)).select("_bucket")
-    # per-row norm before the pair join (same floats as norm-per-pair,
-    # computed once per row instead of twice per pair — see semantic_dedup)
-    pruned = (b.join(F.broadcast(ok), "_bucket")
+    # surviving buckets ≤ 2^n_planes rows, broadcast.  The per-row norm
+    # comes AFTER the prune (dropped rows never pay it) and before the
+    # pair join (same floats as norm-per-pair, computed once per row
+    # instead of twice per pair — see semantic_dedup)
+    pruned = (_prune_buckets(b, max_bucket)
                 .withColumn("_v", F.col(vec_col).cast("array<double>"))
                 .withColumn("_nm", norm(F.col("_v"))))
-    lhs = pruned.select("_bucket", F.col(id_col).alias("id_a"),
-                        F.col("_v").alias("_va"), F.col("_nm").alias("_na"))
-    rhs = pruned.select(F.col("_bucket").alias("_bucket_b"),
-                        F.col(id_col).alias("id_b"),
-                        F.col("_v").alias("_vb"), F.col("_nm").alias("_nb"))
     return (
-        lhs.join(rhs, (F.col("_bucket") == F.col("_bucket_b")) & (F.col("id_a") < F.col("id_b")))
+        _bucket_self_join(pruned, id_col, ["_v", "_nm"])
            .select("id_a", "id_b",
-                   F.round(F.try_divide(dot(F.col("_va"), F.col("_vb")),
-                                        F.col("_na") * F.col("_nb")), 6)
+                   F.round(F.try_divide(dot(F.col("_v_a"), F.col("_v_b")),
+                                        F.col("_nm_a") * F.col("_nm_b")), 6)
                     .alias("cosine_sim"))
            .filter(F.col("cosine_sim") >= threshold)
            .distinct()

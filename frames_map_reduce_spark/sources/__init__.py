@@ -205,13 +205,14 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
     spark.catalog.refreshTable(table)
 
 
-def append_bucketed(df: DataFrame, table: str) -> None:
-    """Append ``df`` to a table :func:`write_bucketed` wrote, under the
-    bucket spec the catalog recorded for it — the one append path of
-    every persisted index, so an extend can never write under a bucket
-    count or columns other than the build's.  Appends keep the stamp."""
-    n_buckets, bucket_cols, _ = table_spec(df.sparkSession, table)
-    _save_bucketed(df, table, bucket_cols, n_buckets, "append")
+def append_bucketed(df: DataFrame, table: str, spec: TableSpec) -> None:
+    """Append ``df`` to a table :func:`write_bucketed` wrote, under
+    ``spec`` — the :class:`TableSpec` the extend's :func:`require_spec`
+    read from the catalog, so the append itself reads nothing.  The one
+    append path of every persisted index: an extend can never write
+    under a bucket count or columns other than the build's.  Appends
+    keep the stamp."""
+    _save_bucketed(df, table, spec.bucket_cols, spec.n_buckets, "append")
 
 
 def index_spec(family: str, **values) -> dict[str, str]:
@@ -222,16 +223,18 @@ def index_spec(family: str, **values) -> dict[str, str]:
 
 
 def require_spec(spark: SparkSession, table: str,
-                 spec: Mapping[str, str]) -> None:
+                 spec: Mapping[str, str]) -> TableSpec:
     """Refuse to extend or probe ``table`` under a spec other than the
     one its build stamped: an index read or grown under another spec
     (n-gram size, signature seed, filter geometry, centroids …) answers
-    silently wrong.  One catalog read, no Spark job.  A table that
-    records none of ``spec``'s keys was written outside a build and has
-    nothing to check against."""
-    stamp = table_spec(spark, table).stamp
+    silently wrong.  One catalog read, no Spark job; returns the
+    :class:`TableSpec` it read, which an extend hands to
+    :func:`append_bucketed`.  A table that records none of ``spec``'s
+    keys was written outside a build and has nothing to check against."""
+    read = table_spec(spark, table)
+    stamp = read.stamp
     if not any(k in stamp for k in spec):
-        return
+        return read
     if any(stamp.get(k) != v for k, v in spec.items()):
         def show(values: Mapping[str, str]) -> str:
             return ", ".join(f"{k.rsplit('.', 1)[1]}={values.get(k)}"
@@ -240,6 +243,7 @@ def require_spec(spark: SparkSession, table: str,
             f"`{table}` was built with {show(stamp)} — got {show(spec)}; "
             "the build's spec (filter geometry, signature seed, n-gram "
             "size, centroids …) is part of the index: rebuild to change it")
+    return read
 
 
 def table_num_buckets(spark: SparkSession, table: str) -> int:

@@ -178,7 +178,7 @@ def stream_near_dup(stream: DataFrame, static_corpus: DataFrame,
     from pyspark import StorageLevel
 
     from frames_map_reduce_spark.operators.dedup import (
-        _minhash_banded, _shingle_sig_frame, jaccard)
+        _minhash_banded, _prune_buckets, _shingle_sig_frame, jaccard)
 
     require_columns(stream, [text_col, id_col])
     sid = f"{id_col}"
@@ -186,11 +186,9 @@ def stream_near_dup(stream: DataFrame, static_corpus: DataFrame,
                                     shingle_k, num_perm, seed) \
         .withColumnRenamed(id_col, "ref_id") \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    banded_ref = _minhash_banded(static_sig, "ref_id", num_perm, bands)
-    sizes = banded_ref.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
-    banded_ref = banded_ref.join(F.broadcast(ok), "_bucket") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    banded_ref = _prune_buckets(
+        _minhash_banded(static_sig, "ref_id", num_perm, bands), max_bucket,
+        keep_singletons=True).persist(StorageLevel.MEMORY_AND_DISK)
     ref_shingles = static_sig.select("ref_id",
                                      F.col("_sh64").alias("_sh64_ref"))
 
@@ -199,13 +197,8 @@ def stream_near_dup(stream: DataFrame, static_corpus: DataFrame,
     # band via pure projection, carrying the shingle set along — joining
     # the banded frame back to stream_sig would be a stream-STREAM
     # self-join (stateful); this stays a stateless narrow pipeline
-    rpb = num_perm // bands
-    band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_band")
-    stream_banded = stream_sig.select(sid, "_sh64", "_sig", band_idx).select(
-        sid, "_sh64",
-        F.xxhash64(F.col("_band"),
-                   F.slice(F.col("_sig"), F.col("_band") * rpb + 1, rpb))
-         .alias("_bucket"))
+    stream_banded = _minhash_banded(stream_sig, sid, num_perm, bands,
+                                    carry=("_sh64",))
     cand = stream_banded.join(banded_ref, "_bucket") \
                         .select(sid, "ref_id", "_sh64")
     verified = (cand.join(ref_shingles, "ref_id")
@@ -235,6 +228,7 @@ def stream_embedding_near_dup(stream: DataFrame, static_corpus: DataFrame,
     from pyspark import StorageLevel
 
     from frames_map_reduce_spark.functions.vectors import dot, norm
+    from frames_map_reduce_spark.operators.dedup import _prune_buckets
     from frames_map_reduce_spark.operators.similarity import srp_bucketed
 
     require_columns(stream, [vec_col, id_col])
@@ -244,12 +238,10 @@ def stream_embedding_near_dup(stream: DataFrame, static_corpus: DataFrame,
     ref = srp_bucketed(static_corpus, vec_col, dim, n_planes, seed).select(
         "_bucket", F.col(id_col).alias("ref_id"),
         F.col(vec_col).cast("array<double>").alias("_vref"))
-    sizes = ref.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    ok = sizes.filter(F.col("_n") <= max_bucket).select("_bucket")
     # the ref-side norm is hoisted INTO the persisted frame: computed
     # once per corpus vector total, not once per matching probe (same
     # floats as norm-inside-cosine — see similarity.semantic_dedup)
-    ref = (ref.join(F.broadcast(ok), "_bucket")
+    ref = (_prune_buckets(ref, max_bucket, keep_singletons=True)
               .withColumn("_nref", norm(F.col("_vref")))
               .persist(StorageLevel.MEMORY_AND_DISK))
 

@@ -348,6 +348,52 @@ def test_mismatched_spec_is_refused_before_any_job(spark, embeddings,
         _drop_index(spark, table)
 
 
+# family -> (tables an extend appends to, extend at the build's spec A)
+_SAME_SPEC_EXTENDS = {
+    "bloom": (("_words",), lambda d, v, t, _: BL.extend_bloom_index(
+        d, t, "text", m_bits=1 << 12, k=3)),
+    "minhash": (("_buckets", "_shingles"),
+                lambda d, v, t, _: DD.extend_minhash_index(
+                    d, t, "text", "doc_id", seed=42)),
+    "contamination": (("_grams",),
+                      lambda d, v, t, _: RET.extend_contamination_index(
+                          d, t, "text", n=3)),
+    "media": (("_bands",), lambda d, v, t, _: MM.extend_media_contamination_index(
+        d, t, "doc_id", "payload", fake=True)),
+    "ivf": (("",), lambda d, v, t, cents: SIM.extend_ivf_index(v, t, cents)),
+    "ivf_pq": (("",), lambda d, v, t, spec: QZ.extend_ivf_pq_index(
+        v, t, spec[0], spec[1])),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_SAME_SPEC_EXTENDS))
+def test_extend_reads_each_table_spec_once(spark, embeddings, monkeypatch,
+                                           family):
+    """An extend reads the catalog once per table it appends to: the
+    spec check's read is the one the append writes under."""
+    import frames_map_reduce_spark.sources as SRC
+
+    suffixes, extend = _SAME_SPEC_EXTENDS[family]
+    build = _SPEC_CASES[family][2]
+    table = f"spec_reads_{family}_t"
+    docs, vecs = _spec_docs(spark), _spec_vectors(embeddings)
+    reads = []
+    real = SRC.table_spec
+
+    def counted(spark_, name):
+        reads.append(name)
+        return real(spark_, name)
+
+    try:
+        built = build(docs, vecs, table)
+        monkeypatch.setattr(SRC, "table_spec", counted)
+        extend(docs, vecs, table, built)
+        assert sorted(reads) == sorted(f"{table}{s}" for s in suffixes)
+    finally:
+        monkeypatch.undo()
+        _drop_index(spark, table)
+
+
 def test_stamp_survives_compact_and_rebuild(spark):
     """Compaction and the MinHash cap rebuild carry the build's stamp
     over; a Bloom re-size stamps its new geometry."""

@@ -156,6 +156,49 @@ def test_minhash_bucket_cap(spark):
     assert pairs.count() == 0
 
 
+def _cap_pairs(spark, pairer, n, cap):
+    """(id_a, id_b) pairs of ``n`` identical members under ``max_bucket
+    = cap``: every band bucket holds exactly the ``n`` members."""
+    from frames_map_reduce_spark.operators import multimodal as MM
+    from frames_map_reduce_spark.operators import similarity as SIM
+
+    ids = range(n)
+    if pairer == "simhash":
+        df = spark.createDataFrame([(i, BASE) for i in ids],
+                                   "doc_id long, text string")
+        out = DD.simhash_near_dup_pairs(df, "text", "doc_id",
+                                        max_bucket=cap)
+    elif pairer == "ahash":
+        sigs = spark.createDataFrame([(i, [5, 6, 7, 8]) for i in ids],
+                                     "doc_id long, bands array<bigint>")
+        out = MM.ahash_near_dup_pairs(sigs, max_bucket=cap)
+    elif pairer == "video":
+        sigs = spark.createDataFrame(
+            [(i, 0, [5, 6, 7, 8]) for i in ids],
+            "doc_id long, frame_idx int, bands array<bigint>")
+        out = MM.video_near_dup_pairs_from_sigs(sigs, min_match_frames=1,
+                                                max_bucket=cap)
+    else:
+        df = spark.createDataFrame([(i, [1.0, 2.0, 3.0]) for i in ids],
+                                   "vec_id long, embedding array<double>")
+        out = SIM.embedding_near_dup_pairs(df, max_bucket=cap)
+    return sorted((r["id_a"], r["id_b"]) for r in out.collect())
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+@pytest.mark.parametrize("pairer", ["simhash", "ahash", "video",
+                                    "embedding"])
+def test_banded_pairing_cap_boundary(spark, pairer, extra):
+    """The shared band cap is inclusive: a bucket of exactly
+    ``max_bucket`` members yields every pair, one more member drops the
+    bucket whole."""
+    cap = 3
+    n = cap + extra
+    want = [] if extra else [(a, b) for a in range(n)
+                             for b in range(a + 1, n)]
+    assert _cap_pairs(spark, pairer, n, cap) == want
+
+
 def test_fixture_parity_preconditions(documents):
     """dedup_minhash oracle parity is DATA-dependent: the driver query
     verifies at threshold 0.6 but 16x8 banding only guarantees recall for
